@@ -7,7 +7,7 @@ a JSON manifest that emulates snapshot ids/commits:
 
     <root>/<table>/data/snap=<snapshot_id>/part-*.parquet
     <root>/<table>/manifest.json   {"snapshots": [{"id", "run_id",
-                                     "rows", "committed"}...]}
+                                     "committed"[, "summary"]}...]}
 
 Readers see only COMMITTED snapshots (the manifest is written last,
 atomically via rename) — the same reader-isolation property an Iceberg
@@ -77,6 +77,31 @@ class ParquetCatalog:
         with open(p) as f:
             return json.load(f)
 
+    def _write_manifest(self, table: str, manifest: dict) -> None:
+        """The atomic commit: write beside, then rename over."""
+        tmp = self._manifest_path(table) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=1)
+        os.replace(tmp, self._manifest_path(table))
+
+    def _write_snapshot(self, table: str, df: DataFrame,
+                        partition_by: list[str] | None,
+                        sort_by: list[str] | None,
+                        sort_partitions: int | None) -> tuple[str, str]:
+        """Write ``df`` into a new, not yet committed snapshot directory;
+        returns (snapshot id, directory).  The id's leading ``s`` keeps
+        it non-numeric: as a ``snap=<id>`` value a bare hex id such as
+        ``123456789012`` or ``1234e5678901`` is typed by Spark's
+        partition inference as a long or a huge-exponent decimal (the
+        latter spins a read for minutes).  Older ids read as they are."""
+        snap_id = "s" + uuid.uuid4().hex[:11]
+        data_dir = os.path.join(self._tdir(table), "data", f"snap={snap_id}")
+        writer = _cluster(df, sort_by, sort_partitions).write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(data_dir)
+        return snap_id, data_dir
+
     def snapshots(self, table: str) -> list[dict]:
         return self._read_manifest(table)["snapshots"]
 
@@ -114,10 +139,7 @@ class ParquetCatalog:
                 manifest["expired"] = keep
             else:
                 manifest.pop("expired", None)
-            tmp = self._manifest_path(table) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1)
-            os.replace(tmp, self._manifest_path(table))
+            self._write_manifest(table, manifest)
         return removed
 
     def _commit_lock(self, table: str):
@@ -152,8 +174,13 @@ class ParquetCatalog:
     def append(self, table: str, df: DataFrame, run_id: str,
                partition_by: list[str] | None = None,
                sort_by: list[str] | None = None,
-               sort_partitions: int | None = None) -> str:
+               sort_partitions: int | None = None,
+               summary: dict | None = None) -> str:
         """One atomic append commit; returns the new snapshot id.
+
+        ``summary`` is extra snapshot metadata (e.g. a run's wall time)
+        stored in the same manifest entry as ``run_id``, so it commits
+        atomically with the data (Iceberg's snapshot summary).
 
         ``sort_by`` clusters the commit on those columns —
         repartitionByRange + sortWithinPartitions (one range exchange,
@@ -164,26 +191,17 @@ class ParquetCatalog:
         triple table queried by subject.  ``sort_partitions`` pins the
         range-partition count (AQE otherwise sizes it by data volume —
         right at scale, but a small commit coalesces to one file)."""
-        snap_id = uuid.uuid4().hex[:12]
-        data_dir = os.path.join(self._tdir(table), "data", f"snap={snap_id}")
-        df = _cluster(df, sort_by, sort_partitions)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        snap_id, _ = self._write_snapshot(
+            table, df, partition_by, sort_by, sort_partitions
+        )
         with self._commit_lock(table):
-            snaps = self.snapshots(table)
-            snaps.append(
-                {
-                    "id": snap_id,
-                    "run_id": run_id,
-                    "committed": time.time(),
-                }
-            )
-            tmp = self._manifest_path(table) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"snapshots": snaps}, f, indent=1)
-            os.replace(tmp, self._manifest_path(table))  # atomic commit
+            manifest = self._read_manifest(table)
+            entry = {"id": snap_id, "run_id": run_id,
+                     "committed": time.time()}
+            if summary:
+                entry["summary"] = summary
+            manifest["snapshots"].append(entry)
+            self._write_manifest(table, manifest)
         return snap_id
 
     def overwrite(self, table: str, df: DataFrame, run_id: str,
@@ -213,13 +231,9 @@ class ParquetCatalog:
             partition_by = self._detect_partitioning(
                 table, snaps[-1]["id"]
             )
-        snap_id = uuid.uuid4().hex[:12]
-        data_dir = os.path.join(self._tdir(table), "data", f"snap={snap_id}")
-        df = _cluster(df, sort_by, sort_partitions)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        snap_id, data_dir = self._write_snapshot(
+            table, df, partition_by, sort_by, sort_partitions
+        )
         wrote_empty = not any(
             f.endswith(".parquet")
             for _, _, fs in os.walk(data_dir) for f in fs
@@ -257,10 +271,7 @@ class ParquetCatalog:
             pending += [{"id": s["id"], "expired_at": ts} for s in snaps]
             if pending:
                 manifest["expired"] = pending
-            tmp = self._manifest_path(table) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1)
-            os.replace(tmp, self._manifest_path(table))  # atomic flip
+            self._write_manifest(table, manifest)  # atomic flip
         # replaced dirs are deleted only past the grace window (see
         # __init__ / expire_snapshots) — a reader that resolved paths
         # from the pre-flip manifest keeps its files while it scans
@@ -413,15 +424,10 @@ class ParquetCatalog:
             partition_by = self._detect_partitioning(
                 table, snaps[-1]["id"]
             )
-        snap_id = uuid.uuid4().hex[:12]
-        data_dir = os.path.join(self._tdir(table), "data", f"snap={snap_id}")
-        df = _cluster(
-            self.read(spark, table).drop("snap"), sort_by, sort_partitions
+        snap_id, data_dir = self._write_snapshot(
+            table, self.read(spark, table).drop("snap"), partition_by,
+            sort_by, sort_partitions,
         )
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
         # optimistic concurrency: abort loudly if anything committed
         # while the rewrite ran.  The commit lock makes the check
         # airtight — append holds the same flock for its manifest
@@ -451,10 +457,7 @@ class ParquetCatalog:
             pending += [{"id": s["id"], "expired_at": ts} for s in snaps]
             if pending:
                 manifest["expired"] = pending
-            tmp = self._manifest_path(table) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1)
-            os.replace(tmp, self._manifest_path(table))  # atomic flip
+            self._write_manifest(table, manifest)  # atomic flip
         # grace-period deferred deletion — see overwrite/expire_snapshots
         self.expire_snapshots(table)
         return snap_id
@@ -473,7 +476,9 @@ class IcebergCatalog:
     * ``append``  -> ``df.writeTo(cat.ns.table).append()`` (creates on
       first write, with the requested partition layout); ``run_id``
       rides in the snapshot summary via ``snapshot-property.run_id`` —
-      the lineage join key, same as the parquet manifest's field.
+      the lineage join key, same as the parquet manifest's field — and
+      each ``summary`` key as one more ``snapshot-property.*`` (values
+      read back as strings, in ``snapshots()[i]["summary"]``).
     * ``read``    -> ``spark.table(...)`` (snapshot isolation is
       Iceberg's own committed-manifest semantics; time travel via
       ``VERSION AS OF`` stays available to callers).
@@ -514,6 +519,7 @@ class IcebergCatalog:
                 "id": str(r.snapshot_id),
                 "run_id": (r.summary or {}).get("run_id"),
                 "committed": r.committed_at.timestamp(),
+                "summary": dict(r.summary or {}),
             }
             for r in rows
         ]
@@ -521,11 +527,14 @@ class IcebergCatalog:
     def append(self, table: str, df: DataFrame, run_id: str,
                partition_by: list[str] | None = None,
                sort_by: list[str] | None = None,
-               sort_partitions: int | None = None) -> str:
+               sort_partitions: int | None = None,
+               summary: dict | None = None) -> str:
         df = _cluster(df, sort_by, sort_partitions)
         writer = df.writeTo(self._fqn(table)).option(
             "snapshot-property.run_id", run_id
         )
+        for k, v in (summary or {}).items():
+            writer = writer.option(f"snapshot-property.{k}", str(v))
         if self.exists(table):
             writer.append()
         else:

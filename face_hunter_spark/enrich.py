@@ -34,6 +34,7 @@ reference simply re-runs linking after enrichment.
 
 from __future__ import annotations
 
+import time
 import uuid
 from typing import Iterator
 
@@ -48,7 +49,7 @@ from pyspark.sql.types import (
 from . import fakevision as fv
 from .catalog import ParquetCatalog
 from .operators import triples as T
-from .pipeline import canonicalized_triples, link_documents
+from .pipeline import canonicalized_triples, commit_run, link_documents
 
 GALLERY_TABLE = "gallery"
 
@@ -231,9 +232,9 @@ def run_relink_job(
     re-segmented scenes) survive.  Re-running with no gallery change
     appends nothing.  Superseded scene rows from before the enrichment
     stay in the append-only store — the same accumulation the reference
-    exhibits when it re-runs linking over an extended gallery."""
-    import time
-
+    exhibits when it re-runs linking over an extended gallery.  Like
+    the link job, a non-empty relink is ONE commit (pipeline.commit_run);
+    its lineage and metrics are pipeline.run_lineage / run_metrics."""
     t_start = time.monotonic()
     run_id = run_id or uuid.uuid4().hex[:12]
     if kwargs.pop("cache_index", False):
@@ -258,30 +259,4 @@ def run_relink_job(
         full = full.join(
             committed, ["doc_id", "subj", "pred", "obj"], "left_anti"
         )
-    delta = full.persist()
-    try:
-        n_rows = delta.count()
-        if n_rows == 0:
-            return {"run_id": run_id, "n_triples": 0, "n_docs": 0,
-                    "snapshot": None}
-        snap = catalog.append(
-            "triples", delta, run_id, partition_by=["doc_bucket"]
-        )
-        lineage = delta.groupBy("doc_bucket").agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_triples"),
-        ).select(
-            F.lit(run_id).alias("run_id"), "doc_bucket", "n_docs",
-            "n_triples", F.lit("committed").alias("status"),
-        )
-        catalog.append("lineage", lineage, run_id)
-        n_docs = delta.select("doc_id").distinct().count()
-        metrics = spark.createDataFrame(
-            [(run_id, n_docs, n_rows, int((time.monotonic() - t_start) * 1000))],
-            "run_id string, n_docs long, n_triples long, wall_ms long",
-        )
-        catalog.append("metrics_relink", metrics, run_id)
-        return {"run_id": run_id, "n_triples": n_rows, "n_docs": n_docs,
-                "snapshot": snap}
-    finally:
-        delta.unpersist()
+    return commit_run(catalog, full, run_id, t_start)

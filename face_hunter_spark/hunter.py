@@ -381,7 +381,9 @@ class SparkHunter:
         evaluate against snapshots registered with
         :meth:`register_service_snapshot`; an unregistered endpoint
         raises NotImplementedError (live federation is out of scope —
-        or use :meth:`query` with an attribute dim table)."""
+        or use :meth:`query` with an attribute dim table).
+        ``isNumeric`` is lexical (``"42"``, ``"NaN"`` and
+        ``"Infinity"`` all report true) — see ``operators.sparql.execute``."""
         from .operators.sparql import execute, parse
 
         if not self.catalog.exists("triples"):

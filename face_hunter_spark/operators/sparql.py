@@ -3176,7 +3176,12 @@ def execute(
     never a shuffle of the full table) is unioned with the asserted
     graph before matching.  Persisting workloads should materialize
     the closure ONCE through the catalog instead (quality/validate
-    docs); this flag is the ad-hoc-query form."""
+    docs); this flag is the ad-hoc-query form.
+
+    Deviation: terms are stored lexically (no literal datatypes in the
+    match), so ``isNumeric`` is lexical too — true iff the string casts
+    to a double.  A plain ``"42"``, and ``"NaN"`` / ``"Infinity"``,
+    report true where the spec wants a numeric-datatyped literal."""
     if entailment not in (None, "rdfs"):
         raise ValueError("entailment must be None or 'rdfs'")
     if entailment == "rdfs":

@@ -595,6 +595,12 @@ def _resolve_load_path(u: "ParsedUpdate") -> str | None:
     return iri
 
 
+#: what a failed LOAD raises: an unreadable source (OSError) or a
+#: document the n3 reader rejects (ValueError for a bad statement,
+#: KeyError for an undeclared prefixed name) — all swallowed by SILENT
+_LOAD_FAILURES = (OSError, ValueError, KeyError)
+
+
 def _load_spo(spark: SparkSession, u: "ParsedUpdate"):
     """LOAD's source as a (subj, pred, obj) DataFrame, or None when
     SILENT swallows a failure.  Scale note: the file parses on the
@@ -608,12 +614,11 @@ def _load_spo(spark: SparkSession, u: "ParsedUpdate"):
 
     try:
         with open(path) as f:
-            text = f.read()
-    except OSError:
+            rows = sorted(parse_n3(f.read()))
+    except _LOAD_FAILURES:
         if u.silent:
             return None
         raise
-    rows = sorted(parse_n3(text))
     return spark.createDataFrame(
         rows, "subj string, pred string, obj string"
     )
@@ -823,28 +828,25 @@ def _execute_one(
 
     if u.form == "load":
         # resolve/validate the IRI (raises or silently no-ops on a
-        # bad scheme / missing file — no full parse probe), then
-        # commit through sources.import_n3 — the catalog-native n3
-        # import: full pipeline schema recovery (literal shapes,
-        # doc_id co-location), idempotent anti-join append, one
-        # snapshot; the document parses exactly once
+        # bad scheme), then commit through sources.import_n3 — the
+        # catalog-native n3 import: full pipeline schema recovery
+        # (literal shapes, doc_id co-location), idempotent anti-join
+        # append, one snapshot; the document parses exactly once
         path = _resolve_load_path(u)
         if path is None:
             return report
+        from ..sources import import_n3
+
         try:
-            # cheap readability probe (no parse) — ANY OSError
-            # (missing, unreadable, is-a-directory) is an operation
-            # failure SILENT must swallow, matching _apply_op's
-            # _load_spo behavior
-            with open(path):
-                pass
-        except OSError:
+            # import_n3 reads and parses before it commits, so ANY
+            # read or parse failure (missing, unreadable or directory
+            # path; malformed document) commits nothing and SILENT
+            # swallows it, matching _apply_op's _load_spo behavior
+            r = import_n3(spark, catalog, path, table=table, run_id=run_id)
+        except _LOAD_FAILURES:
             if u.silent:
                 return report
             raise
-        from ..sources import import_n3
-
-        r = import_n3(spark, catalog, path, table=table, run_id=run_id)
         report["inserted"] = r["inserted"]
         report["snapshot"] = r["snapshot"]
         return report

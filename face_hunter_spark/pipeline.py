@@ -1,5 +1,5 @@
 """The end-to-end link job (the reference's ``cli.py link`` write path,
-hunter.py:91-151) as one declarative Spark plan + a committed append.
+hunter.py:91-151) as one declarative Spark plan + one committed append.
 
     documents ──explode/sample──► media frames
         │                             │ mapInPandas (decode+detect+embed)
@@ -14,16 +14,21 @@ hunter.py:91-151) as one declarative Spark plan + a committed append.
         ▼                                                        │
     anti-join vs existing triples (idempotent re-link) ──────────┤
                                                                  ▼
-                             bucketed append + per-partition lineage rows
+                 ONE bucketed snapshot append (wall_ms in its summary)
 
-Checkpoint/resume: every append also writes one lineage row per
-doc_bucket.  A rerun anti-joins incoming doc_ids against the committed
-triples table (the reference's ``video_exists`` guard, hunter.py:141,
-turned into a set-at-a-time operator) and processes only new docs.
+Checkpoint/resume: a run is one catalog commit.  A rerun anti-joins
+incoming doc_ids against the committed triples table (the reference's
+``video_exists`` guard, hunter.py:141, turned into a set-at-a-time
+operator) and processes only new docs.  Lineage, run metrics and
+entity counts are derived reads over the committed rows —
+:func:`run_lineage`, :func:`run_metrics` and
+``operators.skew.entity_mention_counts`` — not tables of their own, so
+they cannot fall out of step with the triples.
 """
 
 from __future__ import annotations
 
+import time
 import uuid
 
 import pyspark.sql.functions as F
@@ -301,11 +306,9 @@ def run_link_job(
     canon: DataFrame | None = None,
     **kwargs,
 ) -> dict:
-    """Idempotent link job: skips docs already in the triple table,
-    appends one committed snapshot + per-bucket lineage rows + one
-    run-level metrics row.  Returns stats."""
-    import time
-
+    """Idempotent link job: skips docs already in the triple table and
+    commits the rest as ONE snapshot (see :func:`commit_run`).
+    Returns stats."""
     t_start = time.monotonic()
     run_id = run_id or uuid.uuid4().hex[:12]
 
@@ -337,68 +340,72 @@ def run_link_job(
         entity_catalog,
         canon,
     )
+    return commit_run(catalog, new_triples, run_id, t_start)
 
-    # One pass: cache the job's output so triples + lineage + metrics
-    # come from the same computation (per-partition lineage is derived
-    # by aggregation, not a second pipeline run).
-    new_triples = new_triples.persist()
-    n_rows = new_triples.count()
-    if n_rows == 0:
-        new_triples.unpersist()
-        return {"run_id": run_id, "n_triples": 0, "n_docs": 0, "snapshot": None}
 
-    snap = catalog.append(
-        "triples", new_triples, run_id, partition_by=["doc_bucket"]
-    )
-    lineage = new_triples.groupBy("doc_bucket").agg(
+def commit_run(
+    catalog: ParquetCatalog, triples: DataFrame, run_id: str, t_start: float
+) -> dict:
+    """A link or relink run's ONE catalog commit: ``triples`` is
+    persisted, counted once and appended as a doc_bucket-partitioned
+    snapshot.  ``wall_ms`` (time since ``t_start`` up to the commit) is
+    the one run metric the rows cannot carry, so it rides in that
+    snapshot's summary; lineage and the other metrics are read back
+    from the rows (:func:`run_lineage`, :func:`run_metrics`).  There is
+    no second commit to lose, so a crash leaves either the whole run or
+    none of it.  An empty run commits nothing."""
+    triples = triples.persist()
+    try:
+        n_rows, n_docs = triples.agg(
+            F.count(F.lit(1)), F.countDistinct("doc_id")
+        ).first()
+        snap = None
+        if n_rows:
+            snap = catalog.append(
+                "triples", triples, run_id, partition_by=["doc_bucket"],
+                summary={"wall_ms": int((time.monotonic() - t_start) * 1000)},
+            )
+        return {"run_id": run_id, "n_triples": n_rows, "n_docs": n_docs,
+                "snapshot": snap}
+    finally:
+        triples.unpersist()
+
+
+def run_lineage(triples: DataFrame) -> DataFrame:
+    """Per-run, per-bucket lineage of a triples table: (run_id,
+    doc_bucket, n_docs, n_triples).  Every committed row carries its
+    run_id and doc_bucket, so this is an aggregate, not a second table
+    that could drift from the triples."""
+    return triples.groupBy("run_id", "doc_bucket").agg(
         F.countDistinct("doc_id").alias("n_docs"),
         F.count(F.lit(1)).alias("n_triples"),
-    ).select(
-        F.lit(run_id).alias("run_id"),
-        "doc_bucket",
-        "n_docs",
-        "n_triples",
-        F.lit("committed").alias("status"),
     )
-    catalog.append("lineage", lineage, run_id)
 
-    n_docs = new_triples.select("doc_id").distinct().count()
-    # run-level metrics (north_rule: lineage + metrics per append):
-    # scene/link volume and wall time, queryable next to the triples
-    counts = new_triples.agg(
+
+def run_metrics(spark: SparkSession, catalog: ParquetCatalog) -> DataFrame:
+    """One row per committed run: (run_id, n_docs, n_triples, n_scenes,
+    n_entities_linked, wall_ms).  The counts aggregate the committed
+    triples; ``wall_ms`` comes from the run's snapshot summary.  Runs
+    folded by ``compact()`` (or replaced by an ``overwrite``) lose
+    their snapshot entries — Iceberg's expire_snapshots behaviour — so
+    their ``wall_ms`` reads null while their counts survive."""
+    wall: dict[str, int] = {}
+    for s in catalog.snapshots("triples"):
+        ms = s.get("summary", {}).get("wall_ms")
+        if ms is not None:
+            wall[s["run_id"]] = wall.get(s["run_id"], 0) + int(ms)
+    counts = catalog.read(spark, "triples").groupBy("run_id").agg(
+        F.countDistinct("doc_id").alias("n_docs"),
+        F.count(F.lit(1)).alias("n_triples"),
         F.countDistinct(
             F.when(F.col("pred") == NS["video_scene_from"], F.col("subj"))
         ).alias("n_scenes"),
         F.countDistinct(
             F.when(F.col("pred") == NS["foaf_depicts"], F.col("obj"))
         ).alias("n_entities_linked"),
-    ).collect()[0]
-    metrics = spark.createDataFrame(
-        [(
-            run_id, n_docs, n_rows, int(counts["n_scenes"] or 0),
-            int(counts["n_entities_linked"] or 0),
-            int((time.monotonic() - t_start) * 1000),
-        )],
-        "run_id string, n_docs long, n_triples long, n_scenes long, "
-        "n_entities_linked long, wall_ms long",
     )
-    catalog.append("metrics", metrics, run_id)
-    # hot-key rollup (north_rule: skewed celebrity entities): per-run
-    # depicted-entity counts via salted two-stage aggregation, so one
-    # Zipf-hot celebrity never funnels into a single reducer
-    from .operators.skew import entity_mention_counts
-
-    catalog.append(
-        "entity_counts",
-        entity_mention_counts(new_triples).withColumn(
-            "run_id", F.lit(run_id)
-        ),
-        run_id,
+    return counts.join(
+        spark.createDataFrame(list(wall.items()),
+                              "run_id string, wall_ms long"),
+        "run_id", "left",
     )
-    new_triples.unpersist()
-    return {
-        "run_id": run_id,
-        "n_triples": n_rows,
-        "n_docs": n_docs,
-        "snapshot": snap,
-    }

@@ -5,7 +5,7 @@ The reference accepts any tuple into its store unchecked
 (memory_store.py:48-54); a production KG pipeline needs the opposite:
 every commit auditable against the intended vocabulary, with the
 violation report and dataset statistics persisted NEXT TO the triples
-(same lineage convention as the link job's metrics rows).  A
+(keyed by run_id, like the link job's snapshots).  A
 conformant run appends an EMPTY report snapshot — the audit trail
 records that the gate ran, not only that it failed.
 

@@ -8,7 +8,7 @@ KG-construction deployment needs:
 1. ``stream_link_documents`` — incremental ingestion: a file stream of
    ``documents``-shaped parquet, processed with foreachBatch, where
    each micro-batch runs the SAME idempotent link job (anti-join vs
-   committed triples + snapshot append + lineage).  Exactly-once at
+   committed triples + one snapshot append).  Exactly-once at
    the doc level comes from the anti-join, not from sink-side state,
    so replays/restarts are safe by construction — the streaming analog
    of the reference's skip guard.  Every stage of link_documents is a

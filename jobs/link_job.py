@@ -15,8 +15,11 @@ Usage (local example; on a cluster swap --master and executor confs):
 
 Reads a documents table (either already in the interleaved
 (doc_id, spans) shape, or the driver corpus shape which is wrapped
-into spans), runs the idempotent link pipeline, appends a committed
-snapshot + lineage, and prints one JSON stats line.
+into spans), runs the idempotent link pipeline, appends ONE committed
+snapshot, and prints one JSON stats line.  Lineage and run metrics are
+derived reads over the committed triples (``pipeline.run_lineage`` /
+``pipeline.run_metrics``; ``wall_ms`` of runs folded by ``compact()``
+reads null).
 """
 
 from __future__ import annotations

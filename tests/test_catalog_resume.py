@@ -10,10 +10,11 @@ never-crashed run's."""
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from face_hunter_spark import synth
 from face_hunter_spark.catalog import ParquetCatalog
-from face_hunter_spark.pipeline import run_link_job
+from face_hunter_spark.pipeline import run_lineage, run_link_job, run_metrics
 
 N_ENT = 10
 
@@ -89,18 +90,18 @@ def test_resume_after_committed_prefix(spark, tmp_path):
     assert s2["n_docs"] == 12  # only the remaining half
     assert _triple_set(spark, cat) == expected
     # lineage has rows from both runs (per-partition audit trail)
-    lin = cat.read(spark, "lineage")
+    lin = run_lineage(cat.read(spark, "triples"))
     assert lin.select("run_id").distinct().count() == 2
     assert lin.agg(F.sum("n_docs")).collect()[0][0] == 24
 
 
 def test_metrics_row_per_run(spark, tmp_path):
-    """Each committed run appends one metrics row whose counts agree
+    """Each committed run reads back one metrics row whose counts agree
     with the triples it wrote."""
     docs, gal, ecat = _inputs(spark, n_docs=10)
     cat = ParquetCatalog(str(tmp_path / "kg"))
     stats = run_link_job(spark, cat, docs, gal, ecat, n_entities=N_ENT)
-    m = cat.read(spark, "metrics").collect()
+    m = run_metrics(spark, cat).collect()
     assert len(m) == 1
     row = m[0]
     assert row.run_id == stats["run_id"]
@@ -116,7 +117,95 @@ def test_metrics_row_per_run(spark, tmp_path):
     assert row.wall_ms > 0
     # an all-duplicate rerun commits nothing, including metrics
     run_link_job(spark, cat, docs, gal, ecat, n_entities=N_ENT)
-    assert cat.read(spark, "metrics").count() == 1
+    assert run_metrics(spark, cat).count() == 1
+
+
+def test_link_run_is_one_commit(spark, tmp_path):
+    """A non-empty link run is ONE catalog commit: a fresh catalog's
+    root holds only the triples table, whose snapshot summary carries
+    the run's wall time.  Lineage and metrics are derived from the
+    rows, so compaction keeps every count and only wall_ms (a property
+    of the expired snapshot) reads null."""
+    docs, gal, ecat = _inputs(spark, n_docs=8)
+    root = str(tmp_path / "kg")
+    cat = ParquetCatalog(root)
+    s1 = run_link_job(spark, cat, docs.where(F.col("doc_id") < "vid_00004"),
+                      gal, ecat, n_entities=N_ENT)
+    assert os.listdir(root) == ["triples"]
+    [snap] = cat.snapshots("triples")
+    assert (snap["id"], snap["run_id"]) == (s1["snapshot"], s1["run_id"])
+    assert snap["summary"]["wall_ms"] > 0
+
+    s2 = run_link_job(spark, cat, docs, gal, ecat, n_entities=N_ENT)
+    assert s2["n_docs"] == 4
+    assert os.listdir(root) == ["triples"]
+    assert len(cat.snapshots("triples")) == 2
+    before = {r.run_id: r for r in run_metrics(spark, cat).collect()}
+    assert set(before) == {s1["run_id"], s2["run_id"]}
+    assert all(r.wall_ms > 0 for r in before.values())
+
+    cat.compact(spark, "triples")
+    after = {r.run_id: r for r in run_metrics(spark, cat).collect()}
+    assert set(after) == set(before)
+    for run_id, row in after.items():
+        assert row.asDict() == {**before[run_id].asDict(), "wall_ms": None}
+
+
+def test_snapshot_ids_read_as_strings(spark, tmp_path, monkeypatch):
+    """A snapshot id drawn from a small-exponent hex string
+    (``0000000e0001``) must not be typed as a number by Spark's
+    partition inference (default settings): ``snap`` reads as a
+    string.  A numeric-looking id can also spin the read for minutes
+    when the exponent is large."""
+    import types
+
+    from face_hunter_spark import catalog as catmod
+
+    monkeypatch.setattr(
+        catmod.uuid, "uuid4",
+        lambda: types.SimpleNamespace(hex="0000000e0001" * 3),
+    )
+    cat = ParquetCatalog(str(tmp_path / "kg"))
+    cat.append("t", spark.createDataFrame([(1,)], "x long"), "r1")
+    assert dict(cat.read(spark, "t").dtypes)["snap"] == "string"
+    assert [r.snap for r in cat.read(spark, "t").collect()] == [
+        cat.snapshots("t")[0]["id"]
+    ]
+
+
+@pytest.mark.slow
+def test_streaming_batch_replay_is_idempotent(spark, tmp_path):
+    """A foreachBatch replay re-runs a committed micro-batch through
+    run_link_job with the same ``stream-<batch>`` run id.  Every doc
+    anti-joins away: no duplicate triples, still one snapshot for the
+    run, and its derived lineage unchanged."""
+    from face_hunter_spark import streaming
+
+    docs, gal, ecat = _inputs(spark, n_docs=12)
+    in_dir = str(tmp_path / "incoming")
+    docs.write.parquet(in_dir)
+    cat = ParquetCatalog(str(tmp_path / "kg"))
+    streaming.stream_link_documents(
+        spark, in_dir, cat, gal, ecat, str(tmp_path / "ckpt"),
+        n_entities=N_ENT,
+    )
+
+    def lineage():
+        return sorted(
+            tuple(r) for r in run_lineage(cat.read(spark, "triples"))
+            .where(F.col("run_id") == "stream-000000").collect()
+        )
+
+    before = lineage()
+    assert sum(r[2] for r in before) == 12
+
+    stats = run_link_job(spark, cat, spark.read.parquet(in_dir), gal, ecat,
+                         run_id="stream-000000", n_entities=N_ENT)
+    assert stats["n_triples"] == 0 and stats["snapshot"] is None
+    tri = cat.read(spark, "triples").select("subj", "pred", "obj")
+    assert tri.count() == tri.distinct().count()
+    assert [s["run_id"] for s in cat.snapshots("triples")] == ["stream-000000"]
+    assert lineage() == before
 
 
 def test_materialized_triples_are_canonicalized(spark, tmp_path):
@@ -147,15 +236,16 @@ def test_materialized_triples_are_canonicalized(spark, tmp_path):
 
 
 def test_entity_counts_salted_rollup(spark, tmp_path):
-    """Each run appends a salted hot-key rollup of depicted entities;
-    counts agree with a plain groupBy over the committed triples."""
+    """The salted hot-key rollup of depicted entities, read over the
+    committed triples, agrees with a plain groupBy."""
     docs, gal, ecat = _inputs(spark, n_docs=10)
     cat = ParquetCatalog(str(tmp_path / "kg"))
     run_link_job(spark, cat, docs, gal, ecat, n_entities=N_ENT)
+    from face_hunter_spark.operators.skew import entity_mention_counts
     from face_hunter_spark.schemas import NS
     got = {
         (r.entity_uri, r.n_scenes)
-        for r in cat.read(spark, "entity_counts").collect()
+        for r in entity_mention_counts(cat.read(spark, "triples")).collect()
     }
     plain = {
         (r.obj, r.n)
@@ -341,6 +431,18 @@ def test_overwrite_grace_period_defers_old_dir_deletion(spark, tmp_path):
     assert not os.path.exists(
         os.path.join(str(tmp_path / "kg0"), "t", "data", f"snap={o2}")
     )
+
+
+def test_append_keeps_expired_ledger(spark, tmp_path):
+    """An append after an overwrite keeps the manifest's ledger of
+    replaced snapshots, so a later expire_snapshots still removes their
+    directories instead of leaking them."""
+    cat = ParquetCatalog(str(tmp_path / "kg"), expire_grace_seconds=3600)
+    old = cat.append("t", spark.createDataFrame([(1,)], "x long"), "r1")
+    cat.overwrite("t", spark.createDataFrame([(2,)], "x long"), "r2")
+    cat.append("t", spark.createDataFrame([(3,)], "x long"), "r3")
+    assert cat.expire_snapshots("t", grace_seconds=0) == [old]
+    assert sorted(r["x"] for r in cat.read(spark, "t").collect()) == [2, 3]
 
 
 def test_sorted_append_tightens_file_stats(spark, tmp_path):

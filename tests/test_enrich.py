@@ -10,7 +10,7 @@ import pytest
 
 from face_hunter_spark import enrich, fakevision as fv, synth
 from face_hunter_spark.catalog import ParquetCatalog
-from face_hunter_spark.pipeline import run_link_job
+from face_hunter_spark.pipeline import run_lineage, run_link_job
 from face_hunter_spark.schemas import DOCUMENTS, ENTITY_CATALOG, NS
 
 N_DOC_ENTITIES = 6   # documents draw faces from entities 0..5
@@ -132,9 +132,34 @@ def test_enrich_flips_unknown_docs_idempotently(spark, setup):
     assert cat.read(spark, "triples").count() == total
 
     # lineage rows recorded for the relink append
-    lin = cat.read(spark, "lineage").where(F.col("run_id") == st1["run_id"])
+    lin = run_lineage(cat.read(spark, "triples")).where(
+        F.col("run_id") == st1["run_id"]
+    )
     assert lin.count() > 0
     assert lin.agg(F.sum("n_triples")).collect()[0][0] == st1["n_triples"]
+
+
+def test_relink_run_is_one_commit(spark, setup):
+    """A non-empty relink run commits ONE triples snapshot (wall_ms in
+    its summary) and touches no other table."""
+    import os
+
+    cat, docs, ecat = setup
+    enrich.run_enrich_job(spark, cat, spark.createDataFrame(
+        synth.make_enrich_candidates_pdf(["Entity 004", "Entity 005"], 10),
+        enrich.CANDIDATES,
+    ))
+
+    def commits():
+        return {t: len(cat.snapshots(t)) for t in os.listdir(cat.root)}
+
+    before = commits()
+    st = enrich.run_relink_job(spark, cat, docs, ecat,
+                               n_entities=N_DOC_ENTITIES)
+    assert st["n_triples"] > 0
+    assert commits() == {**before, "triples": before["triples"] + 1}
+    last = cat.snapshots("triples")[-1]
+    assert last["id"] == st["snapshot"] and last["summary"]["wall_ms"] > 0
 
 
 def test_enriched_gallery_changes_index_key(spark, setup):

@@ -7,7 +7,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from face_hunter_spark import synth
-from face_hunter_spark.pipeline import link_documents, run_link_job
+from face_hunter_spark.pipeline import link_documents, run_lineage, run_link_job
 from face_hunter_spark.reference_oracle import oracle_triples, precision_recall
 from face_hunter_spark.schemas import NS
 
@@ -171,7 +171,7 @@ def test_idempotent_rerun(spark, corpus, tmp_path):
     stored = spark_triple_set(cat.read(spark, "triples"))
     assert stored == fresh
     # lineage recorded per bucket per run
-    lineage = cat.read(spark, "lineage")
+    lineage = run_lineage(cat.read(spark, "triples"))
     assert lineage.where(F.col("run_id") == stats1["run_id"]).count() > 0
     assert lineage.where(F.col("run_id") == stats3["run_id"]).count() > 0
 

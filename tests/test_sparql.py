@@ -2985,6 +2985,23 @@ def test_isnumeric_builtin(spark):
     ]
 
 
+@pytest.mark.parametrize("lexical,expected", [
+    ("42", "true"), ("NaN", "true"), ("Infinity", "true"),
+    ("x42", "false"),
+])
+def test_isnumeric_is_lexical(spark, lexical, expected):
+    """Documented deviation (execute docstring): isNumeric answers on
+    the lexical form, so a plain "42" and the double specials "NaN" /
+    "Infinity" report true."""
+    t = spark.createDataFrame(
+        [("a", "p", lexical)], "subj string, pred string, obj string"
+    )
+    [row] = sparql.execute(
+        t, "SELECT ?f WHERE { ?s <p> ?o BIND(isNumeric(?o) AS ?f) }"
+    ).collect()
+    assert row.f == expected
+
+
 def test_trailing_values_in_subquery(spark):
     """SubSelect ends 'SolutionModifier ValuesClause' like a top-level
     SELECT (§19.8 grammar rule [8]): a subquery's trailing VALUES

@@ -945,3 +945,32 @@ def test_load_silent_swallows_unreadable(spark, tmp_path):
                  "snapshot": None}
     with pytest.raises(OSError):
         execute_update(spark, cat, "triples", f"LOAD <file://{n3}>")
+
+
+def test_load_silent_swallows_parse_failure(spark, tmp_path):
+    """A document the n3 reader rejects is an operation failure too:
+    LOAD SILENT is a no-op that commits nothing (pure and committing
+    paths), and plain LOAD raises."""
+    from face_hunter_spark.catalog import ParquetCatalog
+
+    n3 = tmp_path / "bad.n3"
+    n3.write_text("this is not n3 .\n")
+    g = _graph(spark, [("http://e/a", "http://e/p", "http://e/b")])
+    assert _spo(updated_graph(g, f"LOAD SILENT <file://{n3}>")) == _spo(g)
+    with pytest.raises(ValueError, match="cannot parse"):
+        updated_graph(g, f"LOAD <file://{n3}>")
+
+    cat = ParquetCatalog(str(tmp_path / "kg"))
+    execute_update(
+        spark, cat, "triples",
+        "INSERT DATA { <http://e/a> <http://e/p> <http://e/b> . }",
+    )
+    snaps = cat.snapshots("triples")
+    r = execute_update(
+        spark, cat, "triples", f"LOAD SILENT <file://{n3}>"
+    )
+    assert r == {"form": "load", "inserted": 0, "deleted": 0,
+                 "snapshot": None}
+    with pytest.raises(ValueError, match="cannot parse"):
+        execute_update(spark, cat, "triples", f"LOAD <file://{n3}>")
+    assert cat.snapshots("triples") == snaps
