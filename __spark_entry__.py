@@ -208,7 +208,7 @@ def _q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hyperplane literals + float64 HOF dots), which is bit-reproducible
     in DuckDB — so even the ANN query is exact-oracle-checked,
     bucketing included.  The numpy/GEMM forms (ann_lsh_topk,
-    link_lsh_fused) are the production path and carry pytest recall
+    linking.lsh_score_batch) are the production path and carry pytest recall
     gates instead (float32 BLAS sign bits are not engine-portable)."""
     from face_hunter_spark.operators.similarity import ann_lsh_topk_expr
 

@@ -103,8 +103,8 @@ def kg_pipeline_shuffle_df(spark, sf_dir):
 
 
 def kg_pipeline_hnsw_df(spark, sf_dir):
-    """Same pipeline, per-executor HNSW matcher (the reference's
-    'appr' default algorithm)."""
+    """Same pipeline, HNSW matcher (the reference's 'appr' default
+    algorithm; graph built once on the driver side and broadcast)."""
     import __spark_entry__ as em
     from face_hunter_spark import synth
     from face_hunter_spark.pipeline import link_documents
@@ -120,7 +120,7 @@ def kg_pipeline_hnsw_df(spark, sf_dir):
     )
     return link_documents(
         docs, gallery_pdf, catalog, n_entities=em.N_ENTITIES,
-        strategy="hnsw", hnsw_prebuilt=True,
+        strategy="hnsw",
     )
 
 

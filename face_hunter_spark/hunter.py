@@ -51,8 +51,6 @@ class SparkHunter:
         distance_threshold: float = 0.6,
         frame_threshold: int = 3,
         one_face: bool = False,
-        hnsw_prebuilt: bool = False,
-        hnsw_shards: int | None = None,
         cache_index: bool = False,
         encoder: str = "hash",
         graph_uri: str | None = None,
@@ -78,14 +76,11 @@ class SparkHunter:
         self.frame_threshold = frame_threshold
         # reference one_face mode: link only the largest face per frame
         self.one_face = one_face
-        # hnsw_prebuilt: driver-built broadcast graph; hnsw_shards:
-        # executor-parallel sharded build (the >10^5-gallery path);
-        # cache_index: persist/reuse ANN payloads through the catalog,
-        # keyed by gallery content hash (the reference's loadIndex
-        # path); encoder: a registered production encoder name
-        # (vision.register_encoder), default the deterministic seam
-        self.hnsw_prebuilt = hnsw_prebuilt
-        self.hnsw_shards = hnsw_shards
+        # cache_index: persist/reuse the lsh/hnsw matcher payloads
+        # (linking.MATCHERS) through the catalog, keyed by gallery
+        # content hash (the reference's loadIndex path); encoder: a
+        # registered production encoder name (vision.register_encoder),
+        # default the deterministic seam
         self.cache_index = cache_index
         self.encoder = encoder
         self._canon = canonical_map(self.entity_catalog).cache()
@@ -123,8 +118,6 @@ class SparkHunter:
             distance_threshold=self.distance_threshold,
             frame_threshold=self.frame_threshold,
             one_face=self.one_face,
-            hnsw_prebuilt=self.hnsw_prebuilt,
-            hnsw_shards=self.hnsw_shards,
             cache_index=self.cache_index,
             encoder=self.encoder,
         )

@@ -5,10 +5,10 @@ runs (src/models/approximate_k_nearest_neighbors.py:51-62 saveIndex/
 loadIndex, models/index_cele.bin) — without that, a large gallery's
 build cost is repaid on EVERY job (measured 1,257s at a 200k gallery,
 BASELINE.md crossover table).  This module is the batch analogue: the
-broadcastable payload dicts (``hnsw.prebuilt_gallery_payload``,
-``linking.lsh_gallery_payload``) round-trip through the SAME catalog
-seam the triple table uses, as a table of binary chunks keyed by
-(fingerprint, kind).
+broadcastable matcher payloads (the ``build`` output of
+``linking.MATCHERS['hnsw']`` / ``['lsh']``; ``linking.gallery_payload``
+is the caller) round-trip through the SAME catalog seam the triple
+table uses, as a table of binary chunks keyed by (fingerprint, kind).
 
 Keying by the FULL gallery content hash (``hnsw._gallery_fingerprint``)
 plus the build parameters fixes the reference's stale-index quirk at

@@ -1,19 +1,22 @@
-"""Per-executor HNSW matcher — the reference's default ANN algorithm
+"""HNSW matcher — the reference's default ANN algorithm
 (``algorithm: appr`` in config.yaml; nmslib HNSW built per process at
 src/models/approximate_k_nearest_neighbors.py:37-62 with M=15,
 efConstruction=100) re-implemented as a small pure-numpy HNSW
 (Malkov & Yashunin 2016, the public algorithm), since nmslib/hnswlib
 are not in this container.
 
-Role in the engine: an ALTERNATIVE physical strategy behind the same
-logical kNN-join interface as the broadcast GEMM and LSH matchers
-(SURVEY.md §2.3).  The index is built ONCE PER EXECUTOR from the
-broadcast gallery arrays (exactly like the reference builds its index
-once per process) and queried per Arrow batch — zero shuffle, no
-candidate join.  The GEMM/LSH paths win while the gallery is small
-enough that one BLAS matmul per batch is cheap; HNSW's sub-linear
-search pays once the gallery grows past that — the measured crossover
-table lives in BASELINE.md (scripts/hnsw_crossover.py reproduces it).
+Role in the engine: ``linking.MATCHERS['hnsw']``, behind the same
+build/prepare/score interface as the broadcast GEMM and LSH matchers
+(SURVEY.md §2.3).  The graph is built ONCE per gallery on the driver
+side (:func:`sharded_payload_spark`: one graph for small galleries,
+executor-parallel shards for large ones — the reference's
+saveIndex/loadIndex shape), broadcast, and adopted by each Python
+worker (:func:`executor_index`), then queried per Arrow batch — zero
+shuffle, no candidate join.  The GEMM/LSH paths win while the gallery
+is small enough that one BLAS matmul per batch is cheap; HNSW's
+sub-linear search pays once the gallery grows past that — the
+measured crossover table lives in BASELINE.md
+(scripts/hnsw_crossover.py reproduces it).
 
 Query execution is LOCKSTEP-BATCHED: all queries in an Arrow batch walk
 the graph simultaneously — each round gathers every active query's
@@ -43,6 +46,10 @@ from .. import fakevision as _fv
 # (chunk x gallery) stays ~32 MB regardless of gallery size
 _VISITED_BUDGET = 32_000_000
 _CHUNK_CAP = 64
+
+#: Gallery rows per shard of the default sharded build: galleries
+#: under 2 x SHARD_ROWS build ONE graph (see shard_count).
+SHARD_ROWS = 4096
 
 
 class HNSWIndex:
@@ -481,8 +488,8 @@ def _gallery_fingerprint(labels, mat: np.ndarray) -> str:
     unsampled rows or interior labels would collide and serve a stale
     graph (ADVICE r3).  The full hash costs one md5 pass over the
     arrays; a weakref-guarded memo keyed by object identity makes it
-    once-per-gallery per worker, and the prebuilt broadcast path ships
-    the driver-computed hash so workers never hash at all."""
+    once per gallery per process, and the payload ships the
+    driver-computed hash so workers never hash at all."""
     import weakref
 
     key = id(mat)
@@ -502,66 +509,29 @@ def _gallery_fingerprint(labels, mat: np.ndarray) -> str:
         h.update(b"\x00")
     fp = h.hexdigest()
     try:
-        _FP_MEMO.clear()  # one live gallery per worker is the norm
+        _FP_MEMO.clear()  # one live gallery per process is the norm
         _FP_MEMO[key] = (weakref.ref(mat), fp)
     except TypeError:
         pass  # non-weakref-able array subclass: just skip the memo
     return fp
 
 
-def executor_index(gallery_arrays, M: int = 15,
-                   ef_construction: int = 100) -> tuple:
-    """Per-executor lazy singleton over a broadcast — the reference
-    builds its nmslib index once per process (flask_api.py:40-45);
-    here a content fingerprint of the gallery keys the cache so each
-    Python worker builds the graph exactly once per distinct gallery
-    (and never serves a stale graph for a reused broadcast address).
-
-    The broadcast value is either the raw ``(labels, mat, norms)``
-    gallery triple (graph built on the worker) or a
-    ``{"labels": ..., "index": to_payload()}`` PREBUILT dict (the
-    reference's loadIndex path: build once on the driver/offline,
-    workers only adopt arrays — the right shape for 100k+ galleries
-    where a per-worker build would dominate)."""
-    value = gallery_arrays.value
-    if isinstance(value, dict):
-        labels = value["labels"]
-        sharded = value.get("sharded", False)
-        # prefer the driver-computed full content hash shipped inside
-        # the payload (prebuilt/sharded builders) — zero worker hashing
-        key = value.get("fingerprint") or _gallery_fingerprint(
-            labels, value["index"]["mat"])
-        idx = _INDEX_CACHE.get(key)
-        if idx is None:
-            idx = (ShardedHNSW.from_payload(value) if sharded
-                   else HNSWIndex.from_payload(value["index"]))
-            _INDEX_CACHE.clear()
-            _INDEX_CACHE[key] = idx
-        return labels, idx
-    labels, mat, norms = value
-    key = _gallery_fingerprint(labels, mat)
+def executor_index(payload) -> tuple:
+    """Worker-side adoption of a driver-built payload
+    (:func:`sharded_payload_spark`) -> (labels, index).  A per-worker
+    cache keyed by the payload's shipped content fingerprint makes the
+    adoption once per distinct gallery per Python worker (and never
+    serves a stale graph for a reused broadcast address); workers
+    never build or hash."""
+    key = payload["fingerprint"]
     idx = _INDEX_CACHE.get(key)
     if idx is None:
-        idx = HNSWIndex(mat, M=M, ef_construction=ef_construction)
+        idx = (ShardedHNSW.from_payload(payload)
+               if payload.get("sharded")
+               else HNSWIndex.from_payload(payload["index"]))
         _INDEX_CACHE.clear()  # one live gallery per worker is the norm
         _INDEX_CACHE[key] = idx
-    return labels, idx
-
-
-def prebuilt_gallery_payload(gallery_arrays_triple, M: int = 15,
-                             ef_construction: int = 100) -> dict:
-    """Driver-side build -> broadcastable prebuilt-index dict (see
-    executor_index).  ``gallery_arrays_triple`` = (labels, mat, norms)
-    as produced by linking._gallery_arrays."""
-    labels, mat, _norms = gallery_arrays_triple
-    idx = HNSWIndex(mat, M=M, ef_construction=ef_construction)
-    return {
-        "labels": labels,
-        "index": idx.to_payload(),
-        # full content hash computed ONCE here on the driver; workers
-        # adopt it as the cache key without rehashing the matrix
-        "fingerprint": _gallery_fingerprint(labels, idx.mat),
-    }
+    return payload["labels"], idx
 
 
 def kmeans_shard_assign(
@@ -705,6 +675,16 @@ class ShardedHNSW:
         return cls.from_offsets(shards, p["offsets"], p["n_items"])
 
 
+def shard_count(spark, n: int, n_shards: int | None = None) -> int:
+    """Shard count of a gallery of ``n`` rows: by default the session
+    parallelism, capped so shards keep >= SHARD_ROWS rows (tiny graphs
+    waste merge work); an explicit ``n_shards`` is clamped to [1, n]."""
+    if n_shards is None:
+        par = int(spark.sparkContext.defaultParallelism)
+        n_shards = min(par, n // SHARD_ROWS or 1)
+    return max(1, min(int(n_shards), max(n, 1)))
+
+
 def sharded_payload_spark(
     spark, gallery_arrays_triple, n_shards: int | None = None,
     M: int = 15, ef_construction: int = 100,
@@ -712,8 +692,9 @@ def sharded_payload_spark(
 ) -> dict:
     """Build the per-shard subgraphs IN EXECUTORS (one Spark task per
     shard over the broadcast gallery) and assemble the broadcastable
-    prebuilt dict.  This parallelizes the one superlinear single-
-    threaded step of the hnsw strategy; everything shipped back to the
+    payload dict (:func:`executor_index` adopts it).  This
+    parallelizes the one superlinear single-threaded step of the hnsw
+    strategy; everything shipped back to the
     driver is the finished adjacency arrays (~n·(M0+M·levels)·4 bytes
     total across shards — the same volume a monolithic payload has).
 
@@ -724,22 +705,18 @@ def sharded_payload_spark(
     ``'contiguous'`` slices by row order and probes every shard
     (exact-merge mode, the parity baseline).
 
-    ``n_shards`` defaults to the session parallelism, capped so shards
-    keep >=4096 rows (tiny graphs waste merge work); pass explicitly to
-    pin the artifact shape (the index_store key includes it)."""
+    ``n_shards`` defaults to :func:`shard_count`; pass explicitly to
+    pin the artifact shape.  One shard builds the single graph a
+    small gallery gets (seeded, so identical on every run)."""
     import pandas as pd
 
     labels, mat, _norms = gallery_arrays_triple
     n = len(mat)
-    if n_shards is None:
-        par = int(spark.sparkContext.defaultParallelism)
-        n_shards = max(1, min(par, n // 4096 or 1))
-    n_shards = max(1, min(int(n_shards), max(n, 1)))
-    fp = _gallery_fingerprint(labels, mat)
+    n_shards = shard_count(spark, n, n_shards)
     if n_shards == 1 or n == 0:
         idx = HNSWIndex(mat, M=M, ef_construction=ef_construction)
         return {"labels": labels, "index": idx.to_payload(),
-                "fingerprint": fp}
+                "fingerprint": _gallery_fingerprint(labels, idx.mat)}
     if partitioner == "kmeans":
         assign, centroids = kmeans_shard_assign(mat, n_shards)
         ids = [np.flatnonzero(assign == s).astype(np.int64)
@@ -787,7 +764,7 @@ def sharded_payload_spark(
         "centroids": centroids,
         "n_probe": n_probe,
         "shards": payloads,
-        "fingerprint": fp,
+        "fingerprint": _gallery_fingerprint(labels, mat),
     }
 
 

@@ -1,26 +1,35 @@
-"""Entity linking: face embedding -> gallery label, two physical
-strategies behind one logical operator (the reference's '1nn' vs
-'appr' switch, hunter.py:93).
+"""Entity linking: face embedding -> gallery label (the reference's
+'1nn' vs 'appr' switch, hunter.py:93).
 
-* ``link_bruteforce`` — exact 1-NN cosine against the whole gallery
+Broadcast-gallery matchers live in ONE table, ``MATCHERS[strategy]``:
+a driver-side ``build`` turns the gallery's (labels, matrix, norms)
+arrays into a broadcastable payload once per gallery (cached across
+jobs through ``index_store`` when ``cache_key`` names its parameters),
+a worker-side ``prepare`` turns the payload into per-partition state,
+and ``score`` labels one batch of embeddings.
+``vision.detect_embed_link`` runs prepare + score inside the fused
+decode+embed stage, so embeddings never cross the Arrow boundary.
+
+* ``'bruteforce'`` — exact 1-NN cosine against the whole gallery
   (face_recognition.py:300-314 semantics: dist = 1 - cos, argmin,
-  threshold else 'unknown', ties -> lowest gallery index).  Physical
-  form: the gallery (1,220 x 512 floats ≈ 2.5 MB) is an sc.broadcast;
-  a pandas UDF does ONE BLAS matmul per Arrow batch.  At 10^12 docs
-  this is the *better* plan while the gallery is small: zero shuffle,
-  zero candidate blow-up, embarrassingly parallel.
+  threshold else 'unknown', ties -> lowest gallery index).  The
+  payload is the raw arrays; the matrix is normalized once per
+  partition and each batch is ONE BLAS matmul.  Zero shuffle, zero
+  candidate blow-up — the better plan while the gallery is small.
+* ``'lsh'`` — random-hyperplane LSH band buckets prune candidates
+  (CSR bucket index built on the driver), then one BLAS matmul per
+  occupied bucket (:func:`lsh_score_batch`).
+* ``'hnsw'`` — the reference's default ANN algorithm
+  (approximate_k_nearest_neighbors.py:37-62), built on the driver side
+  by ``hnsw.sharded_payload_spark`` (one graph below
+  2 x ``hnsw.SHARD_ROWS`` rows, executor-parallel shards above);
+  workers adopt the finished graph.
 
-* ``link_lsh`` — random-hyperplane LSH bucketing (north_star's
-  "LSH-bucketed approximate-kNN join"): band signatures on both sides,
-  equi-join on (band, bucket) against the broadcast gallery buckets,
-  exact cosine within candidates, top-k window prune, majority vote.
-  This is the scale path for LARGE galleries (millions of reference
-  faces) where a broadcast matmul no longer fits: the join stays a
-  broadcast-hash-join while gallery buckets fit in memory, and
-  degrades to a shuffled equi-join on bucket keys beyond that —
-  bounded shuffle because each mention lands in exactly `bands`
-  buckets.  Replaces the reference's per-process HNSW index
-  (approximate_k_nearest_neighbors.py:47-62).
+``link_lsh`` is the relational form for galleries beyond the
+broadcast budget (``strategy='lsh_shuffle'``): band signatures on both
+sides, equi-join on the bucket, exact cosine within candidates, top-k
+window prune, majority vote — bounded shuffle because each mention
+lands in exactly ``bands`` buckets.
 
 The majority vote implements the reference's *intended* semantics
 (count votes among thresholded neighbors, ties -> nearest neighbor
@@ -30,7 +39,7 @@ neighbor); identical behavior at the default k=1.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -47,15 +56,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import hnsw
+
 UNKNOWN = "unknown"
-
-_LINK_RESULT = StructType(
-    [
-        StructField("label", StringType(), False),
-        StructField("distance", FloatType(), False),
-    ]
-)
-
 
 def _gallery_arrays(gallery_pdf: pd.DataFrame):
     """(labels, matrix, row_norms) sorted by gallery_id — argmin ties
@@ -66,51 +69,6 @@ def _gallery_arrays(gallery_pdf: pd.DataFrame):
     mat = np.vstack([np.asarray(e, dtype=np.float32) for e in g["embedding"]])
     norms = np.linalg.norm(mat, axis=1)
     return labels, mat, norms
-
-
-def link_bruteforce(
-    faces: DataFrame,
-    gallery_pdf: pd.DataFrame,
-    distance_threshold: float = 0.6,
-) -> DataFrame:
-    """FACES -> + (label, distance).  face_idx NULL rows (empty frames)
-    pass through with label NULL so frame assembly keeps the frame."""
-    spark = SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast(_gallery_arrays(gallery_pdf))
-
-    schema = StructType(
-        faces.schema.fields
-        + [StructField("label", StringType(), True),
-           StructField("distance", FloatType(), True)]
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        labels, mat, norms = bc.value
-        for pdf in batches:
-            lab = np.full(len(pdf), None, dtype=object)
-            dist = np.full(len(pdf), np.nan, dtype=np.float32)
-            mask = pdf["embedding"].notna().to_numpy()
-            if mask.any():
-                q = np.vstack(
-                    [np.asarray(e, dtype=np.float32) for e in pdf["embedding"][mask]]
-                )
-                qn = np.linalg.norm(q, axis=1)
-                # one BLAS call per batch: (B x 512) @ (512 x G)
-                cos = (q @ mat.T) / (qn[:, None] * norms[None, :])
-                d = 1.0 - cos
-                best = np.argmin(d, axis=1)
-                bestd = d[np.arange(len(best)), best]
-                chosen = np.where(
-                    bestd < distance_threshold, labels[best], UNKNOWN
-                )
-                lab[mask] = chosen
-                dist[mask] = bestd
-            out = pdf.copy()
-            out["label"] = lab
-            out["distance"] = dist
-            yield out
-
-    return faces.mapInPandas(fn, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -360,7 +318,7 @@ def link_lsh(
     )
 
     # faces with no surviving candidate -> 'unknown'; empty frames pass
-    # through with NULL label (same contract as link_bruteforce)
+    # through with NULL label (same contract as detect_embed_link)
     base = faces.select("doc_id", "frame_no", "ts_ms", "face_idx")
     return (
         base.join(voted, ["doc_id", "frame_no", "ts_ms", "face_idx"], "left")
@@ -399,89 +357,16 @@ def assemble_frame_predictions(linked: DataFrame) -> DataFrame:
     )
 
 
-def link_lsh_fused(
-    faces: DataFrame,
-    gallery_pdf: pd.DataFrame,
-    distance_threshold: float = 0.6,
-    k: int = 1,
-    bands: int = 8,
-    rows_per_band: int = 6,
-) -> DataFrame:
-    """LSH-bucketed approximate kNN against a BROADCAST gallery as one
-    fused vectorized stage (the north_star's join, in the physical form
-    that wins while the gallery broadcasts): the gallery's band buckets
-    are built once on the driver (G x planes matmul — tiny), shipped
-    with the matrix; each Arrow batch then computes mention signatures
-    with one matmul, gathers each face's candidate gallery rows from
-    the bucket dict, and scores ONLY candidates with one flattened
-    einsum.  No candidate join, no embedding shuffle, no per-pair HOF
-    arithmetic — compare ``link_lsh``, the relational form kept for
-    galleries beyond broadcast, whose candidate pairs must flow through
-    an exchange (measured 13x slower at bench scale precisely because
-    512-d arrays crossed a shuffle and cosines ran as interpreted
-    expressions).
-
-    Semantics match ``link_lsh``: candidates = union of the face's
-    band buckets; top-k by distance; majority vote among thresholded
-    neighbors, ties -> nearest, then lowest gallery index; no
-    surviving candidate -> 'unknown'; empty frames pass through NULL.
-    """
-    spark = SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast(
-        lsh_gallery_payload(gallery_pdf, bands, rows_per_band)
-    )
-
-    schema = StructType(
-        faces.schema.fields
-        + [StructField("label", StringType(), True),
-           StructField("distance", FloatType(), True)]
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lab = np.full(len(pdf), None, dtype=object)
-            dist = np.full(len(pdf), np.nan, dtype=np.float32)
-            mask = pdf["embedding"].notna().to_numpy()
-            if mask.any():
-                q = np.vstack(
-                    [np.asarray(e, dtype=np.float32)
-                     for e in pdf["embedding"][mask]]
-                )
-                out_lab, out_dist = lsh_score_batch(
-                    q, bc.value, distance_threshold, k
-                )
-                lab[mask] = out_lab
-                dist[mask] = out_dist
-            out = pdf.copy()
-            out["label"] = lab
-            out["distance"] = dist
-            yield out
-
-    return faces.mapInPandas(fn, schema=schema)
-
-
-def lsh_gallery_payload(
-    gallery_pdf: pd.DataFrame, bands: int = 8, rows_per_band: int = 6
-):
-    """Driver-side build of the broadcastable LSH gallery: (labels,
-    matrix, norms, hyperplanes, bucket->gallery-indices dict, bands,
-    rows_per_band).  One tiny G x planes matmul.  The bucket index is a
-    CSR triple (sorted unique bucket keys, member offsets, concatenated
-    gallery indices) so the executor-side lookup is one vectorized
-    searchsorted over a whole Arrow batch — no per-face dict probes."""
-    return lsh_payload_from_arrays(
-        *_gallery_arrays(gallery_pdf), bands=bands,
-        rows_per_band=rows_per_band,
-    )
-
-
 def lsh_payload_from_arrays(
     labels, mat, norms, bands: int = 8, rows_per_band: int = 6
 ):
-    """lsh_gallery_payload for callers that already hold the gallery as
-    (labels, matrix, norms) arrays — e.g. a gallery synthesized in bulk
-    (scripts/hnsw_crossover.py) where a row-wise pandas embedding
-    column would dominate the build."""
+    """Driver-side build of the broadcastable LSH gallery from its
+    (labels, matrix, norms) arrays: (labels, matrix, norms,
+    hyperplanes, CSR bucket index, bands, rows_per_band).  One tiny
+    G x planes matmul.  The bucket index is a CSR triple (sorted
+    unique bucket keys, member offsets, concatenated gallery indices)
+    so the executor-side lookup is one vectorized searchsorted over a
+    whole Arrow batch — no per-face dict probes."""
     assert rows_per_band <= 24, "bucket packing supports rows_per_band <= 24"
     planes = _hyperplanes(bands * rows_per_band, mat.shape[1])
     gbits = (mat @ planes.T) > 0
@@ -542,9 +427,8 @@ def lsh_score_batch(
 ):
     """Score one batch of query embeddings against the broadcast LSH
     gallery payload.  Returns (labels object array, float32 distances);
-    faces with no surviving candidate get 'unknown'/NaN.  Shared by
-    link_lsh_fused and the fully-fused vision stage
-    (vision.detect_embed_link matcher='lsh').
+    faces with no surviving candidate get 'unknown'/NaN.  The
+    ``MATCHERS['lsh']`` score kernel.
 
     k=1 (the reference default) runs as BUCKETED GEMM: per band, sort
     faces by bucket key, then ONE BLAS matmul per occupied bucket
@@ -643,3 +527,107 @@ def lsh_score_batch(
         out_lab[i] = labels[gs[best]]
         out_dist[i] = ds[best]
     return out_lab, out_dist
+
+
+# ---------------------------------------------------------------------------
+# Broadcast-gallery matcher table
+# ---------------------------------------------------------------------------
+
+
+class Matcher(NamedTuple):
+    """One broadcast-gallery matcher (see the module docstring).
+
+    * ``build(arrays) -> payload`` — driver side, once per gallery;
+      ``arrays`` is the :func:`_gallery_arrays` triple.
+    * ``cache_key(arrays) -> dict | None`` — the ``index_store`` key
+      parameters when the payload is worth caching across jobs.
+    * ``prepare(payload) -> state`` — worker side, once per partition.
+    * ``score(emb, state, threshold) -> (labels, distances)`` — once
+      per batch; 'unknown' where no neighbor is under ``threshold``.
+    """
+
+    build: Callable
+    cache_key: Callable
+    prepare: Callable
+    score: Callable
+
+
+def _no_cache(arrays) -> None:
+    return None
+
+
+def _identity(x):
+    return x
+
+
+def _bruteforce_prepare(payload):
+    labels, mat, norms = payload
+    return labels, (mat / norms[:, None]).T  # (512, G), normalized once
+
+
+def _bruteforce_score(emb, state, distance_threshold):
+    labels, matn = state
+    qn = np.linalg.norm(emb, axis=1, keepdims=True)
+    d = 1.0 - (emb / qn) @ matn  # ONE GEMM: (B, G) cosine distances
+    best = np.argmin(d, axis=1)
+    bestd = d[np.arange(len(best)), best]
+    lab = np.where(bestd < distance_threshold, labels[best], UNKNOWN)
+    return lab, bestd
+
+
+def _lsh_build(arrays):
+    return lsh_payload_from_arrays(*arrays)
+
+
+def _lsh_key(arrays) -> dict:
+    return {"bands": 8, "rows_per_band": 6}
+
+
+def _hnsw_build(arrays):
+    return hnsw.sharded_payload_spark(SparkSession.getActiveSession(), arrays)
+
+
+def _hnsw_key(arrays) -> dict:
+    n = hnsw.shard_count(SparkSession.getActiveSession(), len(arrays[1]))
+    params = {"M": 15, "ef_construction": 100}
+    return {**params, "shards": n} if n > 1 else params
+
+
+def _hnsw_score(emb, state, distance_threshold):
+    labels, idx = state
+    return hnsw.hnsw_score_batch(emb, labels, idx, distance_threshold)
+
+
+MATCHERS: dict[str, Matcher] = {
+    "bruteforce": Matcher(_identity, _no_cache, _bruteforce_prepare,
+                          _bruteforce_score),
+    "lsh": Matcher(_lsh_build, _lsh_key, _identity, lsh_score_batch),
+    "hnsw": Matcher(_hnsw_build, _hnsw_key, hnsw.executor_index,
+                    _hnsw_score),
+}
+
+
+def gallery_payload(strategy: str, arrays, index_catalog=None,
+                    table: str = "ann_index"):
+    """Driver side of ``MATCHERS[strategy]``: ``(payload, built)``.
+    With an ``index_catalog`` a cacheable payload is loaded from the
+    catalog by gallery content hash + build parameters (``built`` is
+    False) or built and persisted, so the build is paid once per
+    distinct gallery — and a gallery edit changes the key, fixing the
+    reference's reload-stale-index-if-file-exists quirk
+    (approximate_k_nearest_neighbors.py:51-62)."""
+    if strategy not in MATCHERS:
+        raise ValueError(strategy)
+    m = MATCHERS[strategy]
+    params = None if index_catalog is None else m.cache_key(arrays)
+    if params is None:
+        return m.build(arrays), True
+    from .. import index_store
+
+    key = index_store.payload_key(
+        hnsw._gallery_fingerprint(arrays[0], arrays[1]), **params
+    )
+    return index_store.load_or_build(
+        SparkSession.getActiveSession(), index_catalog, key, strategy,
+        lambda: m.build(arrays), table=table,
+    )

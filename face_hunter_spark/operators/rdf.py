@@ -252,6 +252,16 @@ def parse_n3_rows(
                 return prefixes[pfx] + local
         return None
 
+    def bad_object(obj: str) -> ValueError:
+        # the reader takes one predicate-object pair per line: an
+        # object is ONE term, optionally followed by ^^datatype or
+        # @lang; anything after it (an inline ';' / ',' list) raises
+        # instead of becoming part of the object or being dropped
+        return ValueError(
+            f"cannot parse n3 object {obj!r} (expected one term, "
+            "optionally followed by ^^datatype or @lang)"
+        )
+
     # block_open: the previous line ended with ';' (the writer's
     # continuation marker), so the next line reuses its subject.
     # A line arriving with the block CLOSED must start a new block —
@@ -306,6 +316,8 @@ def parse_n3_rows(
             dt: str | None = None
             if part.startswith("a "):
                 tobj = part[2:].strip()
+                if len(tobj.split()) != 1:
+                    raise bad_object(tobj)
                 if tobj.startswith("<") and tobj.endswith(">"):
                     obj = tobj[1:-1]
                 else:
@@ -334,7 +346,10 @@ def parse_n3_rows(
                         pred = rev_pred[pname]  # loud KeyError
                 obj = obj.strip()
                 if obj.startswith("<"):
-                    obj = obj.strip("<>")
+                    end = obj.find(">")
+                    if end < 0 or obj[end + 1:].strip():
+                        raise bad_object(obj)
+                    obj = obj[1:end]
                 elif obj.startswith('"'):
                     # scan to the closing UNESCAPED quote — splitting at
                     # the first '^^' would truncate a literal whose text
@@ -349,11 +364,17 @@ def parse_n3_rows(
                             break
                         i += 1
                     tail = obj[i + 1:].strip()
+                    if i >= len(obj) or len(tail.split()) > 1 or (
+                        tail and not tail.startswith(("^^", "@"))
+                    ):
+                        raise bad_object(obj)
                     obj = _unescape(obj[1:i])
                     is_lit = True
                     if tail.startswith("^^"):
                         dt = expand_dt(tail[2:])
                 else:
+                    if len(obj.split()) != 1:
+                        raise bad_object(obj)
                     expanded = expand_pname(obj)
                     if expanded is not None and "^^" not in obj:
                         # known-prefix object IRI (generic documents;

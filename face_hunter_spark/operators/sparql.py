@@ -3181,7 +3181,12 @@ def execute(
     Deviation: terms are stored lexically (no literal datatypes in the
     match), so ``isNumeric`` is lexical too — true iff the string casts
     to a double.  A plain ``"42"``, and ``"NaN"`` / ``"Infinity"``,
-    report true where the spec wants a numeric-datatyped literal."""
+    report true where the spec wants a numeric-datatyped literal.
+
+    Deviation: a bound ``VALUES`` cell never matches an unbound (NULL)
+    solution column — the engine's uniform NULL-join convention —
+    where the spec treats the unbound variable as compatible with any
+    value.  ``UNDEF`` cells wildcard-match per the spec."""
     if entailment not in (None, "rdfs"):
         raise ValueError("entailment must be None or 'rdfs'")
     if entailment == "rdfs":

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from .. import fakevision as fv
 from ..schemas import FACES
 from .align import align_crops_batch
+from .linking import MATCHERS
 
 EMBED_DIM = 512
 
@@ -219,26 +220,17 @@ def detect_embed_link(
     (vectorized batch), and match against the broadcast gallery —
     embeddings never cross the Arrow boundary (SURVEY.md §4.5:
     collapsing adjacent mapInPandas stages beats a custom Catalyst
-    rule).  Output rows carry only the label.
+    rule).  Output rows carry only the label; empty frames keep one
+    face_idx=NULL row with a NULL label.
 
-    ``matcher`` picks the in-batch match kernel against the broadcast:
-    * 'bruteforce' — one BLAS matmul vs the whole gallery matrix;
-      ``gallery_arrays`` is an sc.broadcast of
-      linking._gallery_arrays output.
-    * 'lsh' — LSH band buckets prune candidates, one BLAS matmul per
-      occupied bucket (the north_star join, fully fused);
-      ``gallery_arrays`` is an sc.broadcast of
-      linking.lsh_gallery_payload output.
-    * 'hnsw' — per-executor HNSW graph (the reference's nmslib
-      default, approximate_k_nearest_neighbors.py:37-62), built lazily
-      once per Python worker from an sc.broadcast of
-      linking._gallery_arrays output.
-
-    Semantically identical to detect_embed_faces |> link_bruteforce /
-    link_lsh_fused (parity-tested); use the two-stage ops when the
-    embeddings themselves are wanted downstream.
+    ``gallery_arrays`` is an sc.broadcast of
+    ``linking.MATCHERS[matcher].build(linking._gallery_arrays(...))``
+    — for the default 'bruteforce', the arrays triple itself.  Each
+    partition runs the matcher's ``prepare`` once and its ``score``
+    once per batch.
     """
     factory = _resolve_encoder(encoder)   # loud driver-side error
+    prepare, score = MATCHERS[matcher].prepare, MATCHERS[matcher].score
 
     from pyspark.sql.types import (
         DoubleType, IntegerType, StringType, StructField, StructType,
@@ -254,16 +246,7 @@ def detect_embed_link(
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         enc = None if factory is None else _encoder_instance(encoder, factory)
-        if matcher == "bruteforce":
-            labels, mat, norms = gallery_arrays.value
-            matn = (mat / norms[:, None]).T  # (512, G), pre-normalized
-        elif matcher == "lsh":
-            from .linking import lsh_score_batch
-        elif matcher == "hnsw":
-            from .hnsw import executor_index, hnsw_score_batch
-            h_labels, h_idx = executor_index(gallery_arrays)
-        else:
-            raise ValueError(matcher)
+        state = prepare(gallery_arrays.value)
         rl_cache: dict[str, int] = {}
         for pdf in batches:
             docs_in = pdf["doc_id"].to_numpy()
@@ -337,24 +320,9 @@ def detect_embed_link(
                     if enc is None
                     else _encode_with(enc, seeds[has_face])
                 )
-                if matcher == "bruteforce":
-                    qn = np.linalg.norm(emb, axis=1, keepdims=True)
-                    d = 1.0 - (emb / qn) @ matn  # (B, G) cosine dists
-                    best = np.argmin(d, axis=1)
-                    bestd = d[np.arange(len(best)), best]
-                    out_labels[has_face] = np.where(
-                        bestd < distance_threshold, labels[best], "unknown"
-                    )
-                elif matcher == "lsh":
-                    lab, _ = lsh_score_batch(
-                        emb, gallery_arrays.value, distance_threshold
-                    )
-                    out_labels[has_face] = lab
-                else:
-                    lab, _ = hnsw_score_batch(
-                        emb, h_labels, h_idx, distance_threshold
-                    )
-                    out_labels[has_face] = lab
+                out_labels[has_face], _ = score(
+                    emb, state, distance_threshold
+                )
             yield pd.DataFrame({
                 "doc_id": pd.Series(docs_in[rep], dtype=object),
                 "frame_no": pd.array(fnos[rep], dtype="int32"),

@@ -102,8 +102,6 @@ def link_documents(
     gallery_df: DataFrame | None = None,
     one_face: bool = False,
     encoder: str = "hash",
-    hnsw_prebuilt: bool = False,
-    hnsw_shards: int | None = None,
     mention_labels: DataFrame | None = None,
     index_catalog=None,
     index_table: str = "ann_index",
@@ -144,99 +142,7 @@ def link_documents(
     media = ensure_parallelism(
         spans.media_frames(documents, sample_every=sample_every), by="doc_id"
     )
-    if strategy == "bruteforce":
-        # fused decode+embed+link stage: embeddings never cross Arrow
-        from pyspark.sql import SparkSession
-
-        bc = SparkSession.getActiveSession().sparkContext.broadcast(
-            linking._gallery_arrays(gallery_pdf)
-        )
-        linked = vision.detect_embed_link(
-            media, bc, distance_threshold, n_entities=n_entities,
-            one_face=one_face, encoder=encoder,
-        )
-    elif strategy == "lsh":
-        # fully-fused broadcast-gallery LSH: decode+embed+bucket+score
-        # in ONE Python stage (embeddings never cross Arrow, same as
-        # the bruteforce path)
-        from pyspark.sql import SparkSession
-
-        if index_catalog is not None:
-            from . import index_store
-            from .operators.hnsw import _gallery_fingerprint
-
-            arrays = linking._gallery_arrays(gallery_pdf)
-            key = index_store.payload_key(
-                _gallery_fingerprint(arrays[0], arrays[1]),
-                bands=8, rows_per_band=6,
-            )
-            payload, _ = index_store.load_or_build(
-                SparkSession.getActiveSession(), index_catalog, key,
-                "lsh", lambda: linking.lsh_payload_from_arrays(*arrays),
-                table=index_table,
-            )
-        else:
-            payload = linking.lsh_gallery_payload(gallery_pdf)
-        bc = SparkSession.getActiveSession().sparkContext.broadcast(payload)
-        linked = vision.detect_embed_link(
-            media, bc, distance_threshold, n_entities=n_entities,
-            matcher="lsh", one_face=one_face, encoder=encoder,
-        )
-    elif strategy == "hnsw":
-        # per-executor graph index over the broadcast gallery — the
-        # reference's default ANN algorithm ('appr'), built once per
-        # Python worker like the reference builds nmslib per process.
-        # hnsw_prebuilt builds ONCE on the driver and broadcasts the
-        # finished graph (the reference's saveIndex/loadIndex cache,
-        # approximate_k_nearest_neighbors.py:51-62) — the right shape
-        # for 100k+ galleries where a per-worker build would dominate.
-        # With an ``index_catalog`` the built payload additionally
-        # PERSISTS across jobs keyed by the gallery content hash
-        # (index_store), so the build is paid once per distinct
-        # gallery, not once per run — and a gallery edit changes the
-        # key, fixing the reference's reload-stale-index-if-file-
-        # exists quirk at the artifact level.
-        from pyspark.sql import SparkSession
-
-        if hnsw_prebuilt or hnsw_shards:
-            from .operators import hnsw as _hnsw
-
-            spark_ = SparkSession.getActiveSession()
-            arrays = linking._gallery_arrays(gallery_pdf)
-            # hnsw_shards parallelizes the one superlinear single-
-            # threaded step (the graph build) across executors — the
-            # >10^5-gallery path; the monolithic driver build remains
-            # for small galleries / parity
-            if hnsw_shards:
-                build = lambda: _hnsw.sharded_payload_spark(  # noqa: E731
-                    spark_, arrays, n_shards=hnsw_shards
-                )
-                params = dict(M=15, ef_construction=100,
-                              shards=int(hnsw_shards))
-            else:
-                build = lambda: _hnsw.prebuilt_gallery_payload(arrays)  # noqa: E731
-                params = dict(M=15, ef_construction=100)
-            if index_catalog is not None:
-                from . import index_store
-
-                key = index_store.payload_key(
-                    _hnsw._gallery_fingerprint(arrays[0], arrays[1]),
-                    **params,
-                )
-                payload, _ = index_store.load_or_build(
-                    spark_, index_catalog, key, "hnsw", build,
-                    table=index_table,
-                )
-            else:
-                payload = build()
-        else:
-            payload = linking._gallery_arrays(gallery_pdf)
-        bc = SparkSession.getActiveSession().sparkContext.broadcast(payload)
-        linked = vision.detect_embed_link(
-            media, bc, distance_threshold, n_entities=n_entities,
-            matcher="hnsw", one_face=one_face, encoder=encoder,
-        )
-    elif strategy == "lsh_shuffle":
+    if strategy == "lsh_shuffle":
         # relational candidate join — the beyond-broadcast-gallery form
         assert gallery_df is not None
         faces = vision.detect_embed_faces(
@@ -248,7 +154,21 @@ def link_documents(
             broadcast_gallery=bc_gal,
         )
     else:
-        raise ValueError(strategy)
+        # broadcast-gallery matcher (linking.MATCHERS): the payload is
+        # built once on the driver side — or served from
+        # ``index_catalog`` by gallery content hash — broadcast, and
+        # matched inside the fused decode+embed stage (embeddings never
+        # cross Arrow)
+        payload, _ = linking.gallery_payload(
+            strategy, linking._gallery_arrays(gallery_pdf), index_catalog,
+            table=index_table,
+        )
+        linked = vision.detect_embed_link(
+            media, SparkSession.getActiveSession().sparkContext.broadcast(
+                payload),
+            distance_threshold, n_entities=n_entities, matcher=strategy,
+            one_face=one_face, encoder=encoder,
+        )
     # fused path: frame assembly + scene smoothing in ONE doc_id
     # shuffle (equivalent to assemble_frame_predictions |>
     # extract_scenes — parity-tested)
@@ -312,8 +232,8 @@ def run_link_job(
     t_start = time.monotonic()
     run_id = run_id or uuid.uuid4().hex[:12]
 
-    # cache_index=True persists/reuses ANN payloads (hnsw prebuilt,
-    # lsh) through THIS catalog, keyed by gallery content hash
+    # cache_index=True persists/reuses ANN payloads (hnsw, lsh)
+    # through THIS catalog, keyed by gallery content hash
     if kwargs.pop("cache_index", False):
         kwargs.setdefault("index_catalog", catalog)
 

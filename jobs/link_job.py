@@ -43,12 +43,6 @@ def main() -> int:
     ap.add_argument("--one-face", action="store_true",
                     help="link only the largest detected face per frame "
                          "(the reference's one_face mode)")
-    ap.add_argument("--hnsw-prebuilt", action="store_true",
-                    help="with --strategy hnsw: build the graph once on "
-                         "the driver and broadcast it (loadIndex analogue)")
-    ap.add_argument("--hnsw-shards", type=int, default=None,
-                    help="with --strategy hnsw: executor-parallel "
-                         "sharded build (the >10^5-gallery path)")
     ap.add_argument("--cache-index", action="store_true",
                     help="persist/reuse ANN payloads through the "
                          "catalog, keyed by gallery content hash")
@@ -105,8 +99,6 @@ def main() -> int:
         strategy=args.strategy,
         gallery_df=gallery_df,
         one_face=args.one_face,
-        hnsw_prebuilt=args.hnsw_prebuilt,
-        hnsw_shards=args.hnsw_shards,
         cache_index=args.cache_index,
     )
     if args.export_n3:

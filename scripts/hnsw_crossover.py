@@ -127,8 +127,8 @@ def run_size(n: int) -> dict:
         ),
     }
 
-    # HNSW (the per-executor 'hnsw' matcher); build timed separately —
-    # it happens once per worker per gallery, amortized over the run
+    # HNSW (the 'hnsw' matcher); build timed separately — it happens
+    # once per gallery on the driver side, amortized over the run
     t0 = time.monotonic()
     idx = HNSWIndex(mat)
     t_build = time.monotonic() - t0

@@ -123,30 +123,6 @@ def test_prebuilt_payload_roundtrip(gallery):
     assert list(la) == list(lb)
 
 
-def test_hnsw_prebuilt_pipeline_parity(spark):
-    """strategy='hnsw' with hnsw_prebuilt=True (driver-built broadcast
-    graph, the loadIndex analogue) emits exactly the worker-built
-    strategy's triples."""
-    from face_hunter_spark.pipeline import link_documents
-    from face_hunter_spark.schemas import ENTITY_CATALOG
-
-    docs = synth.documents_df(spark, 10, 8)
-    gal = synth.make_gallery_pdf(n_entities=8, thumbs_per_entity=5,
-                                 distractors=2)
-    cat = spark.createDataFrame(
-        synth.make_entity_catalog_pdf(n_entities=8, distractors=2),
-        ENTITY_CATALOG,
-    )
-
-    def tset(**kw):
-        df = link_documents(docs, gal, cat, n_entities=8,
-                            strategy="hnsw", **kw)
-        return {(r.subj, r.pred, r.obj)
-                for r in df.select("subj", "pred", "obj").collect()}
-
-    assert tset(hnsw_prebuilt=True) == tset()
-
-
 def test_gallery_fingerprint_full_content(gallery):
     """The cache key must see EVERY row and EVERY label — a strided
     sample let a gallery differing only in unsampled rows or interior
@@ -167,10 +143,11 @@ def test_gallery_fingerprint_full_content(gallery):
     assert _gallery_fingerprint(l2, mat.copy()) != base
 
 
-def test_prebuilt_payload_ships_fingerprint(gallery):
+def test_prebuilt_payload_ships_fingerprint(spark, gallery):
     from face_hunter_spark.operators import hnsw
 
-    payload = hnsw.prebuilt_gallery_payload(gallery)
+    payload = hnsw.sharded_payload_spark(spark, gallery)
+    assert not payload.get("sharded")  # small gallery: one graph
     assert payload["fingerprint"] == hnsw._gallery_fingerprint(
         payload["labels"], payload["index"]["mat"])
 
@@ -225,10 +202,11 @@ def test_sharded_payload_roundtrip_and_score(gallery):
     assert list(la) == list(lb)  # same labels as the monolithic graph
 
 
-def test_sharded_payload_spark_build(spark, gallery):
+def test_sharded_payload_spark_build(spark, gallery, monkeypatch):
     """Executor-parallel build: sharded_payload_spark produces the
     same artifact a local shard-by-shard build does, and the pipeline
-    with hnsw_shards emits the bruteforce strategy's triples."""
+    on a gallery big enough for several shards emits the bruteforce
+    strategy's triples."""
     from face_hunter_spark.operators import hnsw
     from face_hunter_spark.pipeline import link_documents
     from face_hunter_spark.schemas import ENTITY_CATALOG
@@ -277,12 +255,15 @@ def test_sharded_payload_spark_build(spark, gallery):
         return {(r.subj, r.pred, r.obj)
                 for r in df.select("subj", "pred", "obj").collect()}
 
-    assert tset(strategy="hnsw", hnsw_shards=3) == tset(strategy="bruteforce")
+    # three shards at local[4]: lower the rows-per-shard rule
+    monkeypatch.setattr(hnsw, "SHARD_ROWS", len(gal) // 3)
+    assert hnsw.shard_count(spark, len(gal)) == 3
+    assert tset(strategy="hnsw") == tset(strategy="bruteforce")
 
 
 def test_sharded_payload_persists_through_index_store(spark, tmp_path):
-    """hnsw_shards + cache_index: built once, reloaded (not rebuilt)
-    on the second job, invalidated by a gallery change."""
+    """A sharded payload through index_store: built once, reloaded
+    (not rebuilt) on the second job."""
     from face_hunter_spark import index_store
     from face_hunter_spark.catalog import ParquetCatalog
     from face_hunter_spark.operators import hnsw

@@ -29,7 +29,7 @@ def _arrays(n_entities=8, seed=0):
 def test_payload_roundtrip_hnsw(spark):
     cat = _cat()
     arrays, _ = _arrays()
-    payload = hnsw.prebuilt_gallery_payload(arrays)
+    payload = hnsw.sharded_payload_spark(spark, arrays)
     key = index_store.payload_key(
         hnsw._gallery_fingerprint(arrays[0], arrays[1]),
         M=15, ef_construction=100,
@@ -90,28 +90,28 @@ def test_load_or_build_builds_once(spark):
 
 
 def test_link_job_reuses_and_invalidates_index(spark, monkeypatch):
-    """End-to-end through run_link_job(strategy='hnsw', prebuilt,
-    cache_index): the graph build runs ONCE for a gallery across jobs
-    (loadIndex fast path), and a gallery edit changes the content key
-    so the stale artifact is NOT served (the reference reloads its
-    .bin purely on file existence — the quirk this fixes)."""
+    """End-to-end through run_link_job(strategy='hnsw', cache_index):
+    the graph build runs ONCE for a gallery across jobs (loadIndex
+    fast path), and a gallery edit changes the content key so the
+    stale artifact is NOT served (the reference reloads its .bin purely
+    on file existence — the quirk this fixes)."""
     builds = []
-    real = hnsw.prebuilt_gallery_payload
+    real = linking.MATCHERS["hnsw"]
 
-    def counting(arrays, **kw):
+    def counting(arrays):
         builds.append(1)
-        return real(arrays, **kw)
+        return real.build(arrays)
 
-    monkeypatch.setattr(hnsw, "prebuilt_gallery_payload", counting)
+    monkeypatch.setitem(
+        linking.MATCHERS, "hnsw", real._replace(build=counting)
+    )
 
     cat = _cat()
     gal = synth.make_gallery_pdf(
         n_entities=8, thumbs_per_entity=3, distractors=1
     )
     ecat = synth.entity_catalog_df(spark, n_entities=8, distractors=1)
-    kw = dict(
-        n_entities=8, strategy="hnsw", hnsw_prebuilt=True, cache_index=True
-    )
+    kw = dict(n_entities=8, strategy="hnsw", cache_index=True)
 
     docs1 = synth.documents_df(spark, 6, 8)
     s1 = run_link_job(spark, cat, docs1, gal, ecat, **kw)
@@ -141,7 +141,7 @@ def test_link_job_reuses_and_invalidates_index(spark, monkeypatch):
     cat_nc = _cat()
     docs = synth.documents_df(spark, 6, 8)
     run_link_job(spark, cat_nc, docs, gal, ecat,
-                 n_entities=8, strategy="hnsw", hnsw_prebuilt=True)
+                 n_entities=8, strategy="hnsw")
     cat_c = _cat()
     run_link_job(spark, cat_c, docs, gal, ecat, **kw)
     a = sorted(
@@ -153,6 +153,30 @@ def test_link_job_reuses_and_invalidates_index(spark, monkeypatch):
         for r in cat_c.read(spark, "triples").collect()
     )
     assert a == b
+
+
+@pytest.mark.parametrize("shard_rows", [4096, 8])
+def test_existing_hnsw_artifact_is_served(spark, monkeypatch, shard_rows):
+    """An artifact persisted under the established hnsw keys —
+    (M, ef_construction) for one graph, plus shards=n for a sharded
+    build — is served from the catalog, not rebuilt."""
+    monkeypatch.setattr(hnsw, "SHARD_ROWS", shard_rows)
+    cat = _cat()
+    arrays, _ = _arrays()
+    n = hnsw.shard_count(spark, len(arrays[1]))
+    assert (n > 1) == (shard_rows == 8)
+    params = dict(M=15, ef_construction=100)
+    if n > 1:
+        params["shards"] = n
+    payload = hnsw.sharded_payload_spark(spark, arrays, n_shards=n)
+    key = index_store.payload_key(
+        hnsw._gallery_fingerprint(arrays[0], arrays[1]), **params
+    )
+    index_store.save_payload(spark, cat, key, "hnsw", payload)
+    got, built = linking.gallery_payload("hnsw", arrays, cat)
+    assert built is False
+    assert got["fingerprint"] == payload["fingerprint"]
+    assert bool(got.get("sharded")) == (n > 1)
 
 
 def test_torn_artifact_raises(spark):

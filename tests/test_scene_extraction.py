@@ -120,8 +120,8 @@ def test_fused_faces_path_equals_two_stage(spark):
     )
     gal = synth.make_gallery_pdf(n_entities=8, thumbs_per_entity=5, distractors=2)
     media = spans.media_frames(docs)
-    faces = vision.detect_embed_faces(media, n_entities=8)
-    linked = linking.link_bruteforce(faces, gal).cache()
+    bc = spark.sparkContext.broadcast(linking._gallery_arrays(gal))
+    linked = vision.detect_embed_link(media, bc, n_entities=8).cache()
     two_stage = extract_scenes(
         linking.assemble_frame_predictions(linked), 3
     )

@@ -950,27 +950,37 @@ def test_load_silent_swallows_unreadable(spark, tmp_path):
 def test_load_silent_swallows_parse_failure(spark, tmp_path):
     """A document the n3 reader rejects is an operation failure too:
     LOAD SILENT is a no-op that commits nothing (pure and committing
-    paths), and plain LOAD raises."""
+    paths), and plain LOAD raises.  The rejected shapes include inline
+    ';' / ',' separators after an object, which the line reader does
+    not split — it must refuse them rather than commit an object like
+    'http://e/o ; ex:q ex:r' or silently drop the second triple."""
     from face_hunter_spark.catalog import ParquetCatalog
 
-    n3 = tmp_path / "bad.n3"
-    n3.write_text("this is not n3 .\n")
+    bad_docs = [
+        "this is not n3 .\n",
+        "@prefix ex: <http://e/> .\nex:s ex:p ex:o ; ex:q ex:r .\n",
+        "@prefix ex: <http://e/> .\nex:s ex:p <http://e/o> , ex:o2 .\n",
+        '@prefix ex: <http://e/> .\nex:s ex:p "a" ; ex:q ex:r .\n',
+    ]
     g = _graph(spark, [("http://e/a", "http://e/p", "http://e/b")])
-    assert _spo(updated_graph(g, f"LOAD SILENT <file://{n3}>")) == _spo(g)
-    with pytest.raises(ValueError, match="cannot parse"):
-        updated_graph(g, f"LOAD <file://{n3}>")
-
     cat = ParquetCatalog(str(tmp_path / "kg"))
     execute_update(
         spark, cat, "triples",
         "INSERT DATA { <http://e/a> <http://e/p> <http://e/b> . }",
     )
     snaps = cat.snapshots("triples")
-    r = execute_update(
-        spark, cat, "triples", f"LOAD SILENT <file://{n3}>"
-    )
-    assert r == {"form": "load", "inserted": 0, "deleted": 0,
-                 "snapshot": None}
-    with pytest.raises(ValueError, match="cannot parse"):
-        execute_update(spark, cat, "triples", f"LOAD <file://{n3}>")
-    assert cat.snapshots("triples") == snaps
+    for i, text in enumerate(bad_docs):
+        n3 = tmp_path / f"bad{i}.n3"
+        n3.write_text(text)
+        assert _spo(updated_graph(g, f"LOAD SILENT <file://{n3}>")) == _spo(g)
+        with pytest.raises(ValueError, match="cannot parse"):
+            updated_graph(g, f"LOAD <file://{n3}>")
+
+        r = execute_update(
+            spark, cat, "triples", f"LOAD SILENT <file://{n3}>"
+        )
+        assert r == {"form": "load", "inserted": 0, "deleted": 0,
+                     "snapshot": None}
+        with pytest.raises(ValueError, match="cannot parse"):
+            execute_update(spark, cat, "triples", f"LOAD <file://{n3}>")
+        assert cat.snapshots("triples") == snaps

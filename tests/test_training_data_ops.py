@@ -9,6 +9,7 @@ import pytest
 
 from face_hunter_spark.operators import dedup, multimodal, similarity
 from face_hunter_spark.operators import text as T
+from face_hunter_spark.operators.linking import MATCHERS
 from tests.conftest import SF_DIR
 
 from tests.conftest import requires_testdata
@@ -248,20 +249,22 @@ def test_multimodal_plumbing(spark):
         multimodal.decode_media(media, codec="real")
 
 
-def test_lsh_score_batch_agrees_with_bruteforce(spark):
-    """The shared LSH batch scorer (used by both link_lsh_fused and the
-    fused vision stage) must agree with exact brute-force 1-NN on
-    nearly every face at default bands/rows (collision probability for
-    same-entity jitter is high)."""
-    import numpy as np
-
+@pytest.mark.parametrize("strategy", sorted(MATCHERS))
+def test_matcher_score_agrees_with_bruteforce(spark, strategy):
+    """Every broadcast-gallery matcher (linking.MATCHERS: driver build
+    -> worker prepare -> batch score, the fused vision stage's kernel)
+    must agree with exact brute-force 1-NN on nearly every face at its
+    default parameters (LSH collision probability for same-entity
+    jitter is high)."""
     from face_hunter_spark import synth
     from face_hunter_spark.operators import linking
 
     gal = synth.make_gallery_pdf(n_entities=12, thumbs_per_entity=6,
                                  distractors=2)
-    labels, mat, norms = linking._gallery_arrays(gal)
-    payload = linking.lsh_gallery_payload(gal)
+    arrays = linking._gallery_arrays(gal)
+    labels, mat, norms = arrays
+    m = MATCHERS[strategy]
+    state = m.prepare(m.build(arrays))
     rng = np.random.default_rng(7)
     # queries: jittered gallery rows (match expected) + random noise
     # vectors (unknown expected)
@@ -271,16 +274,16 @@ def test_lsh_score_batch_agrees_with_bruteforce(spark):
     q_noise = rng.standard_normal((60, mat.shape[1])).astype(np.float32)
     q = np.vstack([q_match, q_noise]).astype(np.float32)
 
-    lsh_lab, _ = linking.lsh_score_batch(q, payload, 0.6, k=1)
+    lab, _ = m.score(q, state, 0.6)
     qn = np.linalg.norm(q, axis=1)
     d = 1.0 - (q @ mat.T) / (qn[:, None] * norms[None, :])
     best = np.argmin(d, axis=1)
     brute = np.where(d[np.arange(len(q)), best] < 0.6,
                      labels[best], "unknown")
-    agree = (lsh_lab == brute).mean()
+    agree = (lab == brute).mean()
     assert agree >= 0.95, agree
     # noise queries must stay unknown under both
-    assert all(x == "unknown" for x in lsh_lab[300:])
+    assert all(x == "unknown" for x in lab[300:])
 
 
 def test_near_dup_default_warns_once(spark):
