@@ -93,10 +93,19 @@ class ParquetCatalog:
         it non-numeric: as a ``snap=<id>`` value a bare hex id such as
         ``123456789012`` or ``1234e5678901`` is typed by Spark's
         partition inference as a long or a huge-exponent decimal (the
-        latter spins a read for minutes).  Older ids read as they are."""
+        latter spins a read for minutes).  Older ids read as they are.
+
+        A partitioned write without ``sort_by`` hash-repartitions on the
+        partition columns first, so each partition value is written by
+        one task: one parquet file per partition value per snapshot
+        (append, overwrite and compact alike), not one per task that
+        happens to hold a row of it."""
         snap_id = "s" + uuid.uuid4().hex[:11]
         data_dir = os.path.join(self._tdir(table), "data", f"snap={snap_id}")
-        writer = _cluster(df, sort_by, sort_partitions).write.mode("overwrite")
+        df = _cluster(df, sort_by, sort_partitions)
+        if partition_by and not sort_by:
+            df = df.repartition(*partition_by)
+        writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
@@ -181,6 +190,10 @@ class ParquetCatalog:
         ``summary`` is extra snapshot metadata (e.g. a run's wall time)
         stored in the same manifest entry as ``run_id``, so it commits
         atomically with the data (Iceberg's snapshot summary).
+
+        ``partition_by`` lays the snapshot out Hive-style
+        (``col=value`` directories) with one parquet file per partition
+        value in this commit (see :meth:`_write_snapshot`).
 
         ``sort_by`` clusters the commit on those columns —
         repartitionByRange + sortWithinPartitions (one range exchange,

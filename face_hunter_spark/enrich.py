@@ -49,7 +49,7 @@ from pyspark.sql.types import (
 from . import fakevision as fv
 from .catalog import ParquetCatalog
 from .operators import triples as T
-from .pipeline import canonicalized_triples, commit_run, link_documents
+from .pipeline import canonicalized_once, commit_run, link_documents
 
 GALLERY_TABLE = "gallery"
 
@@ -244,19 +244,19 @@ def run_relink_job(
     # routes to the shuffle join with zero driver materialization
     gallery = load_gallery_df(spark, catalog)
 
-    full = canonicalized_triples(
+    with canonicalized_once(
         T.with_partitioning(
             link_documents(documents, gallery, entity_catalog, **kwargs),
             run_id,
         ),
         entity_catalog,
         canon,
-    )
-    if catalog.exists("triples"):
-        committed = catalog.read(spark, "triples").select(
-            "doc_id", "subj", "pred", "obj"
-        )
-        full = full.join(
-            committed, ["doc_id", "subj", "pred", "obj"], "left_anti"
-        )
-    return commit_run(catalog, full, run_id, t_start)
+    ) as full:
+        if catalog.exists("triples"):
+            committed = catalog.read(spark, "triples").select(
+                "doc_id", "subj", "pred", "obj"
+            )
+            full = full.join(
+                committed, ["doc_id", "subj", "pred", "obj"], "left_anti"
+            )
+        return commit_run(catalog, full, run_id, t_start)

@@ -39,6 +39,12 @@ from .pipeline import run_link_job
 from .schemas import ENTITY_CATALOG, NS
 
 
+#: Row budget of the flat (driver-assembled) n3 export.  Above it
+#: ``export_n3`` refuses and points at ``sharded=True``, which the
+#: executors write.
+FLAT_N3_MAX_ROWS = 1_000_000
+
+
 class SparkHunter:
     def __init__(
         self,
@@ -536,7 +542,9 @@ class SparkHunter:
         blocks written; 0 (no file) before any link() commit.
         ``sharded=True`` writes doc_bucket-partitioned part files from
         the executors instead (the 10^12-doc form — nothing assembles
-        on the driver; see rdf.export_n3_sharded)."""
+        on the driver; see rdf.export_n3_sharded).  The flat form
+        raises ValueError when the table holds more than
+        ``FLAT_N3_MAX_ROWS`` rows."""
         if not self.catalog.exists("triples"):
             return 0
         from .operators import rdf
@@ -544,6 +552,12 @@ class SparkHunter:
         triples = self.catalog.read(self.spark, "triples")
         if sharded:
             return rdf.export_n3_sharded(triples, path)
+        if triples.limit(FLAT_N3_MAX_ROWS + 1).count() > FLAT_N3_MAX_ROWS:
+            raise ValueError(
+                f"the triples table holds more than {FLAT_N3_MAX_ROWS} "
+                "rows, too many to assemble one n3 document on the "
+                "driver; use export_n3(path, sharded=True)"
+            )
         text, n_blocks = rdf.n3_document(triples)
         with open(path, "w") as f:
             f.write(text)

@@ -24,6 +24,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..schemas import NS
+
 
 def same_as_edges(entity_catalog: DataFrame) -> DataFrame:
     """(uri_a, uri_b) pairs of URIs that share a norm_name."""
@@ -262,21 +264,28 @@ def canonical_map(entity_catalog: DataFrame, max_iter: int = 20) -> DataFrame:
 
 
 def canonicalize_depicts(triples: DataFrame, canon: DataFrame) -> DataFrame:
-    """Add obj_canonical to depicts triples (broadcast map join); other
-    triples pass through with obj_canonical = obj.  The original obj is
-    preserved — the reference's DBpedia-preferred output stays visible
-    (graph.py:111-114) while queries match on the canonical id."""
-    depicts = triples.where(
-        F.col("pred").isin(
-            "http://xmlns.com/foaf/0.1/depicts", "https://schema.org/depicts"
-        )
+    """Add obj_canonical: depicts triples (foaf: and sdo:) take their
+    obj's canonical id from ``canon``; every other triple, and a
+    depicts obj the map does not know, keeps obj_canonical = obj.  The
+    original obj is preserved — the reference's DBpedia-preferred
+    output stays visible (graph.py:111-114) while queries match on the
+    canonical id.
+
+    One projection over ``triples``: a broadcast left join of the map
+    on a key that is obj for depicts rows and NULL for the rest (a
+    NULL key matches nothing), so the input plan is referenced once —
+    no split by predicate and union back, which would evaluate the
+    input's lineage twice."""
+    key = F.when(
+        F.col("pred").isin(NS["foaf_depicts"], NS["sdo_depicts"]),
+        F.col("obj"),
     )
-    rest = triples.where(
-        ~F.col("pred").isin(
-            "http://xmlns.com/foaf/0.1/depicts", "https://schema.org/depicts"
+    return (
+        triples.withColumn("_canon_key", key)
+        .join(
+            F.broadcast(canon.withColumnRenamed("uri", "_canon_key")),
+            "_canon_key", "left",
         )
+        .withColumn("obj_canonical", F.coalesce("canonical", "obj"))
+        .drop("_canon_key", "canonical")
     )
-    mapped = depicts.join(
-        F.broadcast(canon.withColumnRenamed("uri", "obj")), "obj", "left"
-    ).withColumn("obj_canonical", F.coalesce("canonical", "obj")).drop("canonical")
-    return rest.withColumn("obj_canonical", F.col("obj")).unionByName(mapped)

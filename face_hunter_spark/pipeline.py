@@ -1,20 +1,31 @@
 """The end-to-end link job (the reference's ``cli.py link`` write path,
 hunter.py:91-151) as one declarative Spark plan + one committed append.
 
-    documents ──explode/sample──► media frames
-        │                             │ mapInPandas (decode+detect+embed)
-        │                             ▼
-        │                        faces ──link (broadcast kNN)──► labels
-        │                             │ groupBy frame (ordered collect)
-        │                             ▼
-        │                    frame predictions
-        │                             │ applyInPandas per doc
-        │                             ▼
-        ├──video triples         scenes ──⋈ entity catalog──► triples
-        ▼                                                        │
-    anti-join vs existing triples (idempotent re-link) ──────────┤
-                                                                 ▼
-                 ONE bucketed snapshot append (wall_ms in its summary)
+    documents ──anti-join vs committed doc_ids (idempotent re-link)
+        │
+        ├──explode/sample──► media frames
+        │                        │ mapInPandas: decode+detect+embed+match
+        │                        ▼ (broadcast gallery matcher)
+        │                   linked faces
+        │                        │ groupBy doc (collect_list), then
+        │                        ▼ mapInPandas scene kernel
+        ├──video triples    scenes ──⋈ entity catalog──► scene triples
+        │                                                    │
+        └──[mention triples]──────── ∪ ──────────────────────┘
+                                     │ + doc_bucket, run_id
+                                     ▼
+           canonicalize depicts (one broadcast map join) ─► PERSISTED
+                                     │
+                                     ▼ ∪ doc-level (doc, sdo:depicts, QID)
+                                     │   rows derived from that copy
+                                     ▼
+         ONE snapshot append, hash-repartitioned on doc_bucket: one
+         parquet file per bucket (wall_ms in the snapshot summary)
+
+The Python stages run once per commit: the persisted canonicalized
+rows feed both the committed rows and the doc-level rows
+(:func:`canonicalized_once`), and the cache is released when the
+commit finishes.
 
 Checkpoint/resume: a run is one catalog commit.  A rerun anti-joins
 incoming doc_ids against the committed triples table (the reference's
@@ -30,6 +41,8 @@ from __future__ import annotations
 
 import time
 import uuid
+from contextlib import contextmanager
+from typing import Iterator
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -185,35 +198,71 @@ def link_documents(
     return out
 
 
+def _canonical_rows(
+    new_triples: DataFrame,
+    entity_catalog: DataFrame,
+    canon: DataFrame | None,
+) -> DataFrame:
+    from .operators.canonical import canonical_map, canonicalize_depicts
+
+    return canonicalize_depicts(
+        new_triples,
+        canon if canon is not None else canonical_map(entity_catalog),
+    )
+
+
+def _with_doc_depicts(rows: DataFrame) -> DataFrame:
+    """``rows`` plus the doc-level (doc, sdo:depicts, QID) rows derived
+    from its foaf:depicts rows, distinct per (doc, entity)."""
+    doc_depicts = (
+        rows.where(F.col("pred") == NS["foaf_depicts"])
+        .select(
+            F.split(F.col("subj"), "#t=").getItem(0).alias("subj"),
+            F.lit(NS["sdo_depicts"]).alias("pred"),
+            F.col("obj_canonical").alias("obj"),
+            *[c for c in rows.columns if c not in ("subj", "pred", "obj")],
+        )
+        .withColumn("obj_canonical", F.col("obj"))
+        .dropDuplicates(["subj", "obj"])
+    )
+    return rows.unionByName(doc_depicts)
+
+
 def canonicalized_triples(
     new_triples: DataFrame,
     entity_catalog: DataFrame,
     canon: DataFrame | None = None,
 ) -> DataFrame:
-    """north_rule materialization shape, shared by the link and relink
-    jobs: depicts rows gain obj_canonical (QID via connected components
-    over catalog same-as edges) and the doc-level
-    (doc, sdo:depicts, QID) rows are unioned in, distinct per
-    (doc, entity)."""
-    from .operators.canonical import canonical_map, canonicalize_depicts
+    """north_rule materialization shape of the link and relink jobs:
+    depicts rows gain obj_canonical (QID via connected components over
+    catalog same-as edges) and the doc-level (doc, sdo:depicts, QID)
+    rows are unioned in, distinct per (doc, entity).
 
-    new_triples = canonicalize_depicts(
-        new_triples,
-        canon if canon is not None else canonical_map(entity_catalog),
+    The result reads the canonicalized rows twice (as themselves and
+    as the doc-level rows' source), so an input that is not
+    materialized is evaluated twice; the jobs commit through
+    :func:`canonicalized_once`, which persists them."""
+    return _with_doc_depicts(
+        _canonical_rows(new_triples, entity_catalog, canon)
     )
-    doc_depicts = (
-        new_triples.where(F.col("pred") == NS["foaf_depicts"])
-        .select(
-            F.split(F.col("subj"), "#t=").getItem(0).alias("subj"),
-            F.lit(NS["sdo_depicts"]).alias("pred"),
-            F.col("obj_canonical").alias("obj"),
-            *[c for c in new_triples.columns
-              if c not in ("subj", "pred", "obj")],
-        )
-        .withColumn("obj_canonical", F.col("obj"))
-        .dropDuplicates(["subj", "obj"])
-    )
-    return new_triples.unionByName(doc_depicts)
+
+
+@contextmanager
+def canonicalized_once(
+    new_triples: DataFrame,
+    entity_catalog: DataFrame,
+    canon: DataFrame | None = None,
+) -> Iterator[DataFrame]:
+    """:func:`canonicalized_triples` whose canonicalized rows are
+    persisted, so the doc-level rows derive from that copy and one
+    commit evaluates the link lineage (and its Python stages) once.
+    The copy is released on exit.  Persisted, not localCheckpoint()ed:
+    cached blocks lost with an executor are recomputed from lineage."""
+    rows = _canonical_rows(new_triples, entity_catalog, canon).persist()
+    try:
+        yield _with_doc_depicts(rows)
+    finally:
+        rows.unpersist()
 
 
 def run_link_job(
@@ -252,15 +301,15 @@ def run_link_job(
     # doc-level (doc, sdo:depicts, QID) rows.  canon is recomputable
     # from the catalog but involves an iterative CC loop; repeated
     # callers (facade, streaming foreachBatch) pass their cached map.
-    new_triples = canonicalized_triples(
+    with canonicalized_once(
         T.with_partitioning(
             link_documents(documents, gallery_pdf, entity_catalog, **kwargs),
             run_id,
         ),
         entity_catalog,
         canon,
-    )
-    return commit_run(catalog, new_triples, run_id, t_start)
+    ) as new_triples:
+        return commit_run(catalog, new_triples, run_id, t_start)
 
 
 def commit_run(

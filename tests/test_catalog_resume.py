@@ -522,6 +522,12 @@ def test_compaction_preserves_partition_layout(spark, tmp_path):
     # layout auto-detected and preserved
     assert cat._detect_partitioning("t", new_id) == ["doc_bucket"]
     assert cat.read(spark, "t").count() == 80
+    # one parquet file per bucket in the rewritten snapshot
+    buckets = list((tmp_path / "kg/t/data" / f"snap={new_id}").glob(
+        "doc_bucket=*"))
+    assert len(buckets) == 4
+    for d in buckets:
+        assert len(list(d.glob("*.parquet"))) == 1, d
     # the killer path: another partitioned append, then a full read
     cat.append("t", batch(80, 90), "r3", partition_by=["doc_bucket"])
     got = cat.read(spark, "t")

@@ -72,6 +72,24 @@ def test_hunter_end_to_end(spark, tmp_path):
     assert parsed == want
 
 
+def test_flat_n3_export_refuses_large_tables(spark, tmp_path, monkeypatch):
+    """Above FLAT_N3_MAX_ROWS the driver-assembled export raises and
+    names the sharded form; at the limit it still writes."""
+    import pytest
+
+    from face_hunter_spark import hunter
+
+    h = SparkHunter(spark, str(tmp_path / "kg"), n_entities=N_ENT)
+    n_rows = h.link(synth.documents_df(spark, 4, N_ENT))["n_triples"]
+    out = tmp_path / "graph.n3"
+    monkeypatch.setattr(hunter, "FLAT_N3_MAX_ROWS", n_rows - 1)
+    with pytest.raises(ValueError, match="sharded=True"):
+        h.export_n3(str(out))
+    assert not out.exists()
+    monkeypatch.setattr(hunter, "FLAT_N3_MAX_ROWS", n_rows)
+    assert h.export_n3(str(out)) > 0
+
+
 def test_hunter_unknown_label_returns_none(spark, tmp_path):
     h = SparkHunter(spark, str(tmp_path / "kg"), n_entities=N_ENT)
     h.link(synth.documents_df(spark, 4, N_ENT))

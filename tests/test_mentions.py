@@ -114,16 +114,22 @@ def test_mentions_partitioning_invariance(spark):
 
 def test_pipeline_mention_labels_option(spark, tmp_path):
     """mention_labels unions sdo:mentions triples into the committed
-    table; idempotent rerun still emits nothing."""
+    table; canonicalization touches only depicts rows; idempotent
+    rerun still emits nothing."""
     from face_hunter_spark import synth
     from face_hunter_spark.catalog import ParquetCatalog
+    from face_hunter_spark.operators.canonical import canonical_map
     from face_hunter_spark.pipeline import run_link_job
+    from face_hunter_spark.schemas import NS
 
     docs = synth.documents_df(spark, 6, 6)
-    # labels drawn from the synthetic text spans' vocabulary
+    # labels drawn from the synthetic text spans' vocabulary; the last
+    # one is an entity-catalog URI whose canonical id is a QID
+    catalog_uri = synth.dbpedia_uri("Entity 002")
     labels = spark.createDataFrame(
         [("Entity 001", "http://example.org/e/1"),
-         ("entity", "http://example.org/e/any")],
+         ("entity", "http://example.org/e/any"),
+         ("Entity 002", catalog_uri)],
         "label string, uri string",
     )
     cat = ParquetCatalog(str(tmp_path / "kg"))
@@ -139,6 +145,30 @@ def test_pipeline_mention_labels_option(spark, tmp_path):
     assert stats["n_triples"] == trip.count()
     # text spans in the synth corpus mention 'Entity NNN' phrases
     assert mentions.filter(F.col("obj") == "http://example.org/e/any").count() > 0
+    # mentions are not canonicalized, even when obj is a catalog URI
+    canon = dict(map(tuple, canonical_map(ecat).collect()))
+    assert canon[catalog_uri] != catalog_uri
+    assert mentions.filter(F.col("obj") == catalog_uri).count() > 0
+    assert mentions.filter(F.col("obj_canonical") != F.col("obj")).count() == 0
+    # scene-level depicts rows (foaf: and sdo:) carry the catalog's QID
+    is_scene = F.col("subj").contains("#t=")
+    depicts = trip.filter(
+        F.col("pred").isin(NS["foaf_depicts"], NS["sdo_depicts"]) & is_scene
+    ).select("subj", "obj", "obj_canonical").collect()
+    assert depicts
+    for r in depicts:
+        assert r.obj_canonical == canon[r.obj]
+        assert r.obj_canonical.startswith("http://www.wikidata.org/")
+    # doc-level rows: one per (doc, QID) the doc's scenes depict
+    doc_rows = trip.filter(
+        (F.col("pred") == NS["sdo_depicts"]) & ~is_scene
+    ).select("subj", "obj", "obj_canonical").collect()
+    pairs = [(r.subj, r.obj) for r in doc_rows]
+    assert len(pairs) == len(set(pairs))
+    assert set(pairs) == {
+        (r.subj.split("#t=")[0], r.obj_canonical) for r in depicts
+    }
+    assert all(r.obj_canonical == r.obj for r in doc_rows)
     # idempotent rerun
     stats2 = run_link_job(
         spark, cat, docs, gal, ecat, n_entities=6, mention_labels=labels

@@ -78,18 +78,41 @@ def test_pipeline_plan_shape(spark):
             pytest.fail(f"single-partition exchange in hot path: {line}")
 
 
-def test_triples_write_partitioning(spark, tmp_path):
-    """Committed triple snapshots are physically partitioned by
-    doc_bucket (partition pruning on the read path)."""
-    import os
+def python_stages(df) -> list[str]:
+    """The Python-worker nodes (``*InPandas`` / ``*EvalPython``) of
+    ``df``'s physical plan, one entry per node.  A cached relation
+    referenced more than once is one computation, so its plan is
+    walked once."""
+    jvm = df.sparkSession._jvm
+    seen: set[int] = set()
+    found: list[str] = []
 
+    def walk(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        if name == "InMemoryTableScan":
+            builder = jvm.System.identityHashCode(
+                node.relation().cacheBuilder())
+            if builder not in seen:
+                seen.add(builder)
+                walk(node.relation().cachedPlan())
+        if "InPandas" in name or "EvalPython" in name:
+            found.append(node.simpleString(25))
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def _link_small(spark, cat):
     from face_hunter_spark import synth
-    from face_hunter_spark.catalog import ParquetCatalog
     from face_hunter_spark.pipeline import run_link_job
     from face_hunter_spark.schemas import ENTITY_CATALOG
 
-    cat = ParquetCatalog(str(tmp_path / "kg"))
-    run_link_job(
+    return run_link_job(
         spark, cat,
         synth.documents_df(spark, 20, 8),
         synth.make_gallery_pdf(n_entities=8, thumbs_per_entity=4, distractors=1),
@@ -99,10 +122,54 @@ def test_triples_write_partitioning(spark, tmp_path):
         ),
         n_entities=8,
     )
+
+
+def test_committed_frame_runs_each_python_stage_once(
+    spark, tmp_path, monkeypatch
+):
+    """The frame a link run commits evaluates its lineage once: the
+    decode+embed+link stage and the scene kernel each appear once,
+    counting the cached canonicalized rows' plan once — not once per
+    predicate split or per doc-level-row derivation."""
+    from face_hunter_spark import pipeline
+    from face_hunter_spark.catalog import ParquetCatalog
+
+    stages = {}
+    commit = pipeline.commit_run
+
+    def audit(catalog, triples, run_id, t_start):
+        stages["plan"] = python_stages(triples)
+        return commit(catalog, triples, run_id, t_start)
+
+    monkeypatch.setattr(pipeline, "commit_run", audit)
+    stats = _link_small(spark, ParquetCatalog(str(tmp_path / "kg")))
+    assert stats["n_triples"] > 0
+    found = stages["plan"]
+    assert all(s.startswith("MapInPandas") for s in found), found
+    assert len(found) == 2, found
+    assert sum("face_idx" in s for s in found) == 1  # decode+embed+link
+    assert sum("scene_idx" in s for s in found) == 1  # scene kernel
+
+
+def test_triples_write_partitioning(spark, tmp_path):
+    """Committed triple snapshots are physically partitioned by
+    doc_bucket (partition pruning on the read path), one parquet file
+    per bucket directory."""
+    import os
+
+    from face_hunter_spark.catalog import ParquetCatalog
+
+    cat = ParquetCatalog(str(tmp_path / "kg"))
+    _link_small(spark, cat)
     snap_dirs = os.listdir(str(tmp_path / "kg/triples/data"))
     assert len(snap_dirs) == 1
-    inner = os.listdir(str(tmp_path / "kg/triples/data") + "/" + snap_dirs[0])
-    assert any(d.startswith("doc_bucket=") for d in inner)
+    snap_dir = str(tmp_path / "kg/triples/data") + "/" + snap_dirs[0]
+    buckets = [d for d in os.listdir(snap_dir) if d.startswith("doc_bucket=")]
+    assert len(buckets) > 1
+    for d in buckets:
+        files = [f for f in os.listdir(os.path.join(snap_dir, d))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
     # and partition pruning: a doc_bucket filter prunes the scan
     df = cat.read(spark, "triples").where(F.col("doc_bucket") == 3)
     plan = plan_of(df)
