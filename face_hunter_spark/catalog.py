@@ -99,12 +99,18 @@ class ParquetCatalog:
         partition columns first, so each partition value is written by
         one task: one parquet file per partition value per snapshot
         (append, overwrite and compact alike), not one per task that
-        happens to hold a row of it."""
+        happens to hold a row of it.  The repartition asks for
+        ``defaultParallelism`` partitions explicitly: AQE does not
+        coalesce an explicit count, so a small commit's buckets are
+        written by every core instead of one coalesced task."""
         snap_id = "s" + uuid.uuid4().hex[:11]
         data_dir = os.path.join(self._tdir(table), "data", f"snap={snap_id}")
         df = _cluster(df, sort_by, sort_partitions)
         if partition_by and not sort_by:
-            df = df.repartition(*partition_by)
+            df = df.repartition(
+                df.sparkSession.sparkContext.defaultParallelism,
+                *partition_by,
+            )
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -193,7 +199,8 @@ class ParquetCatalog:
 
         ``partition_by`` lays the snapshot out Hive-style
         (``col=value`` directories) with one parquet file per partition
-        value in this commit (see :meth:`_write_snapshot`).
+        value in this commit, written by ``defaultParallelism`` tasks
+        (see :meth:`_write_snapshot`).
 
         ``sort_by`` clusters the commit on those columns —
         repartitionByRange + sortWithinPartitions (one range exchange,

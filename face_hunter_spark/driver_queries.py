@@ -1890,24 +1890,29 @@ def _oracle_pagerank(n_iter: int = 6, num: int = 85, den: int = 100,
     each round recomputes shares (integer DIV), in-edge contribution
     sums, dangling mass, and the damped update — the same truncating
     integer recurrence as operators/graph.pagerank, so values match
-    bit-for-bit.  Sums cast to BIGINT (DuckDB sums to HUGEINT)."""
-    parts = [f"""e AS (
+    bit-for-bit.  Sums cast to BIGINT (DuckDB sums to HUGEINT).
+
+    Every CTE is ``MATERIALIZED``: round t reads r{t-1} three times, so
+    an inlined chain re-evaluates the first rounds 3^n_iter times
+    (DuckDB ran out of memory); materializing is an evaluation hint
+    and leaves the values unchanged."""
+    parts = [f"""e AS MATERIALIZED (
   SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
   FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-vv AS (SELECT src AS v FROM e UNION SELECT dst FROM e),
-nn AS (SELECT count(*) AS n FROM vv),
-deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-r0 AS (SELECT v, ({scale} // nn.n)::BIGINT AS pr FROM vv CROSS JOIN nn)"""]
+vv AS MATERIALIZED (SELECT src AS v FROM e UNION SELECT dst FROM e),
+nn AS MATERIALIZED (SELECT count(*) AS n FROM vv),
+deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM e GROUP BY src),
+r0 AS MATERIALIZED (SELECT v, ({scale} // nn.n)::BIGINT AS pr FROM vv CROSS JOIN nn)"""]
     for t in range(1, n_iter + 1):
         p = t - 1
-        parts.append(f"""c{t} AS (
+        parts.append(f"""c{t} AS MATERIALIZED (
   SELECT e.dst AS v, sum(r{p}.pr // deg.deg)::BIGINT AS csum
   FROM e JOIN r{p} ON e.src = r{p}.v JOIN deg ON e.src = deg.src
   GROUP BY e.dst),
-d{t} AS (
+d{t} AS MATERIALIZED (
   SELECT COALESCE(sum(r{p}.pr), 0)::BIGINT AS dang
   FROM r{p} LEFT JOIN deg ON r{p}.v = deg.src WHERE deg.src IS NULL),
-r{t} AS (
+r{t} AS MATERIALIZED (
   SELECT r{p}.v,
          (((({den} - {num}) * {scale}) // {den}) // nn.n
           + ({num} * (COALESCE(c{t}.csum, 0) + d{t}.dang // nn.n)) // {den}

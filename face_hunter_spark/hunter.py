@@ -25,9 +25,19 @@ is a stateless handle over (SparkSession, catalog root) — every method
 is a distributed job or a SQL view read, so the same object serves the
 CLI, a notebook, or a request handler thread (the reference builds its
 models once per process for exactly this reason, flask_api.py:40-45).
+
+Read methods query instance-scoped temp views over the committed
+triples table.  The views are keyed on the table's snapshot ids: each
+read compares the manifest's ids with the ones it last registered and
+re-reads the table only when they differ, so repeated reads between
+commits skip the file listing and schema job.  Write methods
+(``link``, ``update``, ``import_n3``) do not register views; their new
+snapshot changes the ids, and the next read refreshes.
 """
 
 from __future__ import annotations
+
+import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -99,6 +109,11 @@ class SparkHunter:
         import uuid as _uuid
 
         self._view_suffix = "_h" + _uuid.uuid4().hex[:8]
+        # triples snapshot ids the views were last registered over; the
+        # lock keeps concurrent readers (serve.py's request threads)
+        # from leaving older views registered under newer ids
+        self._view_snaps: tuple = ()
+        self._view_lock = threading.Lock()
         # endpoint IRI -> offline snapshot triples for SERVICE{} groups
         self._services: dict = {}
         # the store's single graph URI (the reference's funnel URI,
@@ -111,7 +126,7 @@ class SparkHunter:
     def link(self, documents: DataFrame, run_id: str | None = None) -> dict:
         """hunter.py:91-151 for a whole DataFrame of docs: idempotent
         link job; returns the run stats dict."""
-        stats = run_link_job(
+        return run_link_job(
             self.spark,
             self.catalog,
             documents,
@@ -127,8 +142,6 @@ class SparkHunter:
             cache_index=self.cache_index,
             encoder=self.encoder,
         )
-        self._refresh_views()
-        return stats
 
     def video_exists(self, doc_id: str) -> bool:
         """memory_store.py:82-90 membership probe."""
@@ -147,13 +160,24 @@ class SparkHunter:
     # ------------------------------------------------------- read path
 
     def _refresh_views(self) -> None:
-        if self.catalog.exists("triples"):
-            Q.register_views(
-                self.spark,
-                self.catalog.read(self.spark, "triples"),
-                canon=self._canon,
-                suffix=self._view_suffix,
-            )
+        """Register this handle's ``triples``/``scene_view`` views over
+        the committed table, keyed on its snapshot ids: a manifest read
+        decides, and the table is re-read (file listing, schema job,
+        view planning) only when the ids differ from the ones last
+        registered — a commit through this handle, another handle on
+        the same root, a compaction.  Write methods do not call this;
+        the next read sees their snapshot and refreshes."""
+        with self._view_lock:
+            snaps = tuple(
+                s["id"] for s in self.catalog.snapshots("triples"))
+            if snaps and snaps != self._view_snaps:
+                Q.register_views(
+                    self.spark,
+                    self.catalog.read(self.spark, "triples"),
+                    canon=self._canon,
+                    suffix=self._view_suffix,
+                )
+                self._view_snaps = snaps
 
     def search(self, identifier: str) -> DataFrame | None:
         """hunter.py:153-187 / graph.py:153-192: scenes depicting a
@@ -415,14 +439,11 @@ class SparkHunter:
         (execute_update owns both paths)."""
         from .operators.sparql_update import execute_update
 
-        report = execute_update(
+        return execute_update(
             self.spark, self.catalog, "triples", text, run_id=run_id,
             graph_uri=self.graph_uri,
             services=self._services or None,
         )
-        if self.catalog.exists("triples"):
-            self._refresh_views()
-        return report
 
     def train_embeddings(self, **kwargs) -> dict | None:
         """Train TransE embeddings on this handle's committed triple
@@ -528,12 +549,7 @@ class SparkHunter:
         (sources.import_n3).  Returns the import stats dict."""
         from .sources import import_n3 as _imp
 
-        stats = _imp(
-            self.spark, self.catalog, path, sharded=sharded
-        )
-        if self.catalog.exists("triples"):
-            self._refresh_views()
-        return stats
+        return _imp(self.spark, self.catalog, path, sharded=sharded)
 
     def export_n3(self, path: str, sharded: bool = False) -> int:
         """The reference's ``commit()`` artifact (memory_store.py:48-59

@@ -19,8 +19,9 @@ hunter.py:91-151) as one declarative Spark plan + one committed append.
                                      ▼ ∪ doc-level (doc, sdo:depicts, QID)
                                      │   rows derived from that copy
                                      ▼
-         ONE snapshot append, hash-repartitioned on doc_bucket: one
-         parquet file per bucket (wall_ms in the snapshot summary)
+         ONE snapshot append, hash-repartitioned on doc_bucket into
+         defaultParallelism write tasks: one parquet file per bucket
+         (wall_ms in the snapshot summary)
 
 The Python stages run once per commit: the persisted canonicalized
 rows feed both the committed rows and the doc-level rows

@@ -34,3 +34,32 @@ requires_reference = pytest.mark.skipif(
     not os.path.exists("/root/reference/models/example_graph"),
     reason="reference checkout not present",
 )
+
+
+def run_in_job_group(spark, fn):
+    """Run ``fn()`` under a fresh Spark job group and return ``(its
+    result, jobs)``: one dict per job the group launched (``id``,
+    ``description``, ``tasks`` = task count per stage in stage-id order,
+    so a job's result stage comes last)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = "group-" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    jobs = []
+    for j in sorted(tracker.getJobIdsForGroup(group)):
+        desc = store.job(j).description()
+        stages = [tracker.getStageInfo(s)
+                  for s in sorted(tracker.getJobInfo(j).stageIds)]
+        jobs.append({
+            "id": j,
+            "description": desc.get() if desc.isDefined() else "",
+            "tasks": [s.numTasks for s in stages if s is not None],
+        })
+    return result, jobs

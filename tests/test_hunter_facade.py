@@ -5,6 +5,8 @@ import pyspark.sql.functions as F
 
 from face_hunter_spark import synth
 from face_hunter_spark.hunter import SparkHunter
+from face_hunter_spark.schemas import NS
+from tests.conftest import run_in_job_group
 
 N_ENT = 10
 
@@ -171,3 +173,59 @@ def test_construct_validate_stats_facade(spark, tmp_path):
     pp = {r.pred: r.n_triples for r in h.stats().collect()}
     assert pp[NS["hunter_has_scene"]] > 0
     assert sum(pp.values()) == h.catalog.read(spark, "triples").count()
+
+
+_VIDEOS = (
+    f"SELECT ?v WHERE {{ ?v <{NS['rdf_type']}> <{NS['mpeg7_video']}> }}"
+)
+
+
+def test_views_refresh_only_when_the_table_changes(spark, tmp_path):
+    """A link does not re-read the table it wrote (no file-listing job),
+    and a second read with no commit in between reuses the registered
+    views: it runs only its own query job."""
+    h = SparkHunter(spark, str(tmp_path / "kg"), n_entities=N_ENT)
+    # list every multi-path read in parallel, so a re-read of the
+    # committed table shows up as a "Listing leaf files" job
+    spark.conf.set(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold", "1")
+    try:
+        stats, jobs = run_in_job_group(
+            spark, lambda: h.link(synth.documents_df(spark, 8, N_ENT)))
+        assert stats["n_docs"] == 8
+        assert not [j for j in jobs
+                    if j["description"].startswith("Listing leaf files")]
+        first, _ = run_in_job_group(
+            spark, lambda: h.sparql(_VIDEOS).collect())
+        second, jobs = run_in_job_group(
+            spark, lambda: h.sparql(_VIDEOS).collect())
+    finally:
+        spark.conf.unset(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold")
+    assert len(first) == 8 and sorted(second) == sorted(first)
+    assert len(jobs) == 1, jobs
+
+
+def test_views_see_every_writer(spark, tmp_path):
+    """Views are keyed on the table's snapshot ids, so a read sees rows
+    committed by another handle on the same root, by update() and by
+    import_n3() — none of which registers this handle's views."""
+    root = str(tmp_path / "kg")
+    h = SparkHunter(spark, root, n_entities=N_ENT)
+    h.link(synth.documents_df(spark, 6, N_ENT))
+    assert h.sparql(_VIDEOS).count() == 6
+
+    other = SparkHunter(spark, root, n_entities=N_ENT)
+    assert other.link(synth.documents_df(spark, 9, N_ENT))["n_docs"] == 3
+    assert h.sparql(_VIDEOS).count() == 9
+
+    probe = "SELECT ?o WHERE { <http://e/s> <http://e/p> ?o }"
+    assert h.sparql(probe).count() == 0
+    h.update('INSERT DATA { <http://e/s> <http://e/p> "from-update" . }')
+    assert {r.o for r in h.sparql(probe).collect()} == {"from-update"}
+    n3 = tmp_path / "more.n3"
+    n3.write_text('<http://e/s> <http://e/p> "from-import" .\n')
+    assert h.import_n3(str(n3))["inserted"] == 1
+    assert {r.o for r in h.sparql(probe).collect()} == {
+        "from-update", "from-import"}
+

@@ -7,7 +7,7 @@ single-partition exchanges."""
 import pyspark.sql.functions as F
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, run_in_job_group
 
 from tests.conftest import requires_testdata
 
@@ -154,13 +154,17 @@ def test_committed_frame_runs_each_python_stage_once(
 def test_triples_write_partitioning(spark, tmp_path):
     """Committed triple snapshots are physically partitioned by
     doc_bucket (partition pruning on the read path), one parquet file
-    per bucket directory."""
+    per bucket directory, written by defaultParallelism tasks — AQE
+    does not coalesce the write of a small multi-bucket append to one
+    task."""
     import os
 
     from face_hunter_spark.catalog import ParquetCatalog
 
     cat = ParquetCatalog(str(tmp_path / "kg"))
-    _link_small(spark, cat)
+    _, jobs = run_in_job_group(spark, lambda: _link_small(spark, cat))
+    # the append's write is the run's last job; its result stage last
+    assert jobs[-1]["tasks"][-1] == spark.sparkContext.defaultParallelism
     snap_dirs = os.listdir(str(tmp_path / "kg/triples/data"))
     assert len(snap_dirs) == 1
     snap_dir = str(tmp_path / "kg/triples/data") + "/" + snap_dirs[0]
