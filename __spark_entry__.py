@@ -117,10 +117,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _q_scene_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quirk-faithful sequential scene smoothing on frame predictions
-    derived from the events table (deterministic).  Packed physical
-    form: one collect_list shuffle + mapInPandas (tested equal to the
-    applyInPandas form, minus its per-group pandas setup cost)."""
-    from face_hunter_spark.operators.scenes import extract_scenes_packed as extract_scenes
+    derived from the events table (deterministic), through the link
+    pipeline's scene form: each frame's labels exploded to face rows
+    (an empty frame becomes one row with NULL face_idx), then one
+    collect_list shuffle + mapInPandas kernel pass per doc."""
+    from face_hunter_spark.operators.scenes import extract_scenes_from_faces
 
     DQ.load_views(spark, sf_dir)
     preds = spark.sql("""
@@ -133,7 +134,11 @@ def _q_scene_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ELSE array(event_type) END AS labels
         FROM events
     """)
-    return extract_scenes(preds, frame_threshold=3).select(
+    faces = preds.select(
+        "doc_id", "frame_no", "ts_ms",
+        F.posexplode_outer("labels").alias("face_idx", "label"),
+    )
+    return extract_scenes_from_faces(faces, frame_threshold=3).select(
         "doc_id", "scene_idx",
         F.concat_ws(",", "entities").alias("entities"),
         "start_ms", "end_ms",

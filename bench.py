@@ -59,20 +59,19 @@ def kg_pipeline_lsh_df(spark, sf_dir):
     import __spark_entry__ as em
     from face_hunter_spark import synth
     from face_hunter_spark.pipeline import link_documents
-    from face_hunter_spark.schemas import ENTITY_CATALOG, GALLERY
+    from face_hunter_spark.schemas import ENTITY_CATALOG
 
     docs = em._interleaved_documents(spark, sf_dir)
     gallery_pdf = synth.make_gallery_pdf(
         n_entities=em.N_ENTITIES, thumbs_per_entity=8, distractors=3
     )
-    gallery_df = spark.createDataFrame(gallery_pdf, GALLERY)
     catalog = spark.createDataFrame(
         synth.make_entity_catalog_pdf(n_entities=em.N_ENTITIES, distractors=3),
         ENTITY_CATALOG,
     )
     return link_documents(
         docs, gallery_pdf, catalog, n_entities=em.N_ENTITIES,
-        strategy="lsh", gallery_df=gallery_df,
+        strategy="lsh",
     )
 
 

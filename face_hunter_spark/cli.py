@@ -234,7 +234,7 @@ def build_parser() -> argparse.ArgumentParser:
     link.add_argument("--documents", required=True,
                       help="parquet path of interleaved documents")
     link.add_argument("--strategy", default="bruteforce",
-                      choices=["bruteforce", "lsh", "hnsw", "lsh_shuffle"])
+                      choices=["bruteforce", "lsh", "hnsw"])
     link.add_argument("--distance-threshold", type=float, default=0.6)
     link.add_argument("--one-face", action="store_true")
     link.add_argument("--run-id", default=None)

@@ -25,16 +25,14 @@ decode+embed stage, so embeddings never cross the Arrow boundary.
   2 x ``hnsw.SHARD_ROWS`` rows, executor-parallel shards above);
   workers adopt the finished graph.
 
-``link_lsh`` is the relational form for galleries beyond the
-broadcast budget (``strategy='lsh_shuffle'``): band signatures on both
-sides, equi-join on the bucket, exact cosine within candidates, top-k
-window prune, majority vote — bounded shuffle because each mention
-lands in exactly ``bands`` buckets.
-
-The majority vote implements the reference's *intended* semantics
-(count votes among thresholded neighbors, ties -> nearest neighbor
-first), fixing quirk §2.12.3 (the reference always votes the first
-neighbor); identical behavior at the default k=1.
+``link_lsh`` is the shuffle-side form for galleries beyond the
+broadcast budget (``pipeline.link_documents`` routes to it by gallery
+size): band signatures on both sides, a cogroup on the band bucket
+running one GEMM per bucket, and one ``min(struct(distance,
+gallery_id, label))`` per face — the reference's 1-NN lookup
+(SURVEY §2.12.3: its vote always takes the first neighbour), with a
+shuffle bounded because each mention lands in exactly ``bands``
+buckets.
 """
 
 from __future__ import annotations
@@ -44,7 +42,7 @@ from typing import Callable, NamedTuple
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -114,22 +112,6 @@ def lsh_signature_udf(bands: int, rows_per_band: int, dim: int = 512):
     return sig
 
 
-def _pair_cosine_distance(emb_col, gemb_col):
-    """1 - cos(a, b) per candidate pair, one BLAS batch per Arrow
-    batch (float64 accumulation, float32 result).  The pandas_udf is
-    wrapped at CALL time — decorating at module import would need an
-    active SparkSession before one exists."""
-
-    def kernel(emb: pd.Series, gemb: pd.Series) -> pd.Series:
-        a = np.stack(emb.to_numpy()).astype(np.float64)
-        b = np.stack(gemb.to_numpy()).astype(np.float64)
-        dot = np.einsum("ij,ij->i", a, b)
-        norms = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
-        return pd.Series((1.0 - dot / norms).astype(np.float32))
-
-    return F.pandas_udf(kernel, "float")(emb_col, gemb_col)
-
-
 _BUCKET_CAND = StructType(
     [
         StructField("doc_id", StringType(), False),
@@ -143,15 +125,12 @@ _BUCKET_CAND = StructType(
 )
 
 
-def _bucket_gemm_candidates(
-    mention: DataFrame, gal: DataFrame, k: int
-) -> DataFrame:
+def _bucket_gemm_candidates(mention: DataFrame, gal: DataFrame) -> DataFrame:
     """Per-bucket candidate generation as one GEMM per bucket group
     (cogroup on the band bucket): distances for every mention x
     gallery pair sharing the bucket computed in a single numpy matmul
-    (float64, float32 result — same rounding as the pairwise kernel),
-    cut to each mention's in-bucket top-k by (distance, gallery_id)
-    before anything ships.
+    (float64, float32 result), cut to each mention's in-bucket nearest
+    by (distance, gallery_id) before anything ships.
 
     Scale sizing: a bucket's gallery slice must fit the kernel's
     matrix (rows x 512 floats).  Bucket count per band is
@@ -159,13 +138,15 @@ def _bucket_gemm_candidates(
     to keep slices at ~10^4-10^5 rows (24 bits = 16M buckets covers a
     10^9-row gallery at ~60 rows each); recall follows bands, cost
     follows slice size."""
-    topk = max(int(k), 1)
 
     def kernel(m_pdf: pd.DataFrame, g_pdf: pd.DataFrame) -> pd.DataFrame:
         if m_pdf.empty or g_pdf.empty:
             return pd.DataFrame(
                 columns=[f.name for f in _BUCKET_CAND.fields]
             )
+        # ascending gallery_id: argmin's first-occurrence rule then
+        # breaks distance ties towards the lowest id
+        g_pdf = g_pdf.sort_values("gallery_id")
         M = np.stack(m_pdf["embedding"].to_numpy()).astype(np.float64)
         G = np.stack(g_pdf["g_embedding"].to_numpy()).astype(np.float64)
         sims = M @ G.T
@@ -177,22 +158,18 @@ def _bucket_gemm_candidates(
                 * np.linalg.norm(G, axis=1)[None, :]
             )
         ).astype(np.float32)
-        gid = g_pdf["gallery_id"].to_numpy()
-        n_keep = min(topk, dist.shape[1])
-        # per-mention top-k by (distance, gallery_id) — the same order
-        # the global rank window uses
-        order = np.lexsort((gid[None, :].repeat(len(M), 0), dist), axis=1)
-        keep = order[:, :n_keep]
-        rows = {
-            "doc_id": m_pdf["doc_id"].to_numpy().repeat(n_keep),
-            "frame_no": m_pdf["frame_no"].to_numpy().repeat(n_keep),
-            "ts_ms": m_pdf["ts_ms"].to_numpy().repeat(n_keep),
-            "face_idx": m_pdf["face_idx"].to_numpy().repeat(n_keep),
-            "gallery_id": gid[keep].ravel(),
-            "g_label": g_pdf["g_label"].to_numpy()[keep].ravel(),
-            "distance": np.take_along_axis(dist, keep, 1).ravel(),
-        }
-        return pd.DataFrame(rows)
+        # a NaN distance (zero-norm vector) ranks last, as in Spark's
+        # ordering of the per-face minimum
+        best = np.where(np.isnan(dist), np.inf, dist).argmin(axis=1)
+        return pd.DataFrame({
+            "doc_id": m_pdf["doc_id"].to_numpy(),
+            "frame_no": m_pdf["frame_no"].to_numpy(),
+            "ts_ms": m_pdf["ts_ms"].to_numpy(),
+            "face_idx": m_pdf["face_idx"].to_numpy(),
+            "gallery_id": g_pdf["gallery_id"].to_numpy()[best],
+            "g_label": g_pdf["g_label"].to_numpy()[best],
+            "distance": dist[np.arange(len(best)), best],
+        })
 
     return (
         mention.groupBy("bucket")
@@ -205,30 +182,23 @@ def link_lsh(
     faces: DataFrame,
     gallery: DataFrame,
     distance_threshold: float = 0.6,
-    k: int = 1,
     bands: int = 8,
     rows_per_band: int = 6,
-    broadcast_gallery: bool = True,
 ) -> DataFrame:
-    """Approximate kNN entity linking as a relational plan:
+    """Approximate 1-NN entity linking as a shuffle-side plan, for
+    galleries too large to broadcast:
 
-    mentions --sig--> explode(band buckets) --join(bucket)--> gallery
-    buckets --cosine--> window top-k --vote--> label.
+    mentions --sig--> explode(band buckets) --cogroup(bucket)--> gallery
+    buckets --GEMM, in-bucket nearest--> min per face --threshold--> label.
 
-    The per-pair cosine runs in an Arrow-vectorized pandas UDF (one
-    BLAS batch per Arrow batch) — the earlier interpreted
-    zip_with/aggregate form evaluated a 512-element fold per candidate
-    pair Catalyst-side and dominated the route's wall time.  The only
-    other Python stage is the signature matmul.
-
-    ``broadcast_gallery=True`` (default) hints the exploded gallery
-    side for a broadcast hash join — right while the gallery fits an
-    executor.  ``False`` is the BEYOND-broadcast form: a plain bucket
-    equi-join, so Catalyst/AQE picks a shuffled hash join partitioned
-    on the band bucket — both sides stream, nothing is collected or
-    replicated, and a 10^8-row gallery costs one bounded shuffle of
-    (bucket, id, embedding) rows.  pipeline.link_documents flips this
-    automatically past its broadcast budget.
+    Both sides stream through one shuffle on the band bucket; nothing
+    is collected or replicated, so a 10^8-row gallery costs one bounded
+    shuffle of (bucket, id, embedding) rows.  Embeddings cross the wire
+    once per band and only (face key, gallery_id, distance) scalars
+    leave the GEMM stage.  A face's global nearest is the nearest
+    inside every bucket holding it, so the per-face minimum over the
+    in-bucket winners is exact over the candidate set; distance ties
+    go to the lowest ``gallery_id``.
     """
     sig = lsh_signature_udf(bands, rows_per_band)
 
@@ -253,75 +223,19 @@ def link_lsh(
         F.col("embedding").alias("g_embedding"),
         F.explode(sig("embedding")).alias("bucket"),
     )
-
-    if broadcast_gallery:
-        # small-gallery form: broadcast hash join on the bucket, then
-        # one Arrow-vectorized per-pair distance (float64 einsum per
-        # batch, float32 result) — kept as the reference shape the
-        # shuffle form is equality-tested against
-        cand = (
-            mention.join(F.broadcast(gal), "bucket")
-            .withColumn(
-                "distance",
-                _pair_cosine_distance("embedding", "g_embedding"),
-            )
-            .select(
-                "doc_id", "frame_no", "ts_ms", "face_idx",
-                "gallery_id", "g_label", "distance",
-            )
-        )
-    else:
-        # BEYOND-broadcast form: cogroup both sides by bucket and run
-        # ONE numpy GEMM per bucket instead of materializing the
-        # mention x gallery-bucket pair rows (each carrying two
-        # 512-float arrays) — embeddings cross the wire once per band
-        # and only (face key, gallery_id, distance) scalars leave the
-        # stage.  The kernel also cuts to the per-bucket top-k by
-        # (distance, gallery_id): a pair in the GLOBAL top-k of its
-        # face ranks at least as high inside every bucket containing
-        # it, so the union of per-bucket top-ks is a superset of the
-        # global top-k — the later window prune still sees everything
-        # it needs while per-bucket losers never ship.
-        cand = _bucket_gemm_candidates(mention, gal, k)
-    # ONE shuffle clusters the scalar candidate rows by face: hash
-    # partitioning on (doc_id, frame_no, face_idx) satisfies every
-    # downstream requirement — the cross-bucket pair dedup (its group
-    # key is a superset), both rank windows, and the vote aggregate
-    cand = (
-        cand.repartition("doc_id", "frame_no", "face_idx")
-        .dropDuplicates(["doc_id", "frame_no", "face_idx", "gallery_id"])
-    )
-
-    w = Window.partitionBy("doc_id", "frame_no", "face_idx").orderBy(
-        "distance", "gallery_id"
-    )
-    topk = cand.withColumn("nn_rank", F.row_number().over(w)).where(
-        F.col("nn_rank") <= k
-    )
-
-    # majority vote among thresholded neighbors; ties -> nearest first
-    votes = (
-        topk.where(F.col("distance") < distance_threshold)
-        .groupBy("doc_id", "frame_no", "ts_ms", "face_idx", "g_label")
-        .agg(F.count(F.lit(1)).alias("n_votes"), F.min("nn_rank").alias("best_rank"))
-    )
-    wv = Window.partitionBy("doc_id", "frame_no", "face_idx").orderBy(
-        F.desc("n_votes"), "best_rank"
-    )
-    voted = (
-        votes.withColumn("vr", F.row_number().over(wv))
-        .where(F.col("vr") == 1)
-        .select(
-            "doc_id", "frame_no", "ts_ms", "face_idx",
-            F.col("g_label").alias("label"),
-        )
+    key = ["doc_id", "frame_no", "ts_ms", "face_idx"]
+    best = (
+        _bucket_gemm_candidates(mention, gal)
+        .groupBy(*key)
+        .agg(F.min(F.struct("distance", "gallery_id", "g_label")).alias("nn"))
+        .where(F.col("nn.distance") < distance_threshold)
+        .select(*key, F.col("nn.g_label").alias("label"))
     )
 
     # faces with no surviving candidate -> 'unknown'; empty frames pass
     # through with NULL label (same contract as detect_embed_link)
-    base = faces.select("doc_id", "frame_no", "ts_ms", "face_idx")
     return (
-        base.join(voted, ["doc_id", "frame_no", "ts_ms", "face_idx"], "left")
+        faces.select(*key).join(best, key, "left")
         .withColumn(
             "label",
             F.when(F.col("face_idx").isNull(), F.lit(None)).otherwise(

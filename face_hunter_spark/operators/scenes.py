@@ -2,7 +2,7 @@
 (src/postprocessing/graph_postprocessing.py:8-59) re-expressed for
 Spark.
 
-Two implementations:
+One form per semantics:
 
 1. ``extract_scenes_kernel`` — a faithful re-implementation of the
    reference semantics *including its quirks* (SURVEY.md §2.12.1-2),
@@ -21,11 +21,11 @@ Two implementations:
      * scene end is backdated to ``ts[frame - threshold + 1]``; an
        open scene at the last frame closes at ``ts[last]``; a scene
        that closes AND restarts on the last frame is dropped.
-   Scales out via ``applyInPandas(groupBy(doc_id))``: the algorithm is
-   inherently sequential per video (loop-carried scene state), but
-   videos are independent — at 10^12 docs the parallelism unit is the
-   document, and each group is tiny (frames per doc), so this is a
-   single shuffle by doc_id and embarrassingly parallel after that.
+   ``extract_scenes_from_faces`` scales it out: the algorithm is
+   sequential per video (loop-carried scene state), but videos are
+   independent, so one shuffle packs each doc's face rows into a row
+   and a ``mapInPandas`` stage runs the kernel over Arrow batches of
+   whole docs.  This is the link pipeline's form.
 
 2. ``scenes_gaps_and_islands`` — the idiomatic Spark-native variant
    (lag + change-flag + running-sum island id).  Pure built-in
@@ -37,9 +37,8 @@ Two implementations:
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Iterable, Iterator
 
-import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
@@ -113,69 +112,15 @@ def extract_scenes_kernel(
     return scenes
 
 
-def _scenes_one_doc(pdf: pd.DataFrame, frame_threshold: int) -> pd.DataFrame:
-    pdf = pdf.sort_values(["ts_ms", "frame_no"], kind="mergesort")
-    doc_id = pdf["doc_id"].iloc[0]
-    labels_seq = [list(x) for x in pdf["labels"]]
-    ts = pdf["ts_ms"].tolist()
-    found = extract_scenes_kernel(labels_seq, ts, frame_threshold)
-    # explicit dtypes: an empty group would otherwise default entities
-    # to float64, which pyarrow can't cast to list<string>
-    return pd.DataFrame(
-        {
-            "doc_id": pd.Series([doc_id] * len(found), dtype=object),
-            "scene_idx": np.arange(len(found), dtype=np.int32),
-            "entities": pd.Series([names for names, _, _ in found], dtype=object),
-            "start_ms": np.array([s for _, s, _ in found], dtype=np.float64),
-            "end_ms": np.array([e for _, _, e in found], dtype=np.float64),
-        }
-    )
-
-
-def extract_scenes(
-    frame_predictions: DataFrame, frame_threshold: int = 3
-) -> DataFrame:
-    """Distributed scene extraction: one sequential pass per doc_id via
-    applyInPandas.  Input: FRAME_PREDICTIONS; output: SCENES.
-
-    Scale note: this is the only per-doc sequential stage; it induces
-    exactly one hash shuffle on doc_id (and Catalyst reuses that
-    partitioning if mentions were already grouped by doc).  Per-group
-    state is O(frames_per_doc) — no skew risk since docs are bounded.
-    """
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _scenes_one_doc(pdf, frame_threshold)
-
-    return frame_predictions.groupBy("doc_id").applyInPandas(fn, schema=SCENES)
-
-
-def _scenes_out_pdf(out_doc, out_idx, out_ents, out_s, out_e) -> pd.DataFrame:
-    """Shared SCENES-schema batch assembly for the packed mapInPandas
-    stages (explicit dtypes: empty batches must not infer float64 for
-    the list<string> column)."""
-    return pd.DataFrame(
-        {
-            "doc_id": pd.Series(out_doc, dtype=object),
-            "scene_idx": pd.array(out_idx, dtype="int32"),
-            "entities": pd.Series(out_ents, dtype=object),
-            "start_ms": pd.array(out_s, dtype="float64"),
-            "end_ms": pd.array(out_e, dtype="float64"),
-        }
-    )
-
-
 def extract_scenes_from_faces(
     linked_faces: DataFrame, frame_threshold: int = 3
 ) -> DataFrame:
-    """Fused frame-assembly + scene extraction: one shuffle on doc_id
-    instead of two (groupBy frame THEN groupBy doc).  Input: linked
-    face rows (doc_id, frame_no, ts_ms, face_idx, label) with NULL
-    face_idx marking empty frames.  At 10^12 docs this halves the
-    shuffle bytes of the post-linking path; same output as
-    assemble_frame_predictions |> extract_scenes (tested equal)."""
-
-    from typing import Iterator
+    """Frame assembly + scene extraction in one doc_id shuffle.  Input:
+    linked face rows (doc_id, frame_no, ts_ms, face_idx, label) with
+    NULL face_idx marking empty frames; output: SCENES.  Each frame's
+    labels are ordered by face_idx (detector output order), frames by
+    (ts_ms, frame_no), and every doc runs through
+    :func:`extract_scenes_kernel`."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -201,9 +146,17 @@ def extract_scenes_from_faces(
                     out_ents.append(names)
                     out_s.append(s)
                     out_e.append(e)
-            yield _scenes_out_pdf(out_doc, out_idx, out_ents, out_s, out_e)
-
-    import pyspark.sql.functions as F2
+            # explicit dtypes: an empty batch must not infer float64 for
+            # the list<string> column
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(out_doc, dtype=object),
+                    "scene_idx": pd.array(out_idx, dtype="int32"),
+                    "entities": pd.Series(out_ents, dtype=object),
+                    "start_ms": pd.array(out_s, dtype="float64"),
+                    "end_ms": pd.array(out_e, dtype="float64"),
+                }
+            )
 
     from .util import ensure_parallelism
 
@@ -216,8 +169,8 @@ def extract_scenes_from_faces(
     packed = (
         linked_faces.groupBy("doc_id")
         .agg(
-            F2.collect_list(
-                F2.struct("ts_ms", "frame_no", "face_idx", "label")
+            F.collect_list(
+                F.struct("ts_ms", "frame_no", "face_idx", "label")
             ).alias("rows")
         )
     )
@@ -261,44 +214,3 @@ def scenes_gaps_and_islands(frame_predictions: DataFrame) -> DataFrame:
             "n_frames",
         )
     )
-
-def extract_scenes_packed(
-    frame_predictions: DataFrame, frame_threshold: int = 3
-) -> DataFrame:
-    """Same semantics as ``extract_scenes`` (quirk-faithful kernel),
-    different physical shape: ONE JVM collect_list shuffle packs each
-    doc into a row, then a single ``mapInPandas`` stage streams Arrow
-    batches of whole docs.  applyInPandas pays per-group pandas setup
-    (~ms/group — dominant when docs are small and numerous); the packed
-    form amortizes it across a batch.  Tested equal to extract_scenes.
-    """
-    from typing import Iterator
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_idx, out_ents, out_s, out_e = [], [], [], [], []
-            for doc_id, rows in zip(pdf["doc_id"], pdf["rows"]):
-                seq = sorted(rows, key=lambda r: (r["ts_ms"], r["frame_no"]))
-                labels_seq = [list(r["labels"]) for r in seq]
-                ts_seq = [r["ts_ms"] for r in seq]
-                found = extract_scenes_kernel(
-                    labels_seq, ts_seq, frame_threshold
-                )
-                for i, (names, s, e) in enumerate(found):
-                    out_doc.append(doc_id)
-                    out_idx.append(i)
-                    out_ents.append(names)
-                    out_s.append(s)
-                    out_e.append(e)
-            yield _scenes_out_pdf(out_doc, out_idx, out_ents, out_s, out_e)
-
-    from .util import ensure_parallelism
-
-    packed = frame_predictions.groupBy("doc_id").agg(
-        F.collect_list(F.struct("ts_ms", "frame_no", "labels")).alias("rows")
-    )
-    # the packed rows are few and small, so AQE coalesces the shuffle
-    # to 1-2 partitions — which would serialize the Python kernel onto
-    # 1-2 cores; an explicit-count repartition is exempt from AQE
-    # coalescing and spreads the per-doc work across the cluster
-    return ensure_parallelism(packed, factor=1).mapInPandas(fn, schema=SCENES)

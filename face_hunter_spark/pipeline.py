@@ -58,50 +58,33 @@ from .schemas import NS
 #: ~1 GB broadcast — comfortably inside one executor, far under
 #: Spark's 8 GB broadcast hard cap, and already 5-50x the reference's
 #: whole-gallery scale.  Above it the driver .toPandas() collect and
-#: the per-executor replica both stop being sane, so linking routes to
-#: the bucketed shuffle join instead (strategy='lsh_shuffle',
-#: broadcast_gallery=False) without any driver materialization.
+#: the per-executor replica both stop being sane, so a Spark gallery
+#: that large links through the shuffle-side ``linking.link_lsh``
+#: instead, without any driver materialization.
 GALLERY_BROADCAST_BUDGET_ROWS = 500_000
 
 
-def _route_gallery(gallery, strategy: str, budget_rows: int):
-    """Gallery input normalization + size-based strategy routing.
+def _route_gallery(gallery, budget_rows: int):
+    """Size-based gallery routing: ``(gallery_pdf, gallery_df)`` with
+    exactly one of them set.
 
     ``gallery`` may be the classic pandas frame (the reference's
     labels/embeddings pickles fit trivially) or a Spark DataFrame
     (catalog-backed galleries of any size).  A Spark gallery is
-    COUNTED (one cheap dim-scan job) before anything is collected:
-    at or under ``budget_rows`` it collects to the ordered pandas
-    frame the broadcast strategies consume; over budget the strategy
-    is overridden to the shuffle join and the gallery never touches
-    the driver.  Returns (strategy, gallery_pdf, gallery_df,
-    broadcast_gallery)."""
+    COUNTED (one cheap dim-scan job) before anything is collected: at
+    or under ``budget_rows`` it collects to the ordered pandas frame
+    the broadcast matchers consume; over budget it stays a DataFrame
+    for the shuffle-side join and never touches the driver."""
     if not isinstance(gallery, DataFrame):
-        if strategy == "lsh_shuffle":
-            # pandas gallery + explicit shuffle strategy (facade/CLI):
-            # lift it to a DataFrame; small by definition, so the
-            # broadcast hint stays on
-            from pyspark.sql import SparkSession
-
-            from .schemas import GALLERY
-
-            spark = SparkSession.getActiveSession()
-            cols = [f.name for f in GALLERY.fields]
-            return strategy, None, spark.createDataFrame(
-                gallery[cols], GALLERY
-            ), True
-        return strategy, gallery, None, True
-    if strategy == "lsh_shuffle":
-        return strategy, None, gallery, True
-    n = gallery.count()
-    if n > budget_rows:
-        return "lsh_shuffle", None, gallery, False
+        return gallery, None
+    if gallery.count() > budget_rows:
+        return None, gallery
     pdf = (
         gallery.select("gallery_id", "label", "entity_uri", "embedding")
         .orderBy("gallery_id")
         .toPandas()
     )
-    return strategy, pdf, None, True
+    return pdf, None
 
 
 def link_documents(
@@ -113,7 +96,6 @@ def link_documents(
     sample_every: int = 1,
     n_entities: int = 54,
     strategy: str = "bruteforce",
-    gallery_df: DataFrame | None = None,
     one_face: bool = False,
     encoder: str = "hash",
     mention_labels: DataFrame | None = None,
@@ -123,50 +105,47 @@ def link_documents(
 ) -> DataFrame:
     """documents -> un-partitioned triples DataFrame (pure transform).
 
-    ``one_face`` links only the largest detected face per frame (the
-    reference's one_face mode, face_recognition.py:367-371); ``encoder``
-    names a registered production encoder (vision.register_encoder),
-    default the deterministic test encoder; ``mention_labels`` (a
-    (label, uri) dim table) additionally links entity labels in the
-    TEXT spans and unions (doc, sdo:mentions, entity) triples into the
-    output (operators/mentions.py) — the interleaved corpus's text
-    side, off by default for reference parity.
+    ``strategy`` names a broadcast matcher (``linking.MATCHERS``);
+    anything else raises ``ValueError`` before any work.  ``one_face``
+    links only the largest detected face per frame (the reference's
+    one_face mode, face_recognition.py:367-371); ``encoder`` names a
+    registered production encoder (vision.register_encoder), default
+    the deterministic test encoder; ``mention_labels`` (a (label, uri)
+    dim table) additionally links entity labels in the TEXT spans and
+    unions (doc, sdo:mentions, entity) triples into the output
+    (operators/mentions.py) — the interleaved corpus's text side, off
+    by default for reference parity.
 
     ``gallery_pdf`` also accepts a Spark DataFrame: galleries at or
     under ``broadcast_budget_rows`` collect to the ordered pandas
-    frame the broadcast strategies need; larger ones auto-route to the
-    bucketed shuffle join (``strategy='lsh_shuffle'`` with no broadcast
-    hint) so the gallery NEVER materializes on the driver or inside an
-    executor replica — the 10^8-face-gallery path."""
+    frame the broadcast matcher needs; larger ones link through the
+    shuffle-side ``linking.link_lsh`` whatever ``strategy`` names, so
+    the gallery NEVER materializes on the driver or inside an executor
+    replica — the 10^8-face-gallery path."""
     from .operators import vision
     from .operators.util import ensure_parallelism
 
-    if strategy == "lsh_shuffle" and gallery_df is not None:
-        # explicit classic API: caller supplied the shuffle-side frame
-        bc_gal = True
-    else:
-        strategy, gallery_pdf, routed_df, bc_gal = _route_gallery(
-            gallery_pdf, strategy, broadcast_budget_rows
+    if strategy not in linking.MATCHERS:
+        raise ValueError(
+            f"unknown strategy {strategy!r}; expected one of "
+            f"{sorted(linking.MATCHERS)}"
         )
-        if routed_df is not None:
-            gallery_df = routed_df
+    gallery_pdf, gallery_df = _route_gallery(
+        gallery_pdf, broadcast_budget_rows
+    )
 
     # fan the frame rows out BEFORE the Python stage: a narrow parquet
     # scan otherwise pins the decode/embed UDF to 1-2 tasks
     media = ensure_parallelism(
         spans.media_frames(documents, sample_every=sample_every), by="doc_id"
     )
-    if strategy == "lsh_shuffle":
-        # relational candidate join — the beyond-broadcast-gallery form
-        assert gallery_df is not None
+    if gallery_df is not None:
+        # over-budget gallery: the shuffle-side LSH join
         faces = vision.detect_embed_faces(
             media, n_entities=n_entities, one_face=one_face,
             encoder=encoder,
         )
-        linked = linking.link_lsh(
-            faces, gallery_df, distance_threshold,
-            broadcast_gallery=bc_gal,
-        )
+        linked = linking.link_lsh(faces, gallery_df, distance_threshold)
     else:
         # broadcast-gallery matcher (linking.MATCHERS): the payload is
         # built once on the driver side — or served from
@@ -183,9 +162,7 @@ def link_documents(
             distance_threshold, n_entities=n_entities, matcher=strategy,
             one_face=one_face, encoder=encoder,
         )
-    # fused path: frame assembly + scene smoothing in ONE doc_id
-    # shuffle (equivalent to assemble_frame_predictions |>
-    # extract_scenes — parity-tested)
+    # frame assembly + scene smoothing in ONE doc_id shuffle
     scn = scenes.extract_scenes_from_faces(linked, frame_threshold=frame_threshold)
     out = T.video_triples(documents).unionByName(
         T.scene_triples(scn, entity_catalog)

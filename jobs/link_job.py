@@ -38,7 +38,7 @@ def main() -> int:
     ap.add_argument("--distance-threshold", type=float, default=0.6)
     ap.add_argument("--frame-threshold", type=int, default=3)
     ap.add_argument("--strategy",
-                    choices=["bruteforce", "lsh", "hnsw", "lsh_shuffle"],
+                    choices=["bruteforce", "lsh", "hnsw"],
                     default="bruteforce")
     ap.add_argument("--one-face", action="store_true",
                     help="link only the largest detected face per frame "
@@ -80,12 +80,6 @@ def main() -> int:
         synth.make_entity_catalog_pdf(n_entities=args.n_entities),
         ENTITY_CATALOG,
     )
-    gallery_df = None
-    if args.strategy == "lsh_shuffle":
-        from face_hunter_spark.schemas import GALLERY
-
-        gallery_df = spark.createDataFrame(gallery_pdf, GALLERY)
-
     stats = run_link_job(
         spark,
         ParquetCatalog(args.catalog_root),
@@ -97,7 +91,6 @@ def main() -> int:
         distance_threshold=args.distance_threshold,
         frame_threshold=args.frame_threshold,
         strategy=args.strategy,
-        gallery_df=gallery_df,
         one_face=args.one_face,
         cache_index=args.cache_index,
     )

@@ -66,23 +66,57 @@ def test_bruteforce_parity(spark, corpus):
 
 
 def test_lsh_parity(spark, corpus):
-    """Both LSH physical forms (fused broadcast-gallery and relational
-    candidate join) must clear the P/R gate vs the reference oracle."""
+    """Both LSH physical forms (the fused broadcast-gallery matcher and
+    the shuffle-side join an over-budget Spark gallery routes to) must
+    clear the P/R gate vs the reference oracle."""
     expected = oracle_triples(
         corpus["docs_pdf"], corpus["gallery_pdf"], corpus["catalog_pdf"],
         n_entities=N_ENTITIES,
     )
-    for strategy in ("lsh", "lsh_shuffle"):
+    # a pandas gallery always broadcasts; a Spark gallery over a zero
+    # budget takes the shuffle-side join
+    for form, gallery in (
+        ("broadcast", corpus["gallery_pdf"]),
+        ("shuffle", corpus["gallery"]),
+    ):
         got = spark_triple_set(
             link_documents(
-                corpus["docs"], corpus["gallery_pdf"], corpus["catalog"],
-                n_entities=N_ENTITIES, strategy=strategy,
-                gallery_df=corpus["gallery"],
+                corpus["docs"], gallery, corpus["catalog"],
+                n_entities=N_ENTITIES, strategy="lsh",
+                broadcast_budget_rows=0,
             )
         )
         p, r = precision_recall(got, expected)
         # LSH is approximate: the P/R >= 0.95 gate applies as-is
-        assert p >= 0.95 and r >= 0.95, (strategy, p, r, len(got), len(expected))
+        assert p >= 0.95 and r >= 0.95, (form, p, r, len(got), len(expected))
+
+
+@pytest.mark.parametrize("gallery", ["gallery_pdf", "gallery"])
+@pytest.mark.parametrize("strategy", ["foo", "lsh_shuffle"])
+def test_unknown_strategy_is_rejected_up_front(
+    spark, corpus, monkeypatch, gallery, strategy
+):
+    """An unknown strategy raises ValueError naming the matchers before
+    the gallery is routed, for a pandas and an over-budget Spark
+    gallery alike (the latter would otherwise route to the shuffle
+    join)."""
+    import re
+
+    from face_hunter_spark import pipeline
+    from face_hunter_spark.operators import linking
+
+    def _boom(*a, **k):
+        raise AssertionError("gallery routed before strategy validation")
+
+    monkeypatch.setattr(pipeline, "_route_gallery", _boom)
+    with pytest.raises(
+        ValueError, match=re.escape(str(sorted(linking.MATCHERS)))
+    ):
+        link_documents(
+            corpus["docs"], corpus[gallery], corpus["catalog"],
+            n_entities=N_ENTITIES, strategy=strategy,
+            broadcast_budget_rows=0,
+        )
 
 
 def test_spark_gallery_under_budget_collects_and_matches(spark, corpus):

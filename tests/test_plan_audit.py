@@ -231,21 +231,18 @@ def test_islands_scene_variant_is_pure_jvm(spark):
     assert "InPandas" not in plan and "PythonUDF" not in plan
 
 
-def test_packed_scene_stage_fans_out(spark):
-    """extract_scenes_packed repartitions the packed rows so the Python
-    kernel never runs on an AQE-coalesced 1-2 partition exchange."""
-    import pandas as pd
+def test_scene_stage_fans_out(spark):
+    """extract_scenes_from_faces repartitions the packed rows so the
+    Python kernel never runs on an AQE-coalesced 1-2 partition
+    exchange."""
+    from face_hunter_spark.operators.scenes import extract_scenes_from_faces
 
-    from face_hunter_spark.operators.scenes import extract_scenes_packed
-
-    pdf = pd.DataFrame(
-        [("d", f, f * 1000.0, ["A"]) for f in range(4)],
-        columns=["doc_id", "frame_no", "ts_ms", "labels"],
+    faces = spark.createDataFrame(
+        [("d", f, f * 1000.0, 0, "A") for f in range(4)],
+        "doc_id string, frame_no int, ts_ms double, face_idx int, "
+        "label string",
     )
-    preds = spark.createDataFrame(
-        pdf, "doc_id string, frame_no int, ts_ms double, labels array<string>"
-    )
-    plan = plan_of(extract_scenes_packed(preds))
+    plan = plan_of(extract_scenes_from_faces(faces))
     # explicit-count round-robin repartition feeds the Python stage
     assert "MapInPandas" in plan
     assert "RoundRobinPartitioning" in plan or "REPARTITION_BY_NUM" in plan
@@ -355,32 +352,30 @@ def test_lpa_and_common_neighbors_plan_shape(spark):
 
 
 def test_beyond_broadcast_gallery_join_never_replicates(spark):
-    """The over-budget gallery path (VERDICT r4 #2): with the
-    broadcast hint off and auto-broadcast disabled, the LSH candidate
-    join compiles to a SHUFFLED join on the band bucket — no
-    BroadcastExchange anywhere, both sides stream — and returns the
-    same labels as the broadcast form."""
-    import numpy as np
-
+    """The over-budget gallery path (VERDICT r4 #2): with auto-broadcast
+    disabled, the LSH candidate join compiles to a SHUFFLED cogroup on
+    the band bucket — no BroadcastExchange anywhere, both sides stream
+    — and returns the same labels as the fused broadcast LSH matcher
+    (``MATCHERS['lsh']`` inside ``detect_embed_link``)."""
     from face_hunter_spark import synth
-    from face_hunter_spark.operators.linking import link_lsh
-    from face_hunter_spark.operators.vision import detect_embed_faces
+    from face_hunter_spark.operators import linking
+    from face_hunter_spark.operators.vision import (
+        detect_embed_faces, detect_embed_link,
+    )
     from face_hunter_spark.operators.spans import media_frames
     from face_hunter_spark.schemas import DOCUMENTS, GALLERY
 
     docs = spark.createDataFrame(
         synth.make_documents_pdf(8, 6), DOCUMENTS
     )
-    gal = spark.createDataFrame(
-        synth.make_gallery_pdf(n_entities=6, thumbs_per_entity=4,
-                               distractors=1),
-        GALLERY,
-    )
+    gal_pdf = synth.make_gallery_pdf(n_entities=6, thumbs_per_entity=4,
+                                     distractors=1)
+    gal = spark.createDataFrame(gal_pdf, GALLERY)
     faces = detect_embed_faces(media_frames(docs), n_entities=6)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        shuffled = link_lsh(faces, gal, broadcast_gallery=False)
+        shuffled = linking.link_lsh(faces, gal)
         plan = plan_of(shuffled)
         assert "BroadcastExchange" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
@@ -391,8 +386,15 @@ def test_beyond_broadcast_gallery_join_never_replicates(spark):
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    payload, _ = linking.gallery_payload(
+        "lsh", linking._gallery_arrays(gal_pdf)
+    )
+    fused = detect_embed_link(
+        media_frames(docs), spark.sparkContext.broadcast(payload),
+        n_entities=6, matcher="lsh",
+    )
     want = sorted(
-        map(tuple, link_lsh(faces, gal, broadcast_gallery=True).select(
+        map(tuple, fused.select(
             "doc_id", "frame_no", "face_idx", "label").collect())
     )
     assert got == want and len(got) > 0

@@ -2,14 +2,20 @@
 own test suite (reference tests/test_scene_extraction.py:4-40):
 identical inputs, identical expected scene boundaries."""
 
+from collections import defaultdict
+
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from face_hunter_spark.operators.scenes import (
-    extract_scenes,
+    extract_scenes_from_faces,
     extract_scenes_kernel,
     scenes_gaps_and_islands,
 )
+
+FACES = "doc_id string, frame_no int, ts_ms double, face_idx int, label string"
 
 PREDICTIONS = [
     ["Ali", "Bo"], ["Ali", "Bo"], ["Bo", "Ali"], ["Bo", "Ali"],
@@ -25,6 +31,47 @@ PREDICTIONS_2 = [
 
 def simple(scenes):
     return [(names, s, e) for names, s, e in scenes]
+
+
+def face_rows(doc, frames, timestamps):
+    """One row per face, in detector order; an empty frame is one row
+    with NULL face_idx (the linked-faces contract)."""
+    rows = []
+    for f, (labels, ts) in enumerate(zip(frames, timestamps)):
+        rows += [(doc, f, float(ts), i, lab) for i, lab in enumerate(labels)]
+        if not labels:
+            rows.append((doc, f, float(ts), None, None))
+    return rows
+
+
+def kernel_scenes(rows, frame_threshold):
+    """Driver-side reference: collected face rows grouped per doc and
+    frame, then :func:`extract_scenes_kernel` per doc."""
+    docs = defaultdict(lambda: defaultdict(list))
+    for doc, frame_no, ts, face_idx, label in rows:
+        faces = docs[doc][(ts, frame_no)]
+        if face_idx is not None:
+            faces.append((face_idx, label))
+    out = []
+    for doc, frames in docs.items():
+        keys = sorted(frames)
+        found = extract_scenes_kernel(
+            [[lab for _, lab in sorted(frames[k])] for k in keys],
+            [k[0] for k in keys],
+            frame_threshold,
+        )
+        out += [
+            (doc, i, tuple(names), s, e)
+            for i, (names, s, e) in enumerate(found)
+        ]
+    return sorted(out)
+
+
+def scene_key(df):
+    return sorted(
+        (r.doc_id, r.scene_idx, tuple(r.entities), r.start_ms, r.end_ms)
+        for r in df.collect()
+    )
 
 
 def test_default_threshold():
@@ -67,18 +114,14 @@ def test_unknown_and_empty_cleaning():
 
 
 @pytest.mark.spark
-def test_applyinpandas_matches_kernel(spark):
-    rows = []
-    for doc, preds in [("vid_a", PREDICTIONS), ("vid_b", PREDICTIONS_2)]:
-        for i, (labels, ts) in enumerate(zip(preds, TIMESTAMPS)):
-            rows.append({"doc_id": doc, "frame_no": i, "ts_ms": float(ts),
-                         "labels": labels})
-    from face_hunter_spark.schemas import FRAME_PREDICTIONS
-
-    df = spark.createDataFrame(pd.DataFrame(rows), schema=FRAME_PREDICTIONS)
+def test_from_faces_matches_kernel(spark):
+    rows = face_rows("vid_a", PREDICTIONS, TIMESTAMPS) + face_rows(
+        "vid_b", PREDICTIONS_2, TIMESTAMPS
+    )
+    df = spark.createDataFrame(rows, FACES)
     got = {
         (r.doc_id, r.scene_idx): (list(r.entities), r.start_ms, r.end_ms)
-        for r in extract_scenes(df, 3).collect()
+        for r in extract_scenes_from_faces(df, 3).collect()
     }
     assert got == {
         ("vid_a", 0): (["Ali", "Bo"], 1.0, 6.0),
@@ -106,62 +149,53 @@ def test_gaps_and_islands_variant(spark):
 
 @pytest.mark.spark
 def test_fused_faces_path_equals_two_stage(spark):
-    """extract_scenes_from_faces == assemble_frame_predictions |>
-    extract_scenes on a corpus with empty frames and multi-face rows."""
-    import pyspark.sql.functions as F
-
+    """extract_scenes_from_faces == frame assembly then the per-doc
+    kernel, run on the driver over the collected linked rows, on a
+    corpus with empty frames and multi-face rows."""
     from face_hunter_spark import synth
     from face_hunter_spark.operators import linking, spans, vision
-    from face_hunter_spark.operators.scenes import extract_scenes_from_faces
+    from face_hunter_spark.schemas import DOCUMENTS
 
-    docs = spark.createDataFrame(
-        synth.make_documents_pdf(25, 8),
-        schema=__import__("face_hunter_spark.schemas", fromlist=["DOCUMENTS"]).DOCUMENTS,
-    )
+    docs = spark.createDataFrame(synth.make_documents_pdf(25, 8), DOCUMENTS)
     gal = synth.make_gallery_pdf(n_entities=8, thumbs_per_entity=5, distractors=2)
     media = spans.media_frames(docs)
     bc = spark.sparkContext.broadcast(linking._gallery_arrays(gal))
-    linked = vision.detect_embed_link(media, bc, n_entities=8).cache()
-    two_stage = extract_scenes(
-        linking.assemble_frame_predictions(linked), 3
-    )
-    fused = extract_scenes_from_faces(linked, 3)
-    key = lambda df: sorted(  # noqa: E731
-        (r.doc_id, r.scene_idx, tuple(r.entities), r.start_ms, r.end_ms)
-        for r in df.collect()
-    )
-    assert key(two_stage) == key(fused)
+    linked = vision.detect_embed_link(media, bc, n_entities=8).select(
+        "doc_id", "frame_no", "ts_ms", "face_idx", "label"
+    ).cache()
+    rows = [tuple(r) for r in linked.collect()]
+    assert any(r[3] is None for r in rows)  # empty frames
+    assert any(r[3] is not None and r[3] > 0 for r in rows)  # multi-face
+    want = kernel_scenes(rows, 3)
+    assert want
+    assert scene_key(extract_scenes_from_faces(linked, 3)) == want
 
 
-def test_packed_variant_equals_apply_in_pandas(spark):
-    """extract_scenes_packed is a physical rewrite only — identical
-    output to extract_scenes on the same frame predictions."""
-    import pandas as pd
-    import pyspark.sql.functions as F
-    from face_hunter_spark.operators.scenes import (
-        extract_scenes, extract_scenes_packed,
-    )
+LABELS = st.sampled_from(["A", "B", "C", "unknown"])
+DOC = st.lists(st.lists(LABELS, max_size=3), min_size=1, max_size=12)
 
+
+@pytest.mark.spark
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.function_scoped_fixture,
+        HealthCheck.too_slow,
+    ],
+)
+@given(docs=st.lists(DOC, min_size=1, max_size=4),
+       threshold=st.integers(1, 5), rnd=st.randoms(use_true_random=False))
+def test_from_faces_equals_kernel_property(spark, docs, threshold, rnd):
+    """Random docs with empty frames, multi-face frames and 'unknown'
+    labels, rows in random order: the Spark scene stage returns what
+    the per-doc kernel returns, at every threshold.  One Spark job per
+    example."""
     rows = []
-    for d in range(6):
-        n = 5 + d
-        for f in range(n):
-            labels = (["A"] if f < n // 2 else ["A", "B"]) if d % 2 else (
-                ["unknown"] if f == 2 else ["B"]
-            )
-            rows.append((f"doc{d}", f, f * 1000.0, labels))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "frame_no", "ts_ms", "labels"])
-    preds = spark.createDataFrame(
-        pdf, "doc_id string, frame_no int, ts_ms double, labels array<string>"
+    for d, frames in enumerate(docs):
+        rows += face_rows(f"doc{d}", frames, [f * 1000 for f in range(len(frames))])
+    rnd.shuffle(rows)
+    got = scene_key(
+        extract_scenes_from_faces(spark.createDataFrame(rows, FACES), threshold)
     )
-
-    def norm(df):
-        return sorted(
-            (r.doc_id, r.scene_idx, tuple(r.entities), r.start_ms, r.end_ms)
-            for r in df.collect()
-        )
-
-    for thr in (1, 2, 3):
-        assert norm(extract_scenes_packed(preds, thr)) == norm(
-            extract_scenes(preds, thr)
-        ), f"threshold {thr}"
+    assert got == kernel_scenes(rows, threshold)
