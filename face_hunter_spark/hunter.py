@@ -546,7 +546,12 @@ class SparkHunter:
         rdflib file, memory_store.py:48-59) into this handle's triple
         table as one idempotent append — the data-migration half of
         "switch engines, keep your queries AND your data"
-        (sources.import_n3).  Returns the import stats dict."""
+        (sources.import_n3).  The file is read as an INSERT DATA body:
+        prefixes, ``;`` / ``,`` / ``a`` lists, short and long strings,
+        ``^^`` datatypes and numbers (xsd:integer / xsd:decimal) are
+        read; ``@lang`` tags are dropped (the table has no language
+        column); blank nodes, collections, ``@base`` and relative
+        IRIs raise ValueError.  Returns the import stats dict."""
         from .sources import import_n3 as _imp
 
         return _imp(self.spark, self.catalog, path, sharded=sharded)

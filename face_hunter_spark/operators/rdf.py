@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..schemas import NS
+from .sparql_update import parse_turtle
 
 N3_PREFIXES = """@prefix dc: <http://purl.org/dc/elements/1.1/> .
 @prefix foaf: <http://xmlns.com/foaf/0.1/> .
@@ -214,192 +215,7 @@ def read_n3_sharded(path: str) -> set[tuple[str, str, str]]:
 
 
 def parse_n3(text: str) -> set[tuple[str, str, str]]:
-    """Minimal n3 reader for round-trip tests: returns (subj, pred_uri,
-    obj) triples with literals unquoted and prefixed names expanded.
-    Handles exactly the subset the writer emits (one predicate-object
-    pair per line, no comma lists)."""
-    return {(s, p, o) for s, p, o, _, _ in parse_n3_rows(text)}
-
-
-def parse_n3_rows(
-    text: str,
-) -> list[tuple[str, str, str, bool, str | None]]:
-    """Full-shape form of :func:`parse_n3` for the IMPORT path:
-    (subj, pred_uri, obj, obj_is_literal, obj_datatype_uri) rows,
-    deduped (a graph is a set).  Same subset as the writer emits."""
-    prefixes: dict[str, str] = {}
-    out: dict[tuple[str, str, str], tuple[bool, str | None]] = {}
-    subj = None
-    rev_pred = {name: uri for uri, (_, name) in _PRED_FORMAT.items()}
-    rev_type = {name: uri for uri, name in _TYPE_PREFIXED.items()}
-
-    def expand_dt(tok: str) -> str | None:
-        tok = tok.strip()
-        if not tok:
-            return None
-        if tok.startswith("<"):
-            return tok.strip("<>")
-        if ":" in tok:
-            pfx, local = tok.split(":", 1)
-            return prefixes.get(pfx, pfx + ":") + local
-        return tok
-
-    def expand_pname(tok: str) -> str | None:
-        """Known-prefix ``pfx:local`` -> IRI, else None."""
-        if ":" in tok:
-            pfx, local = tok.split(":", 1)
-            if pfx in prefixes:
-                return prefixes[pfx] + local
-        return None
-
-    def bad_object(obj: str) -> ValueError:
-        # the reader takes one predicate-object pair per line: an
-        # object is ONE term, optionally followed by ^^datatype or
-        # @lang; anything after it (an inline ';' / ',' list) raises
-        # instead of becoming part of the object or being dropped
-        return ValueError(
-            f"cannot parse n3 object {obj!r} (expected one term, "
-            "optionally followed by ^^datatype or @lang)"
-        )
-
-    # block_open: the previous line ended with ';' (the writer's
-    # continuation marker), so the next line reuses its subject.
-    # A line arriving with the block CLOSED must start a new block —
-    # its first token is the subject (absolute IRI or known-prefix
-    # name); anything else raises instead of silently attributing the
-    # triple to the previous subject (generic-document safety for the
-    # LOAD path).
-    block_open = False
-    for raw in text.splitlines():
-        s = raw.strip()
-        if not s or s.startswith("#"):
-            continue
-        if s.startswith("@prefix"):
-            _, pfx, uri, _ = s.split(None, 3)
-            prefixes[pfx.rstrip(":")] = uri.strip("<>")
-            continue
-        if s == ".":
-            # lone block terminator on its own line (legal Turtle)
-            block_open = False
-            continue
-        ends_closed = s.rstrip().endswith(".")
-        if not block_open:
-            # block closed -> this line STARTS one: first token is
-            # the subject.  (When the block is open the line is a
-            # continuation — even one whose predicate is an absolute
-            # <iri> — and the subject carries over.)
-            if s.startswith("<") and "> " in s:
-                subj, s = s[1:].split("> ", 1)
-            else:
-                bits = s.split(None, 1)
-                tok = bits[0]
-                if tok.startswith("<") and tok.endswith(">"):
-                    subj = tok[1:-1]
-                else:
-                    expanded = expand_pname(tok)
-                    if expanded is None:
-                        raise ValueError(
-                            f"cannot parse n3 subject {tok!r} "
-                            "(expected an absolute <iri> or a "
-                            "declared-prefix name)"
-                        )
-                    subj = expanded
-                if len(bits) == 1:
-                    # subject on its own line: the predicate-object
-                    # lines follow as continuations
-                    block_open = True
-                    continue
-                s = bits[1]
-        block_open = not ends_closed
-        for part in [s.rstrip(" .;")]:
-            is_lit = False
-            dt: str | None = None
-            if part.startswith("a "):
-                tobj = part[2:].strip()
-                if len(tobj.split()) != 1:
-                    raise bad_object(tobj)
-                if tobj.startswith("<") and tobj.endswith(">"):
-                    obj = tobj[1:-1]
-                else:
-                    obj = expand_pname(tobj) or rev_type[tobj]
-                pred = NS["rdf_type"]
-            else:
-                bits2 = part.split(None, 1)
-                if len(bits2) != 2:
-                    raise ValueError(
-                        f"cannot parse n3 statement {part!r} "
-                        "(expected 'predicate object')"
-                    )
-                pname, obj = bits2
-                if pname.startswith("<") and pname.endswith(">"):
-                    # absolute-IRI predicate — generic n3 documents
-                    # (the LOAD path) use these; the writer's own
-                    # dialect uses the prefixed names below
-                    pred = pname[1:-1]
-                elif pname in rev_pred:
-                    pred = rev_pred[pname]
-                else:
-                    expanded = expand_pname(pname)
-                    if expanded is not None:
-                        pred = expanded
-                    else:
-                        pred = rev_pred[pname]  # loud KeyError
-                obj = obj.strip()
-                if obj.startswith("<"):
-                    end = obj.find(">")
-                    if end < 0 or obj[end + 1:].strip():
-                        raise bad_object(obj)
-                    obj = obj[1:end]
-                elif obj.startswith('"'):
-                    # scan to the closing UNESCAPED quote — splitting at
-                    # the first '^^' would truncate a literal whose text
-                    # itself contains '^^'; the datatype suffix only
-                    # ever follows the closing quote
-                    i = 1
-                    while i < len(obj):
-                        if obj[i] == "\\":
-                            i += 2
-                            continue
-                        if obj[i] == '"':
-                            break
-                        i += 1
-                    tail = obj[i + 1:].strip()
-                    if i >= len(obj) or len(tail.split()) > 1 or (
-                        tail and not tail.startswith(("^^", "@"))
-                    ):
-                        raise bad_object(obj)
-                    obj = _unescape(obj[1:i])
-                    is_lit = True
-                    if tail.startswith("^^"):
-                        dt = expand_dt(tail[2:])
-                else:
-                    if len(obj.split()) != 1:
-                        raise bad_object(obj)
-                    expanded = expand_pname(obj)
-                    if expanded is not None and "^^" not in obj:
-                        # known-prefix object IRI (generic documents;
-                        # the writer always emits <...> or quoted)
-                        obj = expanded
-                    else:
-                        bits = obj.split("^^", 1)
-                        obj = _unescape(bits[0])
-                        is_lit = True
-                        if len(bits) == 2:
-                            dt = expand_dt(bits[1])
-            out.setdefault((subj, pred, obj), (is_lit, dt))
-    return [(s, p, o, il, d) for (s, p, o), (il, d) in out.items()]
-
-
-def _unescape(s: str) -> str:
-    """Inverse of the writer's literal escaping."""
-    out = []
-    i = 0
-    table = {"\\": "\\", '"': '"', "n": "\n", "r": "\r", "t": "\t"}
-    while i < len(s):
-        if s[i] == "\\" and i + 1 < len(s) and s[i + 1] in table:
-            out.append(table[s[i + 1]])
-            i += 2
-        else:
-            out.append(s[i])
-            i += 1
-    return "".join(out)
+    """The (subj, pred_uri, obj) set of an n3/Turtle document, literals
+    as their lexical form.  Parsed by ``sparql_update.parse_turtle``,
+    the INSERT DATA grammar (see there for the subset read)."""
+    return {(str(s), str(p), str(o)) for s, p, o in parse_turtle(text)}

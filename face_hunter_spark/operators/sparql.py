@@ -401,18 +401,22 @@ class _Parser:
     def _parse_prologue(self) -> None:
         while self._at_kw("prefix"):
             self._next()
-            pn = self._next()
-            if pn.kind != "PNAME" or not pn.text.endswith(":"):
-                raise ValueError(
-                    f"bad PREFIX declaration near {pn.text!r} "
-                    "(expected 'name:')"
-                )
-            iri = self._next()
-            if iri.kind != "IRI":
-                raise ValueError(
-                    f"bad PREFIX declaration: expected <iri>, got {iri.text!r}"
-                )
-            self.prefixes[pn.text[:-1]] = iri.text[1:-1]
+            self._prefix_decl()
+
+    def _prefix_decl(self) -> None:
+        """``name: <iri>`` after a PREFIX (or Turtle ``@prefix``)."""
+        pn = self._next()
+        if pn.kind != "PNAME" or not pn.text.endswith(":"):
+            raise ValueError(
+                f"bad PREFIX declaration near {pn.text!r} "
+                "(expected 'name:')"
+            )
+        iri = self._next()
+        if iri.kind != "IRI":
+            raise ValueError(
+                f"bad PREFIX declaration: expected <iri>, got {iri.text!r}"
+            )
+        self.prefixes[pn.text[:-1]] = iri.text[1:-1]
 
     def parse(self) -> ParsedQuery:
         self._parse_prologue()
@@ -1130,11 +1134,7 @@ class _Parser:
             if self._at_op(";"):
                 self._next()
                 # dangling ';' before '.' or '}' is legal
-                if self._at_op(".", "}"):
-                    continue_outer = False
-                else:
-                    continue_outer = True
-                if continue_outer:
+                if not self._at_op(".", "}"):
                     continue
             break
         if self._at_op("."):
@@ -1363,6 +1363,11 @@ class _Parser:
             return self._path_expr(t) if pred_pos else iri
         if t.kind == "NAME" and t.text == "a":
             return self._path_expr(t) if pred_pos else RDF_TYPE
+        if pred_pos and t.kind in ("STRING", "NUMBER"):
+            raise ValueError(
+                f"SPARQL syntax error at offset {t.pos}: a literal "
+                f"({t.text}) cannot be a predicate"
+            )
         if t.kind == "STRING":
             lex = _unescape(t.text[1:-1])
             # consume @lang / ^^datatype; the READ path matches on the
@@ -1788,19 +1793,17 @@ class _Parser:
         )
 
 
+# the full SPARQL ECHAR set (\t \b \n \r \f \" \' \\)
+_ECHAR = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f",
+          '"': '"', "'": "'", "\\": "\\"}
+
+
 def _unescape(s: str) -> str:
-    # the full SPARQL ECHAR set (\t \b \n \r \f \" \' \\); the \x00
-    # sentinel keeps escaped backslashes from re-triggering
-    return (
-        s.replace("\\\\", "\x00")
-        .replace('\\"', '"')
-        .replace("\\'", "'")
-        .replace("\\n", "\n")
-        .replace("\\t", "\t")
-        .replace("\\r", "\r")
-        .replace("\\b", "\b")
-        .replace("\\f", "\f")
-        .replace("\x00", "\\")
+    # one left-to-right pass, so an escaped backslash never starts a
+    # second escape; any other backslash pair passes through verbatim
+    return re.sub(
+        r"\\(.)", lambda m: _ECHAR.get(m.group(1), m.group(0)), s,
+        flags=re.S,
     )
 
 
@@ -1948,10 +1951,6 @@ def _path_part(k: tuple):
     if inv:
         return ("__inv__", uri)
     return uri
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
 
 
 def _rewrite_path_ops(q: ParsedQuery) -> ParsedQuery:

@@ -49,6 +49,7 @@ above stay identical.
 
 from __future__ import annotations
 
+import re
 import uuid
 from dataclasses import dataclass, field
 
@@ -57,11 +58,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import bgp
 from .sparql import Lit, ParsedQuery, _Parser
-from .triples import with_partitioning
+from .triples import append_asserted
 
 __all__ = [
     "parse_update",
     "parse_update_request",
+    "parse_turtle",
     "ParsedUpdate",
     "updated_graph",
     "execute_update",
@@ -333,6 +335,38 @@ class _UpdateParser(_Parser):
             raise ValueError("empty data block")
         _check_template(u.data, "DATA block", allow_vars=False)
 
+    def parse_turtle(self) -> list:
+        """A Turtle document read as the body of an INSERT DATA block:
+        ``@prefix`` / ``PREFIX`` directives and '.'-terminated
+        statements (the same ``;`` / ``,`` / ``a`` triples grammar),
+        each subject an absolute ``<iri>`` or a declared-prefix name."""
+        out: list = []
+        while (t := self._peek()) is not None:
+            if t.kind == "LANGTAG" and t.text == "@prefix":
+                self._next()
+                self._prefix_decl()
+                self._expect_op(".")
+            elif self._at_kw("prefix"):
+                self._next()
+                self._prefix_decl()
+            elif t.kind == "IRI" or (
+                t.kind == "PNAME" and t.text.split(":")[0] in self.prefixes
+            ):
+                self._triples_block(_DataSink(out))
+                if self.toks[self.i - 1].text != ".":
+                    raise ValueError(
+                        f"cannot parse n3 statement at offset {t.pos}: "
+                        "expected '.' after its last object"
+                    )
+            else:
+                raise ValueError(
+                    f"cannot parse n3 subject {t.text!r} at offset "
+                    f"{t.pos} (expected an absolute <iri> or a "
+                    "declared-prefix name)"
+                )
+        _check_template(out, "n3 document", allow_vars=False)
+        return out
+
 
 class _DataSink:
     """Duck-typed ParsedQuery stand-in so _triples_block can append
@@ -363,6 +397,10 @@ def _check_template(patterns, what: str, allow_vars: bool) -> None:
                     f"{what} must be ground (no variables); got {term} "
                     f"in triple {i}"
                 )
+        if not allow_vars and isinstance(s, Lit):
+            raise ValueError(
+                f"{what}: a literal cannot be a subject (triple {i})"
+            )
 
 
 def parse_update(text: str) -> ParsedUpdate:
@@ -384,6 +422,34 @@ def parse_update_request(text: str) -> list[ParsedUpdate]:
     """Parse a full SPARQL Update request — one or more ';'-separated
     operations, applied in document order — without executing it."""
     return _UpdateParser(text).parse_update_request()
+
+
+_ABSOLUTE_IRI = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
+
+
+def parse_turtle(text: str) -> list:
+    """The n3/Turtle reader: (subj, pred, obj) triples in document
+    order, literal objects as :class:`Lit` (lexical form + datatype).
+    Read: prefixes, ``;`` / ``,`` / ``a`` lists, short and long
+    strings, ``^^`` datatypes, numbers as xsd:integer / xsd:decimal.
+    Dropped: ``@lang`` tags.  Refused: blank nodes, collections,
+    ``@base`` and relative IRIs.  Every refusal is a ValueError whose
+    message starts with "cannot parse n3"."""
+    try:
+        p = _UpdateParser(text)
+        p.prefixes = {}  # Turtle declares every prefix it uses
+        out = p.parse_turtle()
+    except ValueError as e:
+        if str(e).startswith("cannot parse"):
+            raise
+        raise ValueError(f"cannot parse n3 statement: {e}") from e
+    for s, pr, o in out:
+        for term in (s, pr) if isinstance(o, Lit) else (s, pr, o):
+            if not _ABSOLUTE_IRI.match(term):
+                raise ValueError(
+                    f"cannot parse n3 statement: relative IRI <{term}>"
+                )
+    return out
 
 
 def _ground_df(spark: SparkSession, triples: list) -> DataFrame:
@@ -596,9 +662,8 @@ def _resolve_load_path(u: "ParsedUpdate") -> str | None:
 
 
 #: what a failed LOAD raises: an unreadable source (OSError) or a
-#: document the n3 reader rejects (ValueError for a bad statement,
-#: KeyError for an undeclared prefixed name) — all swallowed by SILENT
-_LOAD_FAILURES = (OSError, ValueError, KeyError)
+#: document parse_turtle rejects (ValueError) — both swallowed by SILENT
+_LOAD_FAILURES = (OSError, ValueError)
 
 
 def _load_spo(spark: SparkSession, u: "ParsedUpdate"):
@@ -953,16 +1018,7 @@ def _execute_one(
                     state = state.drop("snap")
 
     if ins is not None:
-        novel = (
-            ins.join(
-                state.select("subj", "pred", "obj"),
-                ["subj", "pred", "obj"],
-                "left_anti",
-            )
-            if state is not None
-            else ins
-        )
-        rows = novel.select(
+        rows = ins.select(
             F.col("subj").alias("doc_id"),
             "subj",
             "pred",
@@ -975,20 +1031,8 @@ def _execute_one(
             ),
             F.col("obj").alias("obj_canonical"),
         )
-        rows = with_partitioning(rows, run_id)
-        if state is not None:
-            extra = [c for c in state.columns if c not in rows.columns]
-            for c in extra:
-                rows = rows.withColumn(
-                    c, F.lit(None).cast(dict(state.dtypes)[c])
-                )
-            rows = rows.select(*state.columns)
-        rows = rows.persist()
-        n_ins = rows.count()
+        n_ins, snap = append_asserted(catalog, table, rows, run_id, state)
         report["inserted"] = n_ins
         if n_ins:
-            report["snapshot"] = catalog.append(
-                table, rows, run_id, partition_by=["doc_bucket"]
-            )
-        rows.unpersist()
+            report["snapshot"] = snap
     return report

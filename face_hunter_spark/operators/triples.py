@@ -187,3 +187,35 @@ def with_partitioning(triples: DataFrame, run_id: str) -> DataFrame:
     return triples.withColumn(
         "doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(N_BUCKETS)).cast("int")
     ).withColumn("run_id", F.lit(run_id))
+
+
+def append_asserted(catalog, table: str, rows: DataFrame, run_id: str,
+                    state: DataFrame | None) -> tuple[int, str | None]:
+    """Commit hand-asserted rows (doc_id, subj, pred, obj,
+    obj_is_literal, obj_datatype, obj_canonical) — INSERT DATA and n3
+    imports — as one idempotent append: bucketed by ``doc_id``, minus
+    the (subj, pred, obj) triples ``state`` (the committed table, None
+    before the first commit) already holds, any other column of the
+    table filled with a typed NULL.  Returns (rows appended, snapshot
+    id or None when nothing was new)."""
+    rows = with_partitioning(rows, run_id)
+    if state is not None:
+        cols = [(c, t) for c, t in state.dtypes if c != "snap"]
+        rows = rows.join(
+            state.select("subj", "pred", "obj"),
+            ["subj", "pred", "obj"],
+            "left_anti",
+        ).select(*[
+            F.col(c) if c in rows.columns else F.lit(None).cast(t).alias(c)
+            for c, t in cols
+        ])
+    rows = rows.persist()
+    try:
+        n = rows.count()
+        snap = (
+            catalog.append(table, rows, run_id, partition_by=["doc_bucket"])
+            if n else None
+        )
+    finally:
+        rows.unpersist()
+    return n, snap

@@ -158,27 +158,34 @@ def import_n3(
     (memory_store.py:48-59, models/example_graph), and this loads such
     a file (ours or the reference's own) as one idempotent append.
 
+    The document is read as an INSERT DATA body
+    (``sparql_update.parse_turtle``): prefixes, ``;`` / ``,`` / ``a``
+    lists, short and long strings, ``^^`` datatypes and numbers (as
+    xsd:integer / xsd:decimal) are read; ``@lang`` tags are dropped
+    (the table has no language column); blank nodes, collections,
+    ``@base`` and relative IRIs raise ValueError.
+
     Rows are materialized into the full pipeline schema: literal
-    shapes come from the n3 syntax (quoted + ``^^datatype``), doc_id
-    is recovered from HOME_URI-shaped subjects (scene fragments and
-    the video URI both collapse to their doc; foreign subjects anchor
-    on themselves — same co-location contract as SPARQL INSERT), and
-    already-asserted triples are anti-joined away, so re-importing the
-    same artifact commits nothing.
+    shapes come from the parsed terms (quoted, ``^^datatype``),
+    doc_id is recovered from HOME_URI-shaped subjects (scene fragments
+    and the video URI both collapse to their doc, so an exported
+    graph re-imports into its original buckets; foreign subjects
+    anchor on themselves), and already-asserted triples are
+    anti-joined away, so re-importing the same artifact commits
+    nothing.
 
     ``sharded=True`` reads an export_n3_sharded directory: each
     doc_bucket part file is a self-contained block set, so the parts
     are parsed IN PARALLEL on executors (wholeTextFiles + the same
-    line reader) — the scale path for multi-GB exports.  A flat file
-    is parsed on the driver (reference artifacts are single-node
-    files by construction).
+    parser) — the scale path for multi-GB exports.  A flat file is
+    parsed on the driver (reference artifacts are single-node files
+    by construction).
 
     Returns ``{"parsed", "inserted", "snapshot", "run_id"}``.
     """
     import uuid as _uuid
 
-    from .operators.rdf import parse_n3_rows
-    from .operators.triples import with_partitioning
+    from .operators.triples import append_asserted
     from .schemas import HOME_URI
 
     run_id = run_id or "n3-import-" + _uuid.uuid4().hex[:8]
@@ -194,62 +201,51 @@ def import_n3(
         files = spark.sparkContext.wholeTextFiles(
             os.path.join(path, "doc_bucket=*", "part-*")
         )
-        rows = files.flatMap(
-            lambda kv: parse_n3_rows(header + "\n" + kv[1])
-        )
-        df = spark.createDataFrame(rows, schema)
+        rows = files.flatMap(lambda kv: _n3_rows(header + "\n" + kv[1]))
     else:
         with open(path) as f:
-            rows = parse_n3_rows(f.read())
-        df = spark.createDataFrame(rows, schema)
-    df = df.dropDuplicates(["subj", "pred", "obj"])
-
+            rows = _n3_rows(f.read())
+    df = (
+        spark.createDataFrame(rows, schema)
+        .dropDuplicates(["subj", "pred", "obj"])
+        .persist()
+    )
     doc_id = F.when(
         F.col("subj").startswith(HOME_URI),
         F.split(
             F.expr(f"substring(subj, {len(HOME_URI) + 1})"), "#t="
         ).getItem(0),
     ).otherwise(F.col("subj"))
-    rows_df = df.select(
-        doc_id.alias("doc_id"),
-        "subj",
-        "pred",
-        "obj",
-        "obj_is_literal",
-        "obj_datatype",
-        F.col("obj").alias("obj_canonical"),
-    )
-    rows_df = with_partitioning(rows_df, run_id)
-
-    if catalog.exists(table):
-        state = catalog.read(spark, table)
-        rows_df = rows_df.join(
-            state.select("subj", "pred", "obj"),
-            ["subj", "pred", "obj"],
-            "left_anti",
+    try:
+        n_parsed = df.count()
+        n_ins, snap = append_asserted(
+            catalog, table,
+            df.select(
+                doc_id.alias("doc_id"), "subj", "pred", "obj",
+                "obj_is_literal", "obj_datatype",
+                F.col("obj").alias("obj_canonical"),
+            ),
+            run_id,
+            catalog.read(spark, table) if catalog.exists(table) else None,
         )
-        extra = [
-            c for c in state.columns
-            if c not in rows_df.columns and c != "snap"
-        ]
-        for c in extra:
-            rows_df = rows_df.withColumn(
-                c, F.lit(None).cast(dict(state.dtypes)[c])
-            )
-        rows_df = rows_df.select(
-            *[c for c in state.columns if c != "snap"]
-        )
-    rows_df = rows_df.persist()
-    n_ins = rows_df.count()
-    snap = None
-    if n_ins:
-        snap = catalog.append(
-            table, rows_df, run_id, partition_by=["doc_bucket"]
-        )
-    rows_df.unpersist()
+    finally:
+        df.unpersist()
     return {
-        "parsed": df.count(),
+        "parsed": n_parsed,
         "inserted": n_ins,
         "snapshot": snap,
         "run_id": run_id,
     }
+
+
+def _n3_rows(text: str) -> list[tuple]:
+    """(subj, pred, obj, obj_is_literal, obj_datatype) rows of an n3
+    document."""
+    from .operators.sparql import Lit
+    from .operators.sparql_update import parse_turtle
+
+    return [
+        (str(s), str(p), str(o), isinstance(o, Lit),
+         o.datatype if isinstance(o, Lit) else None)
+        for s, p, o in parse_turtle(text)
+    ]

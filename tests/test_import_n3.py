@@ -12,6 +12,8 @@ import pytest
 from face_hunter_spark import synth
 from face_hunter_spark.catalog import ParquetCatalog
 from face_hunter_spark.hunter import SparkHunter
+from face_hunter_spark.operators import rdf
+from face_hunter_spark.schemas import HOME_URI, NS
 from face_hunter_spark.sources import import_n3
 from tests.conftest import requires_reference
 
@@ -74,6 +76,14 @@ def test_sharded_import_parses_on_executors(spark, tmp_path):
     sa = import_n3(spark, cat_a, flat)
     sb = import_n3(spark, cat_b, shard_dir, sharded=True)
     assert sa["parsed"] == sb["parsed"]
+    exported = (
+        src.catalog.read(spark, "triples")
+        .where(F.col("pred").isin(NS["rdf_type"], *rdf._PRED_FORMAT))
+        .select("subj", "pred", "obj")
+        .distinct()
+        .count()
+    )
+    assert sb["parsed"] == exported
     ta = cat_a.read(spark, "triples")
     tb = cat_b.read(spark, "triples")
     assert _n3_spo(ta) == _n3_spo(tb)
@@ -130,3 +140,89 @@ def test_cli_entrypoint(spark, tmp_path, monkeypatch):
     assert ij.main() == 0
     stats = json.loads(printed[-1])
     assert stats["inserted"] > 0
+
+
+# characters the writer must escape or the reader could mistake for
+# syntax: escapes, statement / list separators, comment, datatype and
+# language markers, and NUL (once the reader's stand-in for an escaped
+# backslash)
+_LIT_ALPHABET = [
+    "a", "Z", "0", " ", "é", "\\", '"', "\n", "\r", "\t", ";", ",", ".",
+    "#", "^^", "@", "'", "<", ">", ":", "\x00",
+]
+
+
+def _random_graph(rng, n_docs):
+    """Writer-shaped (subj, pred, obj, obj_is_literal, obj_datatype)
+    rows: a video block and 1-3 scene blocks per doc, literal objects
+    drawn from _LIT_ALPHABET, each typed xsd:dateTime / xsd:duration
+    or untyped."""
+    def lit(s, p):
+        text = "".join(
+            rng.choice(_LIT_ALPHABET) for _ in range(rng.randint(0, 12))
+        )
+        dt = rng.choice([None, NS["xsd_datetime"], NS["xsd_duration"]])
+        return (s, p, text, True, dt)
+
+    def iri(s, p, o):
+        return (s, p, o, False, None)
+
+    rows = []
+    for d in range(n_docs):
+        v = f"{HOME_URI}vid_{d:05d}"
+        rows += [
+            iri(v, NS["rdf_type"], NS["mpeg7_video"]),
+            lit(v, NS["dc_identifier"]),
+            lit(v, NS["dc_title"]),
+        ]
+        for k in range(rng.randint(1, 3)):
+            s = f"{v}#t=0:00:{k:02d},0:00:{k + 1:02d}"
+            rows += [
+                iri(s, NS["rdf_type"], NS["video_scene"]),
+                iri(s, NS["video_scene_from"], v),
+                iri(s, NS["video_temporal_segment_of"], v),
+                lit(s, NS["temporal_has_start"]),
+                lit(s, NS["temporal_duration"]),
+                lit(s, NS["temporal_has_finish"]),
+                iri(s, NS["foaf_depicts"],
+                    f"http://dbpedia.org/resource/E_{rng.randint(0, 9)}"),
+            ]
+    return rows
+
+
+def test_seeded_export_parse_import_roundtrip(spark, tmp_path):
+    """Seeded round trip over random writer-shaped graphs in ONE
+    DataFrame: triples_to_n3 -> parse_n3 gives back the triple set,
+    and import_n3 commits the same rows with their literal shapes and
+    the doc_id / doc_bucket the writer's subjects imply."""
+    import random
+
+    from face_hunter_spark.operators.triples import with_partitioning
+
+    rows = _random_graph(random.Random(20261019), 60)
+    assert len({r[:3] for r in rows}) == len(rows) >= 500
+    df = spark.createDataFrame(
+        rows,
+        "subj string, pred string, obj string, obj_is_literal boolean, "
+        "obj_datatype string",
+    )
+    text = rdf.triples_to_n3(df)
+    assert rdf.parse_n3(text) == {r[:3] for r in rows}
+
+    n3 = tmp_path / "random.n3"
+    n3.write_text(text)
+    cat = ParquetCatalog(str(tmp_path / "kg"))
+    stats = import_n3(spark, cat, str(n3), run_id="rt")
+    assert stats["parsed"] == stats["inserted"] == len(rows)
+    cols = ["doc_id", "subj", "pred", "obj", "obj_is_literal",
+            "obj_datatype", "doc_bucket"]
+    want = with_partitioning(
+        df.withColumn(
+            "doc_id",
+            F.regexp_extract("subj", r"/(vid_\d+)", 1),
+        ),
+        "rt",
+    )
+    got = cat.read(spark, "triples").select(*cols)
+    assert got.exceptAll(want.select(*cols)).count() == 0
+    assert got.count() == len(rows)

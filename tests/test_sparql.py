@@ -333,6 +333,28 @@ def test_regex_filter_case_insensitive(triples):
     assert [r.v for r in sparql.execute(triples, text).collect()] == ["v2"]
 
 
+def test_escaped_backslash_reaches_sql_as_one_backslash(spark):
+    """An escaped backslash in a SPARQL string is ONE backslash in the
+    generated Spark SQL literal: "a\\\\tb" equals backslash-t (not a
+    TAB) and REGEX "a\\\\d" is the digit class (not a literal 'd')."""
+    t = spark.createDataFrame(
+        [
+            ("r1", "http://e/v", "a\\tb"),  # backslash, t
+            ("r2", "http://e/v", "a\tb"),  # TAB
+            ("r3", "http://e/v", "ad"),
+            ("r4", "http://e/v", "a1"),
+        ],
+        "subj string, pred string, obj string",
+    )
+
+    def run(cond):
+        q = "SELECT ?s WHERE { ?s <http://e/v> ?o . FILTER(" + cond + ") }"
+        return sorted(r.s for r in sparql.execute(t, q).collect())
+
+    assert run('?o = "a\\\\tb"') == ["r1"]
+    assert run('REGEX(?o, "a\\\\d")') == ["r4"]
+
+
 def test_order_limit_offset(triples):
     text = (
         "SELECT ?s ?t WHERE { ?s temporal:hasStartTime ?t } "

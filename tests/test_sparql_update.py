@@ -248,6 +248,22 @@ def test_execute_insert_appends_one_snapshot_idempotently(
     assert len(cat.snapshots("triples")) == 2
 
 
+def test_insert_data_refuses_literal_subject_and_predicate(
+    spark, tmp_path
+):
+    """RDF has no literal subjects or predicates: both INSERT DATA
+    shapes raise and commit nothing."""
+    cat = _seed_catalog(spark, tmp_path)
+    snaps = cat.snapshots("triples")
+    for txt, what in [
+        ('INSERT DATA { <http://e/a> "p" <http://e/o> . }', "predicate"),
+        ('INSERT DATA { "lit" <http://e/p> <http://e/o> . }', "subject"),
+    ]:
+        with pytest.raises(ValueError, match=what):
+            execute_update(spark, cat, "triples", txt)
+    assert cat.snapshots("triples") == snaps
+
+
 def test_execute_delete_rewrites_copy_on_write(spark, tmp_path):
     cat = _seed_catalog(spark, tmp_path)
     execute_update(
@@ -947,20 +963,45 @@ def test_load_silent_swallows_unreadable(spark, tmp_path):
         execute_update(spark, cat, "triples", f"LOAD <file://{n3}>")
 
 
+def test_load_reads_inline_separator_lists(spark, tmp_path):
+    """LOAD reads n3 through the INSERT DATA grammar, so ';' / ','
+    lists after an object on one line are the triples they spell."""
+    docs = {
+        "@prefix ex: <http://e/> .\nex:s ex:p ex:o ; ex:q ex:r .\n": {
+            ("http://e/s", "http://e/p", "http://e/o"),
+            ("http://e/s", "http://e/q", "http://e/r"),
+        },
+        "@prefix ex: <http://e/> .\nex:s ex:p <http://e/o> , ex:o2 .\n": {
+            ("http://e/s", "http://e/p", "http://e/o"),
+            ("http://e/s", "http://e/p", "http://e/o2"),
+        },
+        '@prefix ex: <http://e/> .\nex:s ex:p "a" ; ex:q ex:r .\n': {
+            ("http://e/s", "http://e/p", "a"),
+            ("http://e/s", "http://e/q", "http://e/r"),
+        },
+    }
+    g = _graph(spark, [("http://e/a", "http://e/p", "http://e/b")])
+    for i, (text, want) in enumerate(docs.items()):
+        n3 = tmp_path / f"inline{i}.n3"
+        n3.write_text(text)
+        got = _spo(updated_graph(g, f"LOAD <file://{n3}>"))
+        assert got == _spo(g) | want, text
+
+
 def test_load_silent_swallows_parse_failure(spark, tmp_path):
     """A document the n3 reader rejects is an operation failure too:
     LOAD SILENT is a no-op that commits nothing (pure and committing
-    paths), and plain LOAD raises.  The rejected shapes include inline
-    ';' / ',' separators after an object, which the line reader does
-    not split — it must refuse them rather than commit an object like
-    'http://e/o ; ex:q ex:r' or silently drop the second triple."""
+    paths), and plain LOAD raises."""
     from face_hunter_spark.catalog import ParquetCatalog
 
     bad_docs = [
         "this is not n3 .\n",
-        "@prefix ex: <http://e/> .\nex:s ex:p ex:o ; ex:q ex:r .\n",
-        "@prefix ex: <http://e/> .\nex:s ex:p <http://e/o> , ex:o2 .\n",
-        '@prefix ex: <http://e/> .\nex:s ex:p "a" ; ex:q ex:r .\n',
+        # missing '.' between statements
+        "@prefix ex: <http://e/> .\nex:s ex:p ex:o\nex:t ex:p ex:o .\n",
+        '"lit" <http://e/p> <http://e/o> .\n',  # literal subject
+        '<http://e/s> <http://e/p> "unterminated .\n',
+        "zz:s <http://e/p> <http://e/o> .\n",  # undeclared prefix
+        "<http://e/s> <http://e/p> _:b1 .\n",  # blank node
     ]
     g = _graph(spark, [("http://e/a", "http://e/p", "http://e/b")])
     cat = ParquetCatalog(str(tmp_path / "kg"))
