@@ -34,7 +34,6 @@ reference simply re-runs linking after enrichment.
 
 from __future__ import annotations
 
-import time
 import uuid
 from typing import Iterator
 
@@ -48,8 +47,7 @@ from pyspark.sql.types import (
 
 from . import fakevision as fv
 from .catalog import ParquetCatalog
-from .operators import triples as T
-from .pipeline import canonicalized_once, commit_run, link_documents
+from .pipeline import _link_and_commit
 
 GALLERY_TABLE = "gallery"
 
@@ -235,28 +233,21 @@ def run_relink_job(
     exhibits when it re-runs linking over an extended gallery.  Like
     the link job, a non-empty relink is ONE commit (pipeline.commit_run);
     its lineage and metrics are pipeline.run_lineage / run_metrics."""
-    t_start = time.monotonic()
-    run_id = run_id or uuid.uuid4().hex[:12]
-    if kwargs.pop("cache_index", False):
-        kwargs.setdefault("index_catalog", catalog)
+
+    def new_rows(rows: DataFrame) -> DataFrame:
+        if not catalog.exists("triples"):
+            return rows
+        committed = catalog.read(spark, "triples").select(
+            "doc_id", "subj", "pred", "obj"
+        )
+        return rows.join(
+            committed, ["doc_id", "subj", "pred", "obj"], "left_anti"
+        )
+
     # DataFrame handle: link_documents collects it only while it fits
     # the broadcast budget; an over-budget (post-enrichment) gallery
     # routes to the shuffle join with zero driver materialization
-    gallery = load_gallery_df(spark, catalog)
-
-    with canonicalized_once(
-        T.with_partitioning(
-            link_documents(documents, gallery, entity_catalog, **kwargs),
-            run_id,
-        ),
-        entity_catalog,
-        canon,
-    ) as full:
-        if catalog.exists("triples"):
-            committed = catalog.read(spark, "triples").select(
-                "doc_id", "subj", "pred", "obj"
-            )
-            full = full.join(
-                committed, ["doc_id", "subj", "pred", "obj"], "left_anti"
-            )
-        return commit_run(catalog, full, run_id, t_start)
+    return _link_and_commit(
+        catalog, documents, load_gallery_df(spark, catalog), entity_catalog,
+        run_id, canon, kwargs, new_docs=lambda docs: docs, new_rows=new_rows,
+    )

@@ -548,8 +548,8 @@ class SparkHunter:
         "switch engines, keep your queries AND your data"
         (sources.import_n3).  The file is read as an INSERT DATA body:
         prefixes, ``;`` / ``,`` / ``a`` lists, short and long strings,
-        ``^^`` datatypes and numbers (xsd:integer / xsd:decimal) are
-        read; ``@lang`` tags are dropped (the table has no language
+        ``^^`` datatypes, numbers (xsd:integer / xsd:decimal /
+        xsd:double) and booleans are read; ``@lang`` tags are dropped (the table has no language
         column); blank nodes, collections, ``@base`` and relative
         IRIs raise ValueError.  Returns the import stats dict."""
         from .sources import import_n3 as _imp

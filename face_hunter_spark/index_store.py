@@ -26,7 +26,7 @@ cells bounded; lookups push the fingerprint predicate into the scan so
 only the matching row group is read.  Serialization is pickle protocol
 4 over numpy-array dicts — an internal trusted artifact with the same
 trust model as the reference's nmslib binary + gallery pickle (do NOT
-point ``table`` at untrusted data).
+write untrusted data into the ``ann_index`` table).
 """
 
 from __future__ import annotations
@@ -40,7 +40,7 @@ PAYLOAD_SCHEMA = (
     "nbytes long, data binary"
 )
 
-_DEFAULT_TABLE = "ann_index"
+TABLE = "ann_index"
 _CHUNK_BYTES = 64 << 20
 
 
@@ -61,8 +61,6 @@ def save_payload(
     fingerprint: str,
     kind: str,
     payload,
-    run_id: str = "index",
-    table: str = _DEFAULT_TABLE,
     chunk_bytes: int = _CHUNK_BYTES,
 ) -> str:
     """Serialize + append one index artifact; returns the snapshot id.
@@ -82,7 +80,7 @@ def save_payload(
         for i in range(n)
     ]
     df = spark.createDataFrame(rows, PAYLOAD_SCHEMA)
-    return catalog.append(table, df, run_id)
+    return catalog.append(TABLE, df, "index")
 
 
 def load_payload(
@@ -90,18 +88,17 @@ def load_payload(
     catalog,
     fingerprint: str,
     kind: str,
-    table: str = _DEFAULT_TABLE,
 ):
     """Fetch + deserialize an artifact, or None on miss.  If the same
     key was persisted more than once (two jobs raced the same build),
     the chunks of ONE commit are taken — commits are whole artifacts,
     and identical keys imply identical bytes."""
-    if not catalog.exists(table):
+    if not catalog.exists(TABLE):
         return None
     from pyspark.sql import functions as F
 
     rows = (
-        catalog.read(spark, table)
+        catalog.read(spark, TABLE)
         .where(
             (F.col("fingerprint") == fingerprint) & (F.col("kind") == kind)
         )
@@ -131,18 +128,13 @@ def load_or_build(
     fingerprint: str,
     kind: str,
     builder,
-    table: str = _DEFAULT_TABLE,
-    run_id: str = "index",
 ):
     """The link-job entry point: returns ``(payload, built)`` where
     ``built`` says whether ``builder()`` ran (False = served from the
     catalog, the loadIndex fast path)."""
-    payload = load_payload(spark, catalog, fingerprint, kind, table=table)
+    payload = load_payload(spark, catalog, fingerprint, kind)
     if payload is not None:
         return payload, False
     payload = builder()
-    save_payload(
-        spark, catalog, fingerprint, kind, payload,
-        run_id=run_id, table=table,
-    )
+    save_payload(spark, catalog, fingerprint, kind, payload)
     return payload, True

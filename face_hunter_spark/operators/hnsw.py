@@ -284,21 +284,14 @@ class HNSWIndex:
     def n_items(self) -> int:
         return len(self.mat)
 
-    def search(self, q: np.ndarray, k: int = 1,
-               ef: int | None = None) -> tuple[np.ndarray, np.ndarray]:
-        """One query vector -> (ids, cosine distances), ascending by
-        distance (stable deterministic tie order)."""
-        ids, ds = self.search_batch(np.asarray(q, dtype=np.float32)[None, :],
-                                    k=k, ef=ef)
-        keep = ids[0] >= 0
-        return ids[0][keep], ds[0][keep]
-
-    def search_batch(self, q: np.ndarray, k: int = 1,
-                     ef: int | None = None) -> tuple[np.ndarray, np.ndarray]:
-        """(B, dim) queries -> (B, k) ids and distances (padded with
-        -1/inf when fewer than k reachable).  Lockstep-vectorized; see
-        module docstring."""
-        ef = max(ef or self.ef_search, k)
+    def search_batch(self, q: np.ndarray,
+                     k: int = 1) -> tuple[np.ndarray, np.ndarray]:
+        """(B, dim) queries -> (B, k) ids and cosine distances,
+        ascending by distance (stable deterministic tie order; padded
+        with -1/inf when fewer than k reachable).  Beam width
+        ``max(ef_search, k)``.  Lockstep-vectorized; see module
+        docstring."""
+        ef = max(self.ef_search, k)
         q = np.asarray(q, dtype=np.float32)
         B = len(q)
         out_ids = np.full((B, k), -1, dtype=np.int64)
@@ -598,7 +591,6 @@ class ShardedHNSW:
         self.n_items = int(n_items)
         self.centroids = centroids
         self.n_probe = int(n_probe)
-        self.ef_search = shards[0].ef_search if shards else 48
 
     @classmethod
     def from_offsets(cls, shards: list, offsets: np.ndarray,
@@ -610,10 +602,8 @@ class ShardedHNSW:
                for lo, hi in zip(offsets, ends)]
         return cls(shards, ids, n_items, centroids=None)
 
-    def search_batch(self, q: np.ndarray, k: int = 1,
-                     ef: int | None = None,
-                     n_probe: int | None = None
-                     ) -> tuple[np.ndarray, np.ndarray]:
+    def search_batch(self, q: np.ndarray,
+                     k: int = 1) -> tuple[np.ndarray, np.ndarray]:
         q = np.asarray(q, dtype=np.float32)
         B = len(q)
         out_ids = np.full((B, k), -1, dtype=np.int64)
@@ -624,7 +614,7 @@ class ShardedHNSW:
         if self.centroids is None:
             probes = np.tile(np.arange(S, dtype=np.int64), (B, 1))
         else:
-            P = min(max(1, n_probe or self.n_probe), S)
+            P = min(max(1, self.n_probe), S)
             qn = q / np.maximum(
                 np.linalg.norm(q, axis=1, keepdims=True), 1e-30
             )
@@ -637,7 +627,7 @@ class ShardedHNSW:
             rows_q, slots = np.nonzero(probes == s)
             if len(rows_q) == 0:
                 continue
-            ids_l, ds = self.shards[s].search_batch(q[rows_q], k=k, ef=ef)
+            ids_l, ds = self.shards[s].search_batch(q[rows_q], k=k)
             gids = np.where(ids_l >= 0, self.ids[s][ids_l], -1)
             col0 = slots * k
             for j in range(k):
@@ -646,14 +636,6 @@ class ShardedHNSW:
         order = np.argsort(cand_ds, axis=1, kind="stable")[:, :k]
         rows = np.arange(B)[:, None]
         return cand_ids[rows, order], cand_ds[rows, order]
-
-    def search(self, q: np.ndarray, k: int = 1,
-               ef: int | None = None) -> tuple[np.ndarray, np.ndarray]:
-        ids, ds = self.search_batch(
-            np.asarray(q, dtype=np.float32)[None, :], k=k, ef=ef
-        )
-        keep = ids[0] >= 0
-        return ids[0][keep], ds[0][keep]
 
     def to_payload(self) -> dict:
         return {
@@ -769,46 +751,24 @@ def sharded_payload_spark(
 
 
 def hnsw_score_batch(q: np.ndarray, labels: np.ndarray, idx,
-                     distance_threshold: float, k: int = 1,
-                     ef: int | None = None):
-    """Batch scoring with link-semantics identical to the other
-    matchers: top-k by distance, majority vote among thresholded
-    neighbors (ties -> nearest first), else 'unknown'.  k=1 (the
-    reference default, config.yaml:19) is the fully-vectorized path;
-    an empty gallery returns all-'unknown' like lsh_score_batch.
-    ``ef`` tunes the beam width; default = the index's ``ef_search``
-    (48 unless overridden at build/payload time).  Note this is
-    NARROWER than nmslib's query-time default (ef = efConstruction =
-    100): with Algorithm-4 diverse selection even ef=16 measured label
-    accuracy 1.0 on clustered galleries, so 48 keeps a 3x margin at
-    ~4x the throughput (BASELINE.md crossover table).  Pass
-    ``ef=idx.ef_construction`` where strict nmslib-default parity is
-    required."""
+                     distance_threshold: float):
+    """Batch 1-NN scoring (the reference default, config.yaml:19) with
+    link-semantics identical to the other matchers: the nearest
+    neighbor's label when it is under the threshold, else 'unknown';
+    an empty gallery returns all-'unknown' like lsh_score_batch.  The
+    beam width is the index's ``ef_search`` (48 unless overridden at
+    build/payload time).  Note this is NARROWER than nmslib's
+    query-time default (ef = efConstruction = 100): with Algorithm-4
+    diverse selection even ef=16 measured label accuracy 1.0 on
+    clustered galleries, so 48 keeps a 3x margin at ~4x the throughput
+    (BASELINE.md crossover table)."""
     n = len(q)
     out_lab = np.full(n, "unknown", dtype=object)
     out_d = np.full(n, np.nan, dtype=np.float32)
     if n == 0 or idx is None or idx.n_items == 0:
         return out_lab, out_d
-    ids, ds = idx.search_batch(q, k=k, ef=ef)
-    if k == 1:
-        hit = (ids[:, 0] >= 0) & (ds[:, 0] < distance_threshold)
-        out_lab[hit] = labels[ids[hit, 0]]
-        out_d[hit] = ds[hit, 0]
-        return out_lab, out_d
-    # k > 1: per-row majority vote among thresholded neighbors (the
-    # same contract as lsh_score_batch's k>1 path; test/tuning scale)
-    for i in range(n):
-        kept = [(ds[i, j], int(ids[i, j])) for j in range(k)
-                if ids[i, j] >= 0 and ds[i, j] < distance_threshold]
-        if not kept:
-            continue
-        votes: dict[str, int] = {}
-        for _, g in kept:
-            votes[labels[g]] = votes.get(labels[g], 0) + 1
-        top = max(votes.values())
-        d_best, g_best = next(
-            (d, g) for d, g in kept if votes[labels[g]] == top
-        )
-        out_lab[i] = labels[g_best]
-        out_d[i] = d_best
+    ids, ds = idx.search_batch(q, k=1)
+    hit = (ids[:, 0] >= 0) & (ds[:, 0] < distance_threshold)
+    out_lab[hit] = labels[ids[hit, 0]]
+    out_d[hit] = ds[hit, 0]
     return out_lab, out_d

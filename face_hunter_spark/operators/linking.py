@@ -306,45 +306,13 @@ def lsh_payload_from_arrays(
     )
 
 
-def _gather_candidates(keys: np.ndarray, csr):
-    """Vectorized multi-bucket gather: (n, bands) int keys + CSR bucket
-    index -> (face_of_candidate, gallery_of_candidate) flat arrays.
-    One searchsorted over the whole batch; the multi-slice gather is
-    the standard repeat/cumsum trick — zero Python loops.  Candidates
-    are NOT dedup'd across bands (duplicates cost a few extra einsum
-    rows but cannot change an argmin)."""
-    uniq_keys, offsets, members = csr
-    n, bands_ = keys.shape
-    flat = keys.ravel()
-    pos = np.searchsorted(uniq_keys, flat)
-    pos_c = np.minimum(pos, len(uniq_keys) - 1)
-    valid = (uniq_keys[pos_c] == flat) if len(uniq_keys) else np.zeros(
-        len(flat), dtype=bool
-    )
-    starts = offsets[pos_c[valid]]
-    lens = (offsets[pos_c[valid] + 1] - starts).astype(np.int64)
-    total = int(lens.sum())
-    if total == 0:
-        return (np.empty(0, np.int64), np.empty(0, np.int64))
-    base = np.repeat(starts, lens)
-    within = np.arange(total, dtype=np.int64) - np.repeat(
-        np.cumsum(lens) - lens, lens
-    )
-    flat_g = members[base + within]
-    face_of_band = np.repeat(np.arange(n, dtype=np.int64), bands_)[valid]
-    rep = np.repeat(face_of_band, lens)
-    return rep, flat_g
-
-
-def lsh_score_batch(
-    q: np.ndarray, payload, distance_threshold: float, k: int = 1
-):
+def lsh_score_batch(q: np.ndarray, payload, distance_threshold: float):
     """Score one batch of query embeddings against the broadcast LSH
     gallery payload.  Returns (labels object array, float32 distances);
     faces with no surviving candidate get 'unknown'/NaN.  The
     ``MATCHERS['lsh']`` score kernel.
 
-    k=1 (the reference default) runs as BUCKETED GEMM: per band, sort
+    The reference's 1-NN lookup as a BUCKETED GEMM: per band, sort
     faces by bucket key, then ONE BLAS matmul per occupied bucket
     (queries-in-bucket x bucket-members) with a scatter-min across
     bands.  The Python loop is bounded by the bucket space
@@ -354,9 +322,7 @@ def lsh_score_batch(
     fancy-indexed row gathers dominate.  Ties resolve nearest-first
     then lowest gallery index (bucket members are stored ascending, so
     argmin's first-occurrence rule gives the in-bucket tie, and the
-    scatter-min compares (distance, gallery) lexicographically).
-    k>1 keeps the gather path + per-face majority vote (test/tuning
-    scale only)."""
+    scatter-min compares (distance, gallery) lexicographically)."""
     labels, mat, norms, planes, csr, bands_, rpb = payload
     uniq_keys, offsets, members = csr
     n = len(q)
@@ -371,75 +337,38 @@ def lsh_score_batch(
     band_ids = (np.arange(bands_, dtype=np.int64) << 24).reshape(1, -1)
     keys = bits.reshape(n, bands_, rpb).astype(np.int64) @ weights
     keys = keys | band_ids
-    if k == 1:
-        qnorm = (q / qn[:, None]).astype(np.float32)
-        matn = (mat / norms[:, None]).astype(np.float32)
-        best_d = np.full(n, np.inf)
-        best_g = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
-        for b in range(bands_):
-            kb = keys[:, b]
-            order = np.argsort(kb, kind="stable")
-            ks = kb[order]
-            pos = np.searchsorted(uniq_keys, ks)
-            pos_c = np.minimum(pos, len(uniq_keys) - 1)
-            valid = uniq_keys[pos_c] == ks
-            runs = np.flatnonzero(np.diff(ks, prepend=ks[0] - 1))
-            for ri, start in enumerate(runs):
-                if not valid[start]:
-                    continue
-                end = runs[ri + 1] if ri + 1 < len(runs) else n
-                p = pos_c[start]
-                gsub = members[offsets[p]:offsets[p + 1]]
-                faces = order[start:end]
-                d = 1.0 - qnorm[faces] @ matn[gsub].T  # (m, g)
-                loc = np.argmin(d, axis=1)  # first occurrence = lowest g
-                ld = d[np.arange(len(faces)), loc]
-                lg = gsub[loc]
-                upd = (ld < best_d[faces]) | (
-                    (ld == best_d[faces]) & (lg < best_g[faces])
-                )
-                bf = faces[upd]
-                best_d[bf] = ld[upd]
-                best_g[bf] = lg[upd]
-        keep = np.isfinite(best_d) & (best_d < distance_threshold)
-        out_lab[keep] = labels[best_g[keep]]
-        out_dist[keep] = best_d[keep].astype(np.float32)
-        return out_lab, out_dist
-    rep, flat_g = _gather_candidates(keys, csr)
-    if not len(rep):
-        return out_lab, out_dist
-    dots = np.einsum("ij,ij->i", q[rep], mat[flat_g])
-    d = 1.0 - dots / (qn[rep] * norms[flat_g])
-    # k > 1: per-face top-k + majority vote (duplicates across bands
-    # must not double-vote -> dedup gallery ids per face first)
-    order = np.lexsort((flat_g, d, rep))
-    rs, gs, ds = rep[order], flat_g[order], d[order]
-    boundaries = np.flatnonzero(np.diff(rs, prepend=-1))
-    for bi, start in enumerate(boundaries):
-        end = boundaries[bi + 1] if bi + 1 < len(boundaries) else len(rs)
-        i = rs[start]
-        seen: set[int] = set()
-        kept = []
-        for j in range(start, end):
-            if gs[j] in seen:
+    qnorm = (q / qn[:, None]).astype(np.float32)
+    matn = (mat / norms[:, None]).astype(np.float32)
+    best_d = np.full(n, np.inf)
+    best_g = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
+    for b in range(bands_):
+        kb = keys[:, b]
+        order = np.argsort(kb, kind="stable")
+        ks = kb[order]
+        pos = np.searchsorted(uniq_keys, ks)
+        pos_c = np.minimum(pos, len(uniq_keys) - 1)
+        valid = uniq_keys[pos_c] == ks
+        runs = np.flatnonzero(np.diff(ks, prepend=ks[0] - 1))
+        for ri, start in enumerate(runs):
+            if not valid[start]:
                 continue
-            seen.add(gs[j])
-            if ds[j] < distance_threshold:
-                kept.append(j)
-            if len(seen) >= k:
-                break
-        if not kept:
-            continue
-        if len(kept) == 1:
-            best = kept[0]
-        else:
-            votes: dict[str, int] = {}
-            for j in kept:
-                votes[labels[gs[j]]] = votes.get(labels[gs[j]], 0) + 1
-            top = max(votes.values())
-            best = next(j for j in kept if votes[labels[gs[j]]] == top)
-        out_lab[i] = labels[gs[best]]
-        out_dist[i] = ds[best]
+            end = runs[ri + 1] if ri + 1 < len(runs) else n
+            p = pos_c[start]
+            gsub = members[offsets[p]:offsets[p + 1]]
+            faces = order[start:end]
+            d = 1.0 - qnorm[faces] @ matn[gsub].T  # (m, g)
+            loc = np.argmin(d, axis=1)  # first occurrence = lowest g
+            ld = d[np.arange(len(faces)), loc]
+            lg = gsub[loc]
+            upd = (ld < best_d[faces]) | (
+                (ld == best_d[faces]) & (lg < best_g[faces])
+            )
+            bf = faces[upd]
+            best_d[bf] = ld[upd]
+            best_g[bf] = lg[upd]
+    keep = np.isfinite(best_d) & (best_d < distance_threshold)
+    out_lab[keep] = labels[best_g[keep]]
+    out_dist[keep] = best_d[keep].astype(np.float32)
     return out_lab, out_dist
 
 
@@ -521,8 +450,7 @@ MATCHERS: dict[str, Matcher] = {
 }
 
 
-def gallery_payload(strategy: str, arrays, index_catalog=None,
-                    table: str = "ann_index"):
+def gallery_payload(strategy: str, arrays, index_catalog=None):
     """Driver side of ``MATCHERS[strategy]``: ``(payload, built)``.
     With an ``index_catalog`` a cacheable payload is loaded from the
     catalog by gallery content hash + build parameters (``built`` is
@@ -543,5 +471,5 @@ def gallery_payload(strategy: str, arrays, index_catalog=None,
     )
     return index_store.load_or_build(
         SparkSession.getActiveSession(), index_catalog, key, strategy,
-        lambda: m.build(arrays), table=table,
+        lambda: m.build(arrays),
     )

@@ -268,10 +268,14 @@ def ivf_topk_expr(
         F.col(c_id).alias("c_id"),
         F.col("embedding").cast("array<double>").alias("cv"),
     )
-    wc = Window.orderBy(F.md5(F.col("c_id").cast("string")), "c_id")
+    # number only the first n_cells rows: a row_number over the whole
+    # corpus moves it to one partition whenever the optimizer's own
+    # window-limit rewrite is off (n_cells above
+    # spark.sql.optimizer.windowGroupLimitThreshold)
+    order = [F.md5(F.col("c_id").cast("string")), F.col("c_id")]
     cents = (
-        c.withColumn("cent_idx", F.row_number().over(wc))
-        .where(F.col("cent_idx") <= n_cells)
+        c.orderBy(*order).limit(n_cells)
+        .withColumn("cent_idx", F.row_number().over(Window.orderBy(*order)))
         .select("cent_idx", F.col("cv").alias("cent_v"))
     )
 

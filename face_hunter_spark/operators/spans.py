@@ -63,16 +63,11 @@ def reassemble_spans(exploded: DataFrame) -> DataFrame:
     )
 
 
-def media_frames(documents: DataFrame, sample_every: int = 1) -> DataFrame:
+def media_frames(documents: DataFrame) -> DataFrame:
     """Media spans only, with frame_no parsed from media_ref and the
     reference's synthesized by-second timestamps (frame_no * 1000 ms,
-    face_recognition.py:113-121).
-
-    ``sample_every`` keeps 1 of every k frames — applied here, before
-    any Python UDF, so Catalyst prunes columns (spans.text never read)
-    and the decode stage sees only sampled rows.
-    """
-    media = (
+    face_recognition.py:113-121)."""
+    return (
         explode_spans(documents)
         .where(F.col("kind") == "media")
         .select(
@@ -82,7 +77,5 @@ def media_frames(documents: DataFrame, sample_every: int = 1) -> DataFrame:
             .alias("frame_no"),
             "media_ref",
         )
+        .withColumn("ts_ms", (F.col("frame_no") * 1000.0).cast("double"))
     )
-    if sample_every > 1:
-        media = media.where(F.col("frame_no") % sample_every == 0)
-    return media.withColumn("ts_ms", (F.col("frame_no") * 1000.0).cast("double"))

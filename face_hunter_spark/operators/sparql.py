@@ -181,6 +181,8 @@ DEFAULT_PREFIXES: dict[str, str] = {
     "dbo": "http://dbpedia.org/ontology/",
 }
 
+_XSD = DEFAULT_PREFIXES["xsd"]
+
 _TOKEN_RE = re.compile(
     r"""
       (?P<WS>\s+)
@@ -193,8 +195,8 @@ _TOKEN_RE = re.compile(
     | (?P<LANGTAG>@[A-Za-z][A-Za-z0-9-]*)
     | (?P<DTSEP>\^\^)
     | (?P<VAR>[?$][A-Za-z_][A-Za-z0-9_]*)
-    | (?P<NUMBER>[+-]?(?:\d+\.\d*|\.\d+|\d+))
-    | (?P<PNAME>[A-Za-z_][A-Za-z0-9_.-]*?:[A-Za-z0-9_#-]*)
+    | (?P<NUMBER>[+-]?(?:\d+\.\d*|\.\d+|\d+)(?:[eE][+-]?\d+)?)
+    | (?P<PNAME>(?:[A-Za-z_][A-Za-z0-9_.-]*?)?:[A-Za-z0-9_#-]*)
     | (?P<NAME>[A-Za-z_][A-Za-z0-9_]*)
     | (?P<OP>&&|\|\||!=|<=|>=|[{}().;,=<>!*+\[\]/|^?])
     """,
@@ -730,7 +732,7 @@ class _Parser:
             if self._at_kw(kw):
                 self._next()
                 n = self._next()
-                if n.kind != "NUMBER" or "." in n.text:
+                if n.kind != "NUMBER" or any(c in n.text for c in ".eE"):
                     raise ValueError(f"{kw.upper()} needs an integer")
                 setattr(q, kw, int(n.text))
 
@@ -1389,7 +1391,12 @@ class _Parser:
                     raise ValueError("^^ needs a datatype IRI")
             return self._string_term(lex, lang, dt_iri)
         if t.kind == "NUMBER":
-            return self._number_term(t.text)
+            return self._literal_term(t.text, _XSD + (
+                "double" if "e" in t.text.lower()
+                else "decimal" if "." in t.text else "integer"
+            ))
+        if t.kind == "NAME" and t.text in ("true", "false") and not pred_pos:
+            return self._literal_term(t.text, _XSD + "boolean")
         if t.kind == "OP" and t.text == "[" and not pred_pos:
             # '[]' anonymous blank node = wildcard
             self._expect_op("]")
@@ -1405,13 +1412,13 @@ class _Parser:
     # literal-shape hooks: the read path matches lexically, but string
     # literals come back as Lit (str subclass) so a literal spelled
     # "?x" is not mistaken for a variable and the UPDATE parser keeps
-    # datatype/lang for the rows it materializes.  Numbers stay bare
-    # text on the read path; sparql_update overrides them to typed
-    # literals.
+    # datatype/lang for the rows it materializes.  Numbers and booleans
+    # stay bare text on the read path; sparql_update overrides them to
+    # typed literals.
     def _string_term(self, lex: str, lang, datatype_iri):
         return Lit(lex, datatype_iri, lang)
 
-    def _number_term(self, text: str):
+    def _literal_term(self, text: str, datatype_iri: str):
         return text
 
     def _expand_pname(self, t: _Tok) -> str:
@@ -1458,7 +1465,7 @@ class _Parser:
 
     _CMP = {"=": "=", "!=": "<>", "<": "<", ">": ">", "<=": "<=", ">=": ">="}
 
-    _NUM_LIT = re.compile(r"^[+-]?(\d+\.?\d*|\.\d+)$")
+    _NUM_LIT = re.compile(r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$")
 
     def _maybe_cmp(self, left: str) -> str:
         t = self._peek()

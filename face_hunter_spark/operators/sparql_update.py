@@ -69,8 +69,6 @@ __all__ = [
     "execute_update",
 ]
 
-_XSD = "http://www.w3.org/2001/XMLSchema#"
-
 # parsed literals come from the shared parser (sparql.Lit — a str
 # subclass carrying datatype/lang); kept under the old private name
 # for callers/tests that imported it from here
@@ -97,11 +95,10 @@ class ParsedUpdate:
 
 class _UpdateParser(_Parser):
     # string literals already arrive as Lit from the shared parser;
-    # numbers additionally get their XSD datatype so INSERT DATA
-    # materializes them as typed literals
-    def _number_term(self, text):
-        dt = _XSD + ("decimal" if "." in text else "integer")
-        return Lit(text, dt, None)
+    # numbers and booleans additionally keep their XSD datatype so
+    # INSERT DATA materializes them as typed literals
+    def _literal_term(self, text, datatype_iri):
+        return Lit(text, datatype_iri, None)
 
     def parse_update_request(self) -> list["ParsedUpdate"]:
         """A full SPARQL 1.1 update REQUEST: one or more operations
@@ -430,8 +427,10 @@ _ABSOLUTE_IRI = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
 def parse_turtle(text: str) -> list:
     """The n3/Turtle reader: (subj, pred, obj) triples in document
     order, literal objects as :class:`Lit` (lexical form + datatype).
-    Read: prefixes, ``;`` / ``,`` / ``a`` lists, short and long
-    strings, ``^^`` datatypes, numbers as xsd:integer / xsd:decimal.
+    Read: prefixes (the empty ``:`` prefix too), ``;`` / ``,`` / ``a``
+    lists, short and long strings, ``^^`` datatypes, numbers as
+    xsd:integer / xsd:decimal / xsd:double (``1e5``) and
+    ``true`` / ``false`` as xsd:boolean.
     Dropped: ``@lang`` tags.  Refused: blank nodes, collections,
     ``@base`` and relative IRIs.  Every refusal is a ValueError whose
     message starts with "cannot parse n3"."""
@@ -765,27 +764,32 @@ def _apply_op(
 
 
 def _parsed_shape_lookup(spark: SparkSession, u: ParsedUpdate):
-    """Small lookup DataFrame (obj, _plit, _pdt) of the literal shapes
-    the PARSER saw in this update's inserted objects — the DATA block's
-    literals plus the modify form's constant template objects.  Keyed
-    by lexical value (a lexical form appearing as both literal and URI
-    in one update is degenerate; the literal shape wins), joined as a
-    plain equi-join so a large legitimate batch stays flat instead of
-    an O(n)-deep when/otherwise expression chain.  None when the
-    update inserts no literal constants."""
-    objs = [o for _, _, o in u.data]
-    for tpl in u.insert_template or []:
-        objs.append(tpl[2])
-    rows = {}
-    for o in objs:
-        if isinstance(o, Lit):
-            rows[str(o)] = (True, o.datatype)
+    """``(lookup, key)``: a small DataFrame of the literal shapes
+    (``_plit``, ``_pdt``) the PARSER saw in this update's inserted
+    objects, and the columns to join it on; None when the update
+    inserts no literal constants.  DATA rows are ground, so each row
+    keys its own shape on (subj, pred, obj) — ``"5"`` and ``5`` in one
+    block keep their own datatypes.  The modify form's constant
+    template objects key on the lexical value alone, since their
+    subject and predicate may be variables (a lexical form appearing as
+    both literal and URI in one template is degenerate; the literal
+    shape wins).  Joined as a plain equi-join so a large legitimate
+    batch stays flat instead of an O(n)-deep when/otherwise expression
+    chain."""
+    if u.data:
+        key = ["subj", "pred", "obj"]
+        rows = {(str(s), str(p), str(o)): o.datatype
+                for s, p, o in u.data if isinstance(o, Lit)}
+    else:
+        key = ["obj"]
+        rows = {(str(o),): o.datatype
+                for _, _, o in u.insert_template or [] if isinstance(o, Lit)}
     if not rows:
         return None
     return spark.createDataFrame(
-        [(k, v[0], v[1]) for k, v in rows.items()],
-        "obj string, _plit boolean, _pdt string",
-    )
+        [(*k, True, dt) for k, dt in rows.items()],
+        "".join(f"{c} string, " for c in key) + "_plit boolean, _pdt string",
+    ), key
 
 
 def execute_update(
@@ -962,7 +966,7 @@ def _execute_one(
         ins = ins.select("subj", "pred", "obj").distinct()
         shapes = _parsed_shape_lookup(spark, u)
         if shapes is not None:
-            ins = ins.join(shapes, ["obj"], "left")
+            ins = ins.join(*shapes, "left")
         else:
             ins = ins.withColumn(
                 "_plit", F.lit(None).cast("boolean")

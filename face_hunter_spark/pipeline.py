@@ -43,7 +43,7 @@ from __future__ import annotations
 import time
 import uuid
 from contextlib import contextmanager
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -93,14 +93,12 @@ def link_documents(
     entity_catalog: DataFrame,
     distance_threshold: float = 0.6,
     frame_threshold: int = 3,
-    sample_every: int = 1,
     n_entities: int = 54,
     strategy: str = "bruteforce",
     one_face: bool = False,
     encoder: str = "hash",
     mention_labels: DataFrame | None = None,
     index_catalog=None,
-    index_table: str = "ann_index",
     broadcast_budget_rows: int = GALLERY_BROADCAST_BUDGET_ROWS,
 ) -> DataFrame:
     """documents -> un-partitioned triples DataFrame (pure transform).
@@ -137,7 +135,7 @@ def link_documents(
     # fan the frame rows out BEFORE the Python stage: a narrow parquet
     # scan otherwise pins the decode/embed UDF to 1-2 tasks
     media = ensure_parallelism(
-        spans.media_frames(documents, sample_every=sample_every), by="doc_id"
+        spans.media_frames(documents), by="doc_id"
     )
     if gallery_df is not None:
         # over-budget gallery: the shuffle-side LSH join
@@ -153,8 +151,7 @@ def link_documents(
         # matched inside the fused decode+embed stage (embeddings never
         # cross Arrow)
         payload, _ = linking.gallery_payload(
-            strategy, linking._gallery_arrays(gallery_pdf), index_catalog,
-            table=index_table,
+            strategy, linking._gallery_arrays(gallery_pdf), index_catalog
         )
         linked = vision.detect_embed_link(
             media, SparkSession.getActiveSession().sparkContext.broadcast(
@@ -256,15 +253,10 @@ def run_link_job(
     """Idempotent link job: skips docs already in the triple table and
     commits the rest as ONE snapshot (see :func:`commit_run`).
     Returns stats."""
-    t_start = time.monotonic()
-    run_id = run_id or uuid.uuid4().hex[:12]
 
-    # cache_index=True persists/reuses ANN payloads (hnsw, lsh)
-    # through THIS catalog, keyed by gallery content hash
-    if kwargs.pop("cache_index", False):
-        kwargs.setdefault("index_catalog", catalog)
-
-    if catalog.exists("triples"):
+    def new_docs(docs: DataFrame) -> DataFrame:
+        if not catalog.exists("triples"):
+            return docs
         existing = (
             catalog.read(spark, "triples")
             .where(F.col("pred") == NS["rdf_type"])
@@ -272,22 +264,56 @@ def run_link_job(
             .select("doc_id")
             .distinct()
         )
-        documents = documents.join(existing, "doc_id", "left_anti")
+        return docs.join(existing, "doc_id", "left_anti")
+
+    return _link_and_commit(
+        catalog, documents, gallery_pdf, entity_catalog, run_id, canon,
+        kwargs, new_docs=new_docs, new_rows=lambda rows: rows,
+    )
+
+
+def _link_and_commit(
+    catalog: ParquetCatalog,
+    documents: DataFrame,
+    gallery,
+    entity_catalog: DataFrame,
+    run_id: str | None,
+    canon: DataFrame | None,
+    link_kwargs: dict,
+    *,
+    new_docs: Callable[[DataFrame], DataFrame],
+    new_rows: Callable[[DataFrame], DataFrame],
+) -> dict:
+    """The run body the link and relink jobs share: link
+    ``new_docs(documents)`` against ``gallery``, canonicalize once and
+    commit ``new_rows`` of the result as ONE snapshot (:func:`commit_run`).
+    The link job skips committed docs before linking; the relink job
+    links every doc and keeps only the rows not yet committed.
+
+    ``link_kwargs`` go to :func:`link_documents`; ``cache_index=True``
+    in them persists/reuses ANN payloads (hnsw, lsh) through THIS
+    catalog, keyed by gallery content hash."""
+    t_start = time.monotonic()
+    run_id = run_id or uuid.uuid4().hex[:12]
+    if link_kwargs.pop("cache_index", False):
+        link_kwargs.setdefault("index_catalog", catalog)
 
     # north_rule: mentions canonicalize to QIDs IN the materialized
     # table (obj_canonical next to the DBpedia-preferred obj) + the
     # doc-level (doc, sdo:depicts, QID) rows.  canon is recomputable
-    # from the catalog but involves an iterative CC loop; repeated
-    # callers (facade, streaming foreachBatch) pass their cached map.
+    # from the catalog but involves an iterative CC loop; the facade
+    # (and the stream and job that link through it) pass its cached map.
     with canonicalized_once(
         T.with_partitioning(
-            link_documents(documents, gallery_pdf, entity_catalog, **kwargs),
+            link_documents(
+                new_docs(documents), gallery, entity_catalog, **link_kwargs
+            ),
             run_id,
         ),
         entity_catalog,
         canon,
-    ) as new_triples:
-        return commit_run(catalog, new_triples, run_id, t_start)
+    ) as rows:
+        return commit_run(catalog, new_rows(rows), run_id, t_start)
 
 
 def commit_run(

@@ -160,8 +160,8 @@ def import_n3(
 
     The document is read as an INSERT DATA body
     (``sparql_update.parse_turtle``): prefixes, ``;`` / ``,`` / ``a``
-    lists, short and long strings, ``^^`` datatypes and numbers (as
-    xsd:integer / xsd:decimal) are read; ``@lang`` tags are dropped
+    lists, short and long strings, ``^^`` datatypes, numbers (as
+    xsd:integer / xsd:decimal / xsd:double) and booleans are read; ``@lang`` tags are dropped
     (the table has no language column); blank nodes, collections,
     ``@base`` and relative IRIs raise ValueError.
 

@@ -7,11 +7,12 @@ KG-construction deployment needs:
 
 1. ``stream_link_documents`` — incremental ingestion: a file stream of
    ``documents``-shaped parquet, processed with foreachBatch, where
-   each micro-batch runs the SAME idempotent link job (anti-join vs
-   committed triples + one snapshot append).  Exactly-once at
-   the doc level comes from the anti-join, not from sink-side state,
-   so replays/restarts are safe by construction — the streaming analog
-   of the reference's skip guard.  Every stage of link_documents is a
+   each micro-batch is one ``SparkHunter.link`` — the SAME idempotent
+   link job (anti-join vs committed triples + one snapshot append) over
+   the handle's prepared state.  Exactly-once at the doc level comes
+   from the anti-join, not from sink-side state, so replays/restarts
+   are safe by construction — the streaming analog of the reference's
+   skip guard.  Every stage of link_documents is a
    stateless transform (scene extraction is per-doc-complete), so no
    watermark/state-store is needed on this path.
 
@@ -27,42 +28,33 @@ production.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from typing import TYPE_CHECKING
 
-from .catalog import ParquetCatalog
-from .pipeline import run_link_job
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame
+
 from .schemas import DOCUMENTS
+
+if TYPE_CHECKING:
+    from .hunter import SparkHunter
 
 
 def stream_link_documents(
-    spark: SparkSession,
+    hunter: SparkHunter,
     input_dir: str,
-    catalog: ParquetCatalog,
-    gallery_pdf,
-    entity_catalog: DataFrame,
     checkpoint_dir: str,
-    n_entities: int = 54,
     available_now: bool = True,
-    **link_kwargs,
 ):
-    """Start (and with available_now=True, drain) the ingestion stream.
-    Returns the StreamingQuery."""
+    """Start (and with available_now=True, drain) the ingestion stream:
+    each micro-batch is one ``hunter.link``, so every batch reuses the
+    handle's gallery, settings and cached canonical map.  Returns the
+    StreamingQuery."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        run_link_job(
-            spark,
-            catalog,
-            batch_df,
-            gallery_pdf,
-            entity_catalog,
-            run_id=f"stream-{batch_id:06d}",
-            n_entities=n_entities,
-            **link_kwargs,
-        )
+        hunter.link(batch_df, run_id=f"stream-{batch_id:06d}")
 
     stream = (
-        spark.readStream.schema(DOCUMENTS)
+        hunter.spark.readStream.schema(DOCUMENTS)
         .parquet(input_dir)
         .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)

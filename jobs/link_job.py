@@ -15,8 +15,9 @@ Usage (local example; on a cluster swap --master and executor confs):
 
 Reads a documents table (either already in the interleaved
 (doc_id, spans) shape, or the driver corpus shape which is wrapped
-into spans), runs the idempotent link pipeline, appends ONE committed
-snapshot, and prints one JSON stats line.  Lineage and run metrics are
+into spans), links it through ``SparkHunter.link`` (the idempotent
+link pipeline, ONE committed snapshot), and prints one JSON stats
+line.  Lineage and run metrics are
 derived reads over the committed triples (``pipeline.run_lineage`` /
 ``pipeline.run_metrics``; ``wall_ms`` of runs folded by ``compact()``
 reads null).
@@ -58,10 +59,7 @@ def main() -> int:
     spark = SparkSession.builder.appName("fhs-link-job").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from face_hunter_spark import synth
-    from face_hunter_spark.catalog import ParquetCatalog
-    from face_hunter_spark.pipeline import run_link_job
-    from face_hunter_spark.schemas import ENTITY_CATALOG
+    from face_hunter_spark.hunter import SparkHunter
 
     docs = spark.read.parquet(args.documents)
     if "spans" not in docs.columns:
@@ -75,39 +73,22 @@ def main() -> int:
             spark, os.path.dirname(args.documents.rstrip("/"))
         )
 
-    gallery_pdf = synth.make_gallery_pdf(n_entities=args.n_entities)
-    entity_catalog = spark.createDataFrame(
-        synth.make_entity_catalog_pdf(n_entities=args.n_entities),
-        ENTITY_CATALOG,
-    )
-    stats = run_link_job(
+    h = SparkHunter(
         spark,
-        ParquetCatalog(args.catalog_root),
-        docs,
-        gallery_pdf,
-        entity_catalog,
-        run_id=args.run_id,
+        args.catalog_root,
         n_entities=args.n_entities,
+        strategy=args.strategy,
         distance_threshold=args.distance_threshold,
         frame_threshold=args.frame_threshold,
-        strategy=args.strategy,
         one_face=args.one_face,
         cache_index=args.cache_index,
     )
+    stats = h.link(docs, run_id=args.run_id)
     if args.export_n3:
-        from face_hunter_spark.operators import rdf
-
-        cat = ParquetCatalog(args.catalog_root)
-        if args.export_n3.endswith("/"):
-            # trailing slash = sharded form: executor-written
-            # doc_bucket part files (the 10^12-doc sink)
-            rdf.export_n3_sharded(
-                cat.read(spark, "triples"), args.export_n3.rstrip("/")
-            )
-        else:
-            text = rdf.triples_to_n3(cat.read(spark, "triples"))
-            with open(args.export_n3, "w") as f:
-                f.write(text)
+        # trailing slash = sharded form: executor-written doc_bucket
+        # part files (the 10^12-doc sink)
+        h.export_n3(args.export_n3.rstrip("/"),
+                    sharded=args.export_n3.endswith("/"))
         stats["n3_path"] = args.export_n3
     print(json.dumps(stats))
     spark.stop()

@@ -180,15 +180,15 @@ def test_streaming_batch_replay_is_idempotent(spark, tmp_path):
     anti-joins away: no duplicate triples, still one snapshot for the
     run, and its derived lineage unchanged."""
     from face_hunter_spark import streaming
+    from face_hunter_spark.hunter import SparkHunter
 
     docs, gal, ecat = _inputs(spark, n_docs=12)
     in_dir = str(tmp_path / "incoming")
     docs.write.parquet(in_dir)
     cat = ParquetCatalog(str(tmp_path / "kg"))
-    streaming.stream_link_documents(
-        spark, in_dir, cat, gal, ecat, str(tmp_path / "ckpt"),
-        n_entities=N_ENT,
-    )
+    h = SparkHunter(spark, str(tmp_path / "kg"), n_entities=N_ENT,
+                    gallery_pdf=gal, entity_catalog=ecat)
+    streaming.stream_link_documents(h, in_dir, str(tmp_path / "ckpt"))
 
     def lineage():
         return sorted(

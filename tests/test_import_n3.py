@@ -226,3 +226,29 @@ def test_seeded_export_parse_import_roundtrip(spark, tmp_path):
     got = cat.read(spark, "triples").select(*cols)
     assert got.exceptAll(want.select(*cols)).count() == 0
     assert got.count() == len(rows)
+
+
+XSD = "http://www.w3.org/2001/XMLSchema#"
+
+
+@pytest.mark.parametrize("doc, want", [
+    ("@prefix : <http://e/> .\n:a :p :b .\n",
+     ("http://e/a", "http://e/p", "http://e/b", False, None)),
+    ("@prefix ex: <http://e/> .\nex:a ex:p true .\n",
+     ("http://e/a", "http://e/p", "true", True, XSD + "boolean")),
+    ("<http://e/a> <http://e/p> 1e5 .\n",
+     ("http://e/a", "http://e/p", "1e5", True, XSD + "double")),
+], ids=["empty_prefix", "boolean", "exponent"])
+def test_import_turtle_terms(spark, tmp_path, doc, want):
+    """Hand-written Turtle: the empty prefix, true/false and exponent
+    numbers import with their Turtle datatypes."""
+    n3 = tmp_path / "doc.ttl"
+    n3.write_text(doc)
+    cat = ParquetCatalog(str(tmp_path / "kg"))
+    assert import_n3(spark, cat, str(n3))["inserted"] == 1
+    got = [
+        tuple(r) for r in cat.read(spark, "triples").select(
+            "subj", "pred", "obj", "obj_is_literal", "obj_datatype"
+        ).collect()
+    ]
+    assert got == [want]

@@ -398,3 +398,31 @@ def test_beyond_broadcast_gallery_join_never_replicates(spark):
             "doc_id", "frame_no", "face_idx", "label").collect())
     )
     assert got == want and len(got) > 0
+
+
+def test_ivf_centroid_numbering_reads_only_the_limit(spark):
+    """``ivf_topk_expr`` numbers its centroids after taking the first
+    n_cells corpus rows: each unpartitioned row_number Window reads a
+    TakeOrderedAndProject(limit=n_cells), so the corpus never moves to
+    one partition.  2048 cells is above the optimizer's own
+    window-limit rewrite (``spark.sql.optimizer.
+    windowGroupLimitThreshold``, 1000), so the plan shows what the code
+    asks for, not what the optimizer infers."""
+    from face_hunter_spark.operators.similarity import ivf_topk_expr
+
+    df = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 11) - 5.0 for j in range(4)])
+         for i in range(64)],
+        "id long, embedding array<float>",
+    )
+    out = ivf_topk_expr(
+        df.where("id < 8").withColumnRenamed("id", "q_id"),
+        df.withColumnRenamed("id", "c_id"), k=3, n_cells=2048, n_probe=3,
+    )
+    lines = plan_of(out).splitlines()
+    numbering = [i for i, line in enumerate(lines)
+                 if "Window [" in line and "AS cent_idx" in line]
+    assert numbering
+    for i in numbering:
+        assert "TakeOrderedAndProject(limit=2048," in lines[i + 1]
+    assert not any("SinglePartition" in line for line in lines)

@@ -248,6 +248,27 @@ def test_execute_insert_appends_one_snapshot_idempotently(
     assert len(cat.snapshots("triples")) == 2
 
 
+def test_insert_data_rows_keep_their_own_literal_datatype(spark, tmp_path):
+    """Two DATA rows whose literals share a lexical form commit with
+    their own datatypes: "5" stays a plain literal, 5 is xsd:integer."""
+    from face_hunter_spark.catalog import ParquetCatalog
+
+    cat = ParquetCatalog(str(tmp_path / "cat"))
+    execute_update(
+        spark, cat, "triples",
+        'INSERT DATA { <http://e/a> <http://e/p> "5" . '
+        "<http://e/b> <http://e/p> 5 . }",
+    )
+    got = {
+        r.subj: (r.obj, r.obj_is_literal, r.obj_datatype)
+        for r in cat.read(spark, "triples").collect()
+    }
+    assert got == {
+        "http://e/a": ("5", True, None),
+        "http://e/b": ("5", True, "http://www.w3.org/2001/XMLSchema#integer"),
+    }
+
+
 def test_insert_data_refuses_literal_subject_and_predicate(
     spark, tmp_path
 ):

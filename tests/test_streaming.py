@@ -16,7 +16,10 @@ N_ENT = 10
 
 
 @pytest.mark.slow
-def test_stream_ingestion_incremental(spark, tmp_path):
+def test_stream_ingestion_incremental(spark, tmp_path, monkeypatch):
+    from face_hunter_spark.hunter import SparkHunter
+    from face_hunter_spark.operators import canonical
+
     in_dir = str(tmp_path / "incoming")
     cat = ParquetCatalog(str(tmp_path / "kg"))
     ckpt = str(tmp_path / "ckpt")
@@ -26,12 +29,22 @@ def test_stream_ingestion_incremental(spark, tmp_path):
         synth.make_entity_catalog_pdf(n_entities=N_ENT, distractors=2),
         ENTITY_CATALOG,
     )
+    h = SparkHunter(spark, str(tmp_path / "kg"), n_entities=N_ENT,
+                    gallery_pdf=gallery, entity_catalog=ecat)
+    # every micro-batch links with the hunter's cached canonical map:
+    # the connected-components loop never reruns once it is built
+    canon_calls = []
+    real_canonical_map = canonical.canonical_map
+
+    def counted_canonical_map(*args, **kwargs):
+        canon_calls.append(args)
+        return real_canonical_map(*args, **kwargs)
+
+    monkeypatch.setattr(canonical, "canonical_map", counted_canonical_map)
     # batch 1: docs 0..19
     pdf = synth.make_documents_pdf(20, N_ENT)
     spark.createDataFrame(pdf, DOCUMENTS).write.mode("append").parquet(in_dir)
-    streaming.stream_link_documents(
-        spark, in_dir, cat, gallery, ecat, ckpt, n_entities=N_ENT
-    )
+    streaming.stream_link_documents(h, in_dir, ckpt)
     n1 = cat.read(spark, "triples").select("doc_id").distinct().count()
     assert n1 == 20
 
@@ -39,9 +52,8 @@ def test_stream_ingestion_incremental(spark, tmp_path):
     # anti-join, only 10 new docs linked)
     pdf2 = synth.make_documents_pdf(30, N_ENT)
     spark.createDataFrame(pdf2, DOCUMENTS).write.mode("append").parquet(in_dir)
-    streaming.stream_link_documents(
-        spark, in_dir, cat, gallery, ecat, ckpt, n_entities=N_ENT
-    )
+    streaming.stream_link_documents(h, in_dir, ckpt)
+    assert canon_calls == []
     tri = cat.read(spark, "triples")
     assert tri.select("doc_id").distinct().count() == 30
     # no doc got double-linked: each doc has exactly one rdf:type Video row
