@@ -212,9 +212,9 @@ def _q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate LSH top-k in the EXPRESSION-SIGNATURE form
     (hyperplane literals + float64 HOF dots), which is bit-reproducible
     in DuckDB — so even the ANN query is exact-oracle-checked,
-    bucketing included.  The numpy/GEMM forms (ann_lsh_topk,
-    linking.lsh_score_batch) are the production path and carry pytest recall
-    gates instead (float32 BLAS sign bits are not engine-portable)."""
+    bucketing included.  The link path's float32 GEMM LSH matcher
+    (linking.lsh_score_batch) carries pytest recall gates instead
+    (float32 BLAS sign bits are not engine-portable)."""
     from face_hunter_spark.operators.similarity import ann_lsh_topk_expr
 
     DQ.load_views(spark, sf_dir)
@@ -244,8 +244,7 @@ def _oracle_ann_lsh() -> str:
 def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat in the expression form (md5-ordered sample centroids,
     HOF float64 cosines) — exactly reproduced by the DuckDB oracle,
-    cell assignment included.  The pandas-UDF ivf_topk keeps the
-    pytest recall gate as the production path."""
+    cell assignment included."""
     from face_hunter_spark.operators.similarity import ivf_topk_expr
 
     DQ.load_views(spark, sf_dir)

@@ -106,20 +106,6 @@ def load_gallery_df(spark: SparkSession, catalog: ParquetCatalog) -> DataFrame:
     )
 
 
-def load_gallery_pdf(spark: SparkSession, catalog: ParquetCatalog) -> pd.DataFrame:
-    """Committed gallery -> the pandas frame the link jobs broadcast,
-    ordered by gallery_id (argmin tie-breaks stay deterministic across
-    enrichment appends).  SMALL-gallery convenience (a full driver
-    collect): jobs should pass :func:`load_gallery_df`'s DataFrame to
-    link_documents instead, which stays under the broadcast budget
-    automatically."""
-    return (
-        load_gallery_df(spark, catalog)
-        .orderBy("gallery_id")
-        .toPandas()
-    )
-
-
 def validate_candidates(
     candidates: DataFrame, encoder: str = "hash"
 ) -> DataFrame:

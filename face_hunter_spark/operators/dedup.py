@@ -1,5 +1,6 @@
 """Deduplication operators for training-data pipelines: exact,
-n-gram Jaccard, MinHash+LSH, SimHash, and embedding-cosine near-dup.
+n-gram Jaccard, MinHash+LSH, SimHash fingerprints, and semantic
+(embedding) dedup.
 
 Scale design notes (the point of each physical shape):
 
@@ -15,15 +16,11 @@ Scale design notes (the point of each physical shape):
                  signature is a universal-hash family over those ints —
                  one md5 pass total, int arrays (not strings) on the
                  wire, engine-portable (the DuckDB oracle regenerates
-                 the identical constants and signatures).  The md5-hex
-                 string variant (`minhash_signature`) is kept for
-                 API/teaching parity.
-* simhash      — 32-bit fingerprints via token-hash bit voting; near-
-                 dup candidates via 8-bit band equality (any pair at
-                 hamming distance <= 3 shares at least one of 4 bands),
-                 verified with bit_count(xor).
-* embedding    — exact cosine over blocked pairs (see similarity.py
-                 for the ANN path).
+                 the identical constants and signatures).
+* simhash      — 32-bit fingerprints via token-hash bit voting, one
+                 fold over the token array.
+* semantic     — k-means clusters bound the pair search; exact cosine
+                 within each cluster (``semantic_dedup``).
 
 All built-in expressions; no Python workers anywhere.
 """
@@ -173,24 +170,6 @@ def minhash_signature_int(hash_col, num_hashes: int) -> Column:
     return F.array(
         *[F.array_min(F.transform(hash_col, hasher(i)))
           for i in range(num_hashes)]
-    )
-
-
-def minhash_signature(sh_col, num_hashes: int) -> Column:
-    """Array of num_hashes minhash values.  Hash_i(s) = md5(i ':' s) as
-    a hex STRING; the lexicographic min over shingles is a valid
-    min-hash (md5 is uniform on hex strings) and is engine-portable."""
-    def hasher(i: int):
-        # closure over i — a default-arg lambda would be introspected
-        # as a 2-arg (elem, index) HOF lambda and receive the index
-        # column as the second parameter
-        return lambda s: F.md5(F.concat(F.lit(f"{i}:"), s))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(sh_col, hasher(i)))
-            for i in range(num_hashes)
-        ]
     )
 
 
@@ -376,182 +355,6 @@ def simhash32(text_col) -> Column:
     return _bind(F.transform(tokens(text_col), _tok_hash32), fingerprint)
 
 
-def simhash_pairs(
-    df: DataFrame,
-    max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_bucket_size: int | None = 5_000,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: block on 4 x 8-bit bands (pigeonhole:
-    hamming <= 3 over 32 bits guarantees >= 1 identical band), verify
-    with bit_count(a XOR b) <= max_hamming.  ``max_bucket_size`` drops
-    degenerate band buckets before the self-join (same quadratic-bucket
-    guard as minhash_lsh_pairs)."""
-    sh = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"), simhash32(F.col(text_col)).alias("simhash")
-    )
-    banded = sh.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":",
-                        F.lit(str(b)),
-                        F.shiftright("simhash", b * 8).bitwiseAND(F.lit(255)),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("band"),
-    )
-    # Same no-self-join shape as minhash_lsh_pairs: collect the band's
-    # (id, simhash) members with one groupBy, cap with a plain filter,
-    # unfold i<j combinations via HOF — the simhash subtree executes
-    # once instead of once per join side (HOF lambdas defeat exchange
-    # reuse), and the window pass disappears.
-    if max_bucket_size is not None:
-        # same pre-collect hot-bucket guard as minhash_lsh_pairs
-        # (ADVICE r3): an ORDER-BY-free window count on the band
-        # exchange the collect reuses — oversized bands drop before any
-        # membership array is materialized in an agg buffer, with no
-        # second exchange of the simhash subtree.
-        wb = Window.partitionBy("band")
-        banded = (
-            banded.withColumn("n_members", F.count(F.lit(1)).over(wb))
-            .where(F.col("n_members") <= max_bucket_size)
-            .drop("n_members")
-        )
-    grouped = (
-        banded.groupBy("band")
-        .agg(F.array_sort(
-            F.collect_list(F.struct("id", "simhash"))
-        ).alias("ms"))
-        .where(F.size("ms") >= 2)
-    )
-    return (
-        grouped.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ms",
-                        lambda x, i: F.transform(
-                            F.slice(
-                                "ms", i + 2,
-                                F.greatest(F.size("ms") - i - 1, F.lit(0)),
-                            ),
-                            lambda y: F.struct(
-                                x["id"].alias("id_a"),
-                                y["id"].alias("id_b"),
-                                x["simhash"].alias("h_a"),
-                                y["simhash"].alias("h_b"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b", "p.h_a", "p.h_b")
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-# ---------------------------------------------------- embedding near-dup
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str | None = None,
-    strategy: str | None = None,
-    lsh_bands: int = 8,
-    lsh_rows_per_band: int = 8,
-    dim: int | None = None,
-) -> DataFrame:
-    """Pairs with cosine similarity >= threshold.
-
-    Blocking strategy (the scale knob):
-    * ``block_col`` given -> exact within caller-provided blocks (a
-      label, a shard key, a coarse cluster id).
-    * no block_col -> random-hyperplane LSH blocking by DEFAULT
-      (strategy='lsh'): candidates restricted to band-bucket
-      collisions, then exact cosine verify.  Approximate (a pair at
-      >= threshold with no shared bucket is missed — recall grows with
-      lsh_bands), but shuffle stays O(N * bands) instead of O(N^2).
-    * ``strategy='exact'`` opts into the O(n^2) crossJoin — the
-      small-corpus / oracle-parity fallback, never the default.
-
-    When neither ``block_col`` nor ``strategy`` is given, a one-time
-    warning flags the approximate default (recall < 1 vs exact) so
-    library callers opt in knowingly (ADVICE r2).
-    """
-    if strategy is None:
-        strategy = "block" if block_col else "lsh"
-        if strategy == "lsh":
-            import warnings
-
-            warnings.warn(
-                "embedding_near_dup_pairs defaults to APPROXIMATE LSH "
-                "blocking without block_col (pairs sharing no band "
-                "bucket are missed; recall grows with lsh_bands) — "
-                "pass strategy='exact' for the O(n^2) exact scan or "
-                "strategy='lsh' to silence this",
-                stacklevel=2,
-            )
-    if strategy == "block" and not block_col:
-        raise ValueError("strategy='block' requires block_col")
-    e = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        *( [F.col(block_col).alias("blk")] if strategy == "block" else [] ),
-    )
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    nrm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda a_, x: a_ + x * x))  # noqa: E731
-    if strategy == "lsh":
-        from .linking import lsh_signature_udf
-
-        if dim is None:
-            # eager one-row probe (documented): needed to size the
-            # hyperplanes; pass dim explicitly to keep the plan lazy
-            row = df.select(F.size(vec_col).alias("d")).first()
-            if row is None:  # empty corpus -> empty result, any dim
-                dim = 1
-            else:
-                dim = row["d"]
-        sig = lsh_signature_udf(lsh_bands, lsh_rows_per_band, dim=dim)
-        e = e.withColumn("blk", F.explode(sig(F.col("v").cast("array<float>"))))
-        a = e.select(F.col("id").alias("id_a"), F.col("v").alias("va"), "blk")
-        b = e.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), "blk")
-        joined = (
-            a.join(b, "blk")
-            .where(F.col("id_a") < F.col("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    elif strategy == "block":
-        a = e.select(F.col("id").alias("id_a"), F.col("v").alias("va"), "blk")
-        b = e.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), "blk")
-        joined = a.join(b, "blk").where(F.col("id_a") < F.col("id_b"))
-    elif strategy == "exact":
-        a = e.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
-        b = e.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
-        joined = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
-    else:
-        raise ValueError(strategy)
-    return (
-        joined
-        .withColumn("cosine", dot / (nrm(F.col("va")) * nrm(F.col("vb"))))
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 # ---------------------------------------------------- near-dup clustering
 
 def dup_clusters(pairs: DataFrame, id_a: str = "id_a",
@@ -595,8 +398,8 @@ def dedup_corpus(
     loop runs on near-dup members alone; the final removal is one
     left_anti join on the id (broadcastable whenever the duplicate set
     is small relative to the corpus — the normal case).  Pass
-    ``pairs`` to reuse an already-computed pair table (e.g. Jaccard or
-    embedding near-dup pairs instead of MinHash)."""
+    ``pairs`` to reuse an already-computed pair table (e.g. Jaccard
+    pairs instead of MinHash)."""
     if pairs is None:
         pairs = minhash_lsh_pairs(
             df, threshold=threshold, num_hashes=num_hashes, bands=bands,

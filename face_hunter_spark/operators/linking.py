@@ -54,6 +54,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..schemas import EMBED_DIM
 from . import hnsw
 
 UNKNOWN = "unknown"
@@ -79,13 +80,13 @@ def _hyperplanes(n_bits: int, dim: int) -> np.ndarray:
     return rng.standard_normal((n_bits, dim)).astype(np.float32)
 
 
-def lsh_signature_udf(bands: int, rows_per_band: int, dim: int = 512):
+def lsh_signature_udf(bands: int, rows_per_band: int):
     """pandas UDF: embedding -> array of band bucket keys.  Bucket key
     packs (band_id << 24) | band_bits so a single int column joins."""
     # the packing reserves 24 low bits for band_bits; more rows per
     # band would silently collide across bands
     assert rows_per_band <= 24, "bucket packing supports rows_per_band <= 24"
-    planes = _hyperplanes(bands * rows_per_band, dim)
+    planes = _hyperplanes(bands * rows_per_band, EMBED_DIM)
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def sig(emb: pd.Series) -> pd.Series:
@@ -94,7 +95,7 @@ def lsh_signature_udf(bands: int, rows_per_band: int, dim: int = 512):
         mat = (
             np.vstack([np.asarray(e, dtype=np.float32) for e in emb[mask]])
             if mask.any()
-            else np.zeros((0, dim), np.float32)
+            else np.zeros((0, EMBED_DIM), np.float32)
         )
         bits = (mat @ planes.T) > 0  # (B, bands*rows)
         keys = np.zeros((bits.shape[0], bands), dtype=np.int64)

@@ -11,7 +11,9 @@ shapes, partition behavior, UDF signatures — is real and tested.
 Operators:
 * ``decode_media``       binary -> (width, height, format, ok)
 * ``extract_features``   binary -> fixed-dim float feature vector
-* ``sample_video_frames``one row per sampled frame of a video blob
+
+Video frames are sampled by the link pipeline itself
+(``spans.media_frames``), not here.
 """
 
 from __future__ import annotations
@@ -21,7 +23,6 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType, BinaryType, BooleanType, FloatType, IntegerType, StringType,
@@ -48,13 +49,6 @@ DECODED = StructType([
 FEATURES = StructType([
     StructField("media_id", StringType(), False),
     StructField("feature", ArrayType(FloatType()), True),
-])
-
-FRAMES = StructType([
-    StructField("media_id", StringType(), False),
-    StructField("frame_no", IntegerType(), False),
-    StructField("ts_ms", FloatType(), False),
-    StructField("frame_bytes", BinaryType(), True),
 ])
 
 FEATURE_DIM = 32
@@ -118,40 +112,6 @@ def extract_features(media: DataFrame, codec: str = "fake") -> DataFrame:
                                 "feature": pd.Series(feats, dtype=object)})
 
     return media.mapInPandas(fn, schema=FEATURES)
-
-
-def sample_video_frames(
-    media: DataFrame, every_ms: float = 1000.0, max_frames: int = 64,
-    codec: str = "fake",
-) -> DataFrame:
-    """Video blob -> one row per sampled frame (the reference's
-    1-frame-per-second sampling, face_recognition.py:113-126, over a
-    binary column).  Fake codec: frame count from the blob hash; frame
-    bytes = slice of the blob (stable)."""
-    _kernel(codec)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mids, fnos, tss, fbs = [], [], [], []
-            for mid, kind, content in zip(pdf["media_id"], pdf["kind"], pdf["content"]):
-                if kind != "video" or content is None or not len(content):
-                    continue
-                blob = bytes(content)
-                n = min(1 + hashlib.md5(blob).digest()[2] % 16, max_frames)
-                step = max(len(blob) // max(n, 1), 1)
-                for i in range(n):
-                    mids.append(mid)
-                    fnos.append(i)
-                    tss.append(i * every_ms)
-                    fbs.append(blob[i * step:(i + 1) * step])
-            yield pd.DataFrame({
-                "media_id": pd.Series(mids, dtype=object),
-                "frame_no": pd.array(fnos, dtype="int32"),
-                "ts_ms": pd.array(tss, dtype="float32"),
-                "frame_bytes": pd.Series(fbs, dtype=object),
-            })
-
-    return media.mapInPandas(fn, schema=FRAMES)
 
 
 def synth_media_df(spark, n: int = 20):

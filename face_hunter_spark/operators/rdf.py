@@ -157,10 +157,6 @@ def n3_document(triples: DataFrame) -> tuple[str, int]:
     return text, len(rows)
 
 
-def triples_to_n3(triples: DataFrame) -> str:
-    return n3_document(triples)[0]
-
-
 def export_n3_sharded(triples: DataFrame, path: str) -> int:
     """The 10^12-doc form of the n3 sink (module docstring): blocks are
     written as doc_bucket-partitioned text part files by the EXECUTORS

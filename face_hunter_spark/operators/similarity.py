@@ -7,9 +7,12 @@ Physical strategy by corpus size:
 * corpus fits in a broadcast (<~1 GB): ``cosine_topk_fast`` — one BLAS
   matmul per Arrow batch of queries.  Zero shuffle; the plan a 1000-
   executor cluster wants for gallery-sized corpora.
-* corpus too big to broadcast: ``ann_lsh_topk`` / ``ivf_topk`` — both
-  turn the similarity join into an equi-join on a bucket key, so the
-  shuffle is O(N * buckets_per_point), never O(N * M).
+* corpus too big to broadcast: ``ann_lsh_topk_expr`` /
+  ``ivf_topk_expr`` — both turn the similarity join into an equi-join
+  on a bucket key, so the shuffle is O(N * buckets_per_point), never
+  O(N * M).  Both are built-in expressions end to end, so a DuckDB
+  oracle (``lsh_expr_oracle_sql`` / ``ivf_expr_oracle_sql``) checks
+  them row for row.
 """
 
 from __future__ import annotations
@@ -21,8 +24,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import (
-    ArrayType, FloatType, IntegerType, LongType, StringType, StructField,
-    StructType,
+    FloatType, IntegerType, LongType, StructField, StructType,
 )
 
 
@@ -103,55 +105,22 @@ def cosine_topk_fast(
     )
 
 
-def ann_lsh_topk(
+def ann_lsh_topk_expr(
     queries: DataFrame, corpus: DataFrame, k: int = 5,
     bands: int = 16, rows_per_band: int = 4, dim: int = 64,
     q_id: str = "q_id", c_id: str = "c_id",
 ) -> DataFrame:
     """Approximate top-k: hyperplane band buckets on both sides,
     equi-join, exact cosine rerank within candidates.  Recall grows
-    with `bands`; shuffle stays O(N*bands)."""
-    from .linking import lsh_signature_udf
+    with `bands`; shuffle stays O(N*bands).
 
-    sig = lsh_signature_udf(bands, rows_per_band, dim=dim)
-    q = queries.select(
-        F.col(q_id).alias("q_id"), F.col("embedding").alias("qv"),
-        F.explode(sig("embedding")).alias("bucket"),
-    )
-    c = corpus.select(
-        F.col(c_id).alias("c_id"), F.col("embedding").alias("cv"),
-        F.explode(sig("embedding")).alias("bucket"),
-    )
-    cand = (
-        q.join(c, "bucket")
-        .dropDuplicates(["q_id", "c_id"])
-        .withColumn("cosine", _dot(F.col("qv"), F.col("cv"))
-                    / (_norm(F.col("qv")) * _norm(F.col("cv"))))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "c_id")
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
-
-
-def ann_lsh_topk_expr(
-    queries: DataFrame, corpus: DataFrame, k: int = 5,
-    bands: int = 16, rows_per_band: int = 4, dim: int = 64,
-    q_id: str = "q_id", c_id: str = "c_id",
-) -> DataFrame:
-    """``ann_lsh_topk`` with the signature computed as BUILT-IN
-    expressions instead of a numpy pandas UDF: each band bucket is the
-    packed sign bits of float64 HOF dot products against hyperplane
-    LITERALS (same deterministic planes as the UDF).  Bit-reproducible
-    on any engine that evaluates IEEE float64 sums left-to-right — the
-    DuckDB oracle regenerates identical buckets, making this ANN
-    variant exactly checkable (the UDF form's float32 BLAS sums are
-    blocked/reordered, so a near-zero dot can flip a sign bit between
-    engines).  Slower per row than the GEMM signature — use it for
-    oracle checks and modest corpora; the UDF forms are the production
-    path."""
+    Each band bucket is the packed sign bits of float64 HOF dot
+    products against hyperplane LITERALS (the LSH matcher's
+    deterministic planes).  Bit-reproducible on any engine that
+    evaluates IEEE float64 sums left-to-right: the DuckDB oracle
+    regenerates identical buckets, so this ANN form is exactly
+    checkable (float32 BLAS sums are blocked/reordered, so a near-zero
+    dot could flip a sign bit between engines)."""
     from .linking import _hyperplanes
 
     planes = _hyperplanes(bands * rows_per_band, dim)
@@ -209,9 +178,9 @@ def lsh_expr_oracle_sql(
     planes = _hyperplanes(bands * rows_per_band, dim)
 
     def plane_dot(col, plane):
-        arr = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
-        return (f"list_sum(list_transform(range(1, {dim} + 1), "
-                f"i -> {col}[i] * ({arr})[i]))")
+        arr = "[" + ", ".join(repr(float(x)) for x in plane) + "]::DOUBLE[]"
+        return (f"list_sum(list_transform(list_zip({col}, {arr}), "
+                f"p -> p[1] * p[2]))")
 
     def band_keys(col):
         keys = []
@@ -256,14 +225,13 @@ def ivf_topk_expr(
     n_cells: int = 16, n_probe: int = 4,
     q_id: str = "q_id", c_id: str = "c_id",
 ) -> DataFrame:
-    """``ivf_topk`` as pure built-in expressions: centroids are the
-    first n_cells corpus rows in md5(id) order (engine-portable, unlike
-    an xxhash64 or numpy draw), cell assignment is a broadcast
-    join + cosine argmax window, search joins on cell id.  Exactly
-    reproducible in DuckDB (float64 HOF arithmetic end-to-end) — the
-    oracle-checkable form; the pandas-UDF ``ivf_topk`` is the
-    production path for corpora where per-row HOF cosines against
-    every centroid would dominate."""
+    """IVF-flat as pure built-in expressions: coarse-quantize the corpus
+    into n_cells cells and search the n_probe nearest cells per query.
+    Centroids are the first n_cells corpus rows in md5(id) order
+    (engine-portable, unlike an xxhash64 or numpy draw), cell
+    assignment is a broadcast join + cosine argmax window, search joins
+    on cell id.  Exactly reproducible in DuckDB (float64 HOF
+    arithmetic end-to-end)."""
     c = corpus.select(
         F.col(c_id).alias("c_id"),
         F.col("embedding").cast("array<double>").alias("cv"),
@@ -362,55 +330,3 @@ ranked AS (
 SELECT q_id, rank, c_id, round(cosine, {round_digits}) AS cosine
 FROM ranked WHERE rank <= {k}
 """
-
-
-def ivf_topk(
-    queries: DataFrame, corpus: DataFrame, k: int = 5,
-    n_cells: int = 16, n_probe: int = 4,
-    q_id: str = "q_id", c_id: str = "c_id",
-) -> DataFrame:
-    """IVF-flat: coarse-quantize the corpus into n_cells Voronoi cells
-    (centroids = deterministic corpus sample — k-means-free but stable;
-    swap in KMeans offline for production), search the n_probe nearest
-    cells per query.  Cell assignment is a broadcast argmax; the search
-    is an equi-join on cell id."""
-    cent_pdf = (
-        corpus.select(F.col(c_id).alias("id"), "embedding")
-        .orderBy(F.pmod(F.xxhash64(F.col("id").cast("string")), F.lit(997)), "id")
-        .limit(n_cells)
-        .toPandas()
-    )
-    cents = np.vstack([np.asarray(v, np.float32) for v in cent_pdf["embedding"]])
-    cents = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    spark = SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast(cents)
-
-    def assign_udf(n_out: int):
-        @F.pandas_udf(ArrayType(IntegerType()))
-        def assign(emb: pd.Series) -> pd.Series:
-            cm = bc.value
-            m = np.vstack([np.asarray(v, np.float32) for v in emb])
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sim = m @ cm.T
-            top = np.argsort(-sim, axis=1, kind="stable")[:, :n_out]
-            return pd.Series(list(top.astype(np.int32)))
-        return assign
-
-    c = corpus.select(
-        F.col(c_id).alias("c_id"), F.col("embedding").alias("cv"),
-        assign_udf(1)("embedding")[0].alias("cell"),
-    )
-    q = queries.select(
-        F.col(q_id).alias("q_id"), F.col("embedding").alias("qv"),
-        F.explode(assign_udf(n_probe)("embedding")).alias("cell"),
-    )
-    cand = q.join(c, "cell").withColumn(
-        "cosine",
-        _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "c_id")
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )

@@ -770,20 +770,26 @@ def _parsed_shape_lookup(spark: SparkSession, u: ParsedUpdate):
     inserts no literal constants.  DATA rows are ground, so each row
     keys its own shape on (subj, pred, obj) — ``"5"`` and ``5`` in one
     block keep their own datatypes.  The modify form's constant
-    template objects key on the lexical value alone, since their
-    subject and predicate may be variables (a lexical form appearing as
-    both literal and URI in one template is degenerate; the literal
-    shape wins).  Joined as a plain equi-join so a large legitimate
-    batch stays flat instead of an O(n)-deep when/otherwise expression
-    chain."""
+    template objects key on (pred, obj) when every literal-object
+    template triple has a constant predicate, so ``?s <q> "5" . ?s <r>
+    5`` keeps both datatypes; a variable predicate leaves the lexical
+    value alone as the key (a lexical form appearing as both literal
+    and URI in one template is degenerate; the literal shape wins).
+    Joined as a plain equi-join so a large legitimate batch stays flat
+    instead of an O(n)-deep when/otherwise expression chain."""
     if u.data:
         key = ["subj", "pred", "obj"]
         rows = {(str(s), str(p), str(o)): o.datatype
                 for s, p, o in u.data if isinstance(o, Lit)}
     else:
-        key = ["obj"]
-        rows = {(str(o),): o.datatype
-                for _, _, o in u.insert_template or [] if isinstance(o, Lit)}
+        lits = [(p, o) for _, p, o in u.insert_template or []
+                if isinstance(o, Lit)]
+        if any(bgp._is_var(p) for p, _ in lits):
+            key = ["obj"]
+            rows = {(str(o),): o.datatype for _, o in lits}
+        else:
+            key = ["pred", "obj"]
+            rows = {(str(p), str(o)): o.datatype for p, o in lits}
     if not rows:
         return None
     return spark.createDataFrame(

@@ -59,10 +59,6 @@ def _stopword_ratio_of(toks, lang: str) -> Column:
     return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(col, lang: str = "en") -> Column:
-    return _bind(tokens(col), lambda toks: _stopword_ratio_of(toks, lang))
-
-
 def punct_ratio(col) -> Column:
     n = F.length(col)
     non_alnum = F.length(F.regexp_replace(col, r"[a-zA-Z0-9\s]", ""))
@@ -74,10 +70,6 @@ def _mean_token_len_of(toks) -> Column:
         F.transform(toks, F.length), F.lit(0), lambda acc, x: acc + x
     )
     return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def mean_token_len(col) -> Column:
-    return _bind(tokens(col), _mean_token_len_of)
 
 
 def quality_score(col) -> Column:
@@ -109,11 +101,6 @@ def _lang_scores_of(toks) -> dict[str, Column]:
         lang: F.size(F.filter(toks, hit(sw)))
         for lang, sw in STOPWORDS.items()
     }
-
-
-def lang_scores(col) -> dict[str, Column]:
-    toks = tokens(col)
-    return _lang_scores_of(toks)
 
 
 def lang_id(col) -> Column:

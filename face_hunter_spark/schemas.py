@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -106,30 +105,6 @@ SCENES = StructType(
         StructField("entities", ArrayType(StringType()), False),  # sorted
         StructField("start_ms", DoubleType(), False),
         StructField("end_ms", DoubleType(), False),
-    ]
-)
-
-# The triple store IS this table (memory_store/virtuoso_store analogue).
-TRIPLES = StructType(
-    [
-        StructField("subj", StringType(), False),
-        StructField("pred", StringType(), False),
-        StructField("obj", StringType(), False),
-        StructField("obj_is_literal", BooleanType(), False),
-        StructField("obj_datatype", StringType(), True),
-        StructField("doc_id", StringType(), False),
-        StructField("doc_bucket", IntegerType(), False),
-        StructField("run_id", StringType(), False),
-    ]
-)
-
-LINEAGE = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("doc_bucket", IntegerType(), False),
-        StructField("n_docs", LongType(), False),
-        StructField("n_triples", LongType(), False),
-        StructField("status", StringType(), False),
     ]
 )
 

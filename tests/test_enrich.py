@@ -35,7 +35,7 @@ def setup(spark, tmp_path):
     )
     stats = run_link_job(
         spark, cat, docs,
-        enrich.load_gallery_pdf(spark, cat), ecat,
+        enrich.load_gallery_df(spark, cat), ecat,
         n_entities=N_DOC_ENTITIES,
     )
     assert stats["n_triples"] > 0
@@ -170,7 +170,7 @@ def test_enriched_gallery_changes_index_key(spark, setup):
     from face_hunter_spark.operators.linking import _gallery_arrays
 
     cat, docs, ecat = setup
-    g0 = enrich.load_gallery_pdf(spark, cat)
+    g0 = enrich.load_gallery_df(spark, cat).orderBy("gallery_id").toPandas()
     a0 = _gallery_arrays(g0)
     key0 = _gallery_fingerprint(a0[0], a0[1])
     cands = spark.createDataFrame(
@@ -178,6 +178,6 @@ def test_enriched_gallery_changes_index_key(spark, setup):
         enrich.CANDIDATES,
     )
     assert enrich.run_enrich_job(spark, cat, cands)["n_new_thumbs"] > 0
-    g1 = enrich.load_gallery_pdf(spark, cat)
+    g1 = enrich.load_gallery_df(spark, cat).orderBy("gallery_id").toPandas()
     a1 = _gallery_arrays(g1)
     assert _gallery_fingerprint(a1[0], a1[1]) != key0

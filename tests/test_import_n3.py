@@ -192,7 +192,7 @@ def _random_graph(rng, n_docs):
 
 def test_seeded_export_parse_import_roundtrip(spark, tmp_path):
     """Seeded round trip over random writer-shaped graphs in ONE
-    DataFrame: triples_to_n3 -> parse_n3 gives back the triple set,
+    DataFrame: n3_document -> parse_n3 gives back the triple set,
     and import_n3 commits the same rows with their literal shapes and
     the doc_id / doc_bucket the writer's subjects imply."""
     import random
@@ -206,7 +206,7 @@ def test_seeded_export_parse_import_roundtrip(spark, tmp_path):
         "subj string, pred string, obj string, obj_is_literal boolean, "
         "obj_datatype string",
     )
-    text = rdf.triples_to_n3(df)
+    text = rdf.n3_document(df)[0]
     assert rdf.parse_n3(text) == {r[:3] for r in rows}
 
     n3 = tmp_path / "random.n3"

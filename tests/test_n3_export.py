@@ -36,7 +36,7 @@ def triples(spark):
 
 
 def test_n3_roundtrip_exact(spark, triples):
-    text = rdf.triples_to_n3(triples)
+    text = rdf.n3_document(triples)[0]
     parsed = rdf.parse_n3(text)
     want = {
         (r.subj, r.pred, r.obj)
@@ -47,7 +47,7 @@ def test_n3_roundtrip_exact(spark, triples):
 
 
 def test_n3_block_shape(spark, triples):
-    text = rdf.triples_to_n3(triples)
+    text = rdf.n3_document(triples)[0]
     blocks = [b for b in text.split("\n\n") if b and not b.startswith("@prefix")]
     assert blocks, "no blocks emitted"
     scene_seen = video_seen = False
@@ -100,7 +100,7 @@ def test_n3_literal_escaping_roundtrip(spark):
     triples = video_triples(docs).withColumn(
         "obj_datatype", F.lit(None).cast("string")
     )
-    text = rdf.triples_to_n3(triples)
+    text = rdf.n3_document(triples)[0]
     assert '\\"hello\\"' in text and "\\n" in text
     # no raw newline inside any quoted literal
     for ln in text.splitlines():
@@ -161,7 +161,7 @@ def test_sharded_export_roundtrip(spark, triples, tmp_path):
     shards = [d for d in os.listdir(out) if d.startswith("doc_bucket=")]
     assert len(shards) >= 2, shards  # real sharding, not one bucket
     got = rdf.read_n3_sharded(out)
-    want = rdf.parse_n3(rdf.triples_to_n3(triples))
+    want = rdf.parse_n3(rdf.n3_document(triples)[0])
     assert got == want
 
 

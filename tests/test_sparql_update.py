@@ -248,20 +248,32 @@ def test_execute_insert_appends_one_snapshot_idempotently(
     assert len(cat.snapshots("triples")) == 2
 
 
-def test_insert_data_rows_keep_their_own_literal_datatype(spark, tmp_path):
-    """Two DATA rows whose literals share a lexical form commit with
-    their own datatypes: "5" stays a plain literal, 5 is xsd:integer."""
+@pytest.mark.parametrize("update, key", [
+    ('INSERT DATA { <http://e/a> <http://e/p> "5" . '
+     "<http://e/b> <http://e/p> 5 . }", "subj"),
+    ('INSERT { ?s <http://e/a> "5" . ?s <http://e/b> 5 . } '
+     "WHERE { ?s <http://e/p> ?o }", "pred"),
+], ids=["data", "modify"])
+def test_insert_data_rows_keep_their_own_literal_datatype(
+    spark, tmp_path, update, key
+):
+    """Two inserted rows whose literals share a lexical form commit
+    with their own datatypes: "5" stays a plain literal, 5 is
+    xsd:integer.  Both the DATA rows and the modify form's constant
+    template literals keep them."""
     from face_hunter_spark.catalog import ParquetCatalog
 
     cat = ParquetCatalog(str(tmp_path / "cat"))
-    execute_update(
-        spark, cat, "triples",
-        'INSERT DATA { <http://e/a> <http://e/p> "5" . '
-        "<http://e/b> <http://e/p> 5 . }",
-    )
+    seed = ("http://e/s", "http://e/p", "http://e/o")
+    if key == "pred":  # one row for the modify form's WHERE to match
+        execute_update(
+            spark, cat, "triples", "INSERT DATA { <%s> <%s> <%s> . }" % seed
+        )
+    execute_update(spark, cat, "triples", update)
     got = {
-        r.subj: (r.obj, r.obj_is_literal, r.obj_datatype)
+        r[key]: (r.obj, r.obj_is_literal, r.obj_datatype)
         for r in cat.read(spark, "triples").collect()
+        if (r.subj, r.pred, r.obj) != seed
     }
     assert got == {
         "http://e/a": ("5", True, None),

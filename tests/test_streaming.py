@@ -3,8 +3,6 @@ idempotent link job, and watermarked windowed aggregation (run with a
 memory sink via availableNow so it's a deterministic incremental
 batch)."""
 
-import os
-
 import pandas as pd
 import pytest
 
@@ -126,169 +124,3 @@ def test_windowed_counts_streaming_with_late_data(spark, tmp_path):
     # 00:00 window must include BOTH its rows (on-time + late)
     assert emitted[("2024-01-01 00:00:00", "A")] == 2
     assert emitted[("2024-01-01 00:02:00", "A")] == 1
-
-
-@pytest.mark.slow
-def test_streaming_scene_runs_state_across_batches(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): a scene run
-    that spans two micro-batches must come out as ONE scene — state
-    carries the open run across batches.  Empty frames close runs;
-    stale docs are flushed by event-time timeout when the watermark
-    passes them.  (Timestamps sit well above epoch 0: rows at/below
-    the initial watermark of 0 would be dropped as late.)"""
-    B = 1_000_000.0  # base event time, ms
-    src = str(tmp_path / "frames")
-    schema = "doc_id string, frame_no int, ts_ms double, labels array<string>"
-
-    def write(rows):
-        pdf = pd.DataFrame(
-            rows, columns=["doc_id", "frame_no", "ts_ms", "labels"]
-        )
-        # one file per logical batch: multi-part writes can split a
-        # batch's rows across micro-batches and race the watermark
-        spark.createDataFrame(pdf, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    # batch 1: d1 run A closes (A,A,B); d2 emits A via an empty frame
-    write([
-        ("d1", 0, B + 0.0, ["A"]), ("d1", 1, B + 1000.0, ["A"]),
-        ("d1", 2, B + 2000.0, ["B"]),
-        ("d2", 0, B + 0.0, ["A"]), ("d2", 1, B + 1000.0, []),
-    ])
-    stream_df = spark.readStream.schema(schema).parquet(src)
-    q = (
-        streaming.streaming_scene_runs(stream_df)
-        .writeStream.format("memory").queryName("scene_runs")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # batch 2: d1's open B run continues (must NOT restart), then
-        # C; d3 is far in the future and advances the watermark
-        write([
-            ("d1", 3, B + 3000.0, ["B"]), ("d1", 4, B + 4000.0, ["C"]),
-            ("d3", 0, B + 200000.0, ["Z"]),
-        ])
-        q.processAllAvailable()
-        # batch 3: more d3 data runs a batch in which the now-advanced
-        # watermark fires the event-time timeouts -> stale d1 flushes
-        # its open C run (d2 holds no open run, flushes nothing)
-        write([("d3", 1, B + 210000.0, ["Z"])])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql(
-        "select * from scene_runs order by doc_id, scene_idx"
-    ).collect()
-    # set-compare: the memory sink is not idempotent across micro-batch
-    # retries (a replayed batch appends its rows again under load), so
-    # exact-once delivery is a property of real checkpointed sinks, not
-    # of this test sink.  scene_idx still uniquely keys each scene, so
-    # set equality proves the operator emitted each scene exactly once.
-    got = {
-        (r.doc_id, r.scene_idx, r.entities, r.start_ms, r.end_ms, r.n_frames)
-        for r in rows
-    }
-    assert got == {
-        ("d1", 0, "A", B + 0.0, B + 1000.0, 2),
-        # one scene across the batch boundary: frames 2 and 3
-        ("d1", 1, "B", B + 2000.0, B + 3000.0, 2),
-        # stale-doc flush via event-time timeout
-        ("d1", 2, "C", B + 4000.0, B + 4000.0, 1),
-        ("d2", 0, "A", B + 0.0, B + 0.0, 1),
-    }
-
-
-@pytest.mark.slow
-def test_stream_dedup_documents(spark, tmp_path):
-    """Streaming exact dedup (dropDuplicatesWithinWatermark): a
-    re-fetched document inside the watermark horizon is dropped even
-    across micro-batches; once the watermark passes the horizon the
-    fingerprint's state is evicted and the same content is re-emitted
-    (the batch catalog anti-join owns cross-horizon dedup)."""
-    src = str(tmp_path / "docs")
-    schema = "doc_id string, text string, ts timestamp"
-
-    def write(rows):
-        pdf = pd.DataFrame(rows, columns=["doc_id", "text", "ts"])
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        spark.createDataFrame(pdf, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    write([(f"d{i}", f"text {i}", f"2024-01-01 00:00:0{i}")
-           for i in range(5)])
-    stream_df = spark.readStream.schema(schema).parquet(src)
-    q = (
-        streaming.stream_dedup_documents(stream_df, watermark="10 minutes")
-        .writeStream.format("memory").queryName("dedup_docs")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # d5 re-fetches d0's exact content within the horizon ->
-        # dropped; d6 is fresh -> kept
-        write([("d5", "text 0", "2024-01-01 00:01:00"),
-               ("d6", "fresh content", "2024-01-01 00:01:01")])
-        q.processAllAvailable()
-        got = {r.doc_id for r in spark.sql(
-            "select doc_id from dedup_docs").collect()}
-        assert got == {"d0", "d1", "d2", "d3", "d4", "d6"}
-        # advance the watermark far past every horizon (00:01:01 ->
-        # next batch's watermark = 00:51; all state expires at ~00:10)
-        write([("d7", "advance", "2024-01-01 01:01:00")])
-        q.processAllAvailable()
-        # beyond the horizon the SAME content is re-emitted: streaming
-        # state is bounded by the watermark, not the corpus
-        write([("d8", "text 0", "2024-01-01 01:02:00")])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("select doc_id, fingerprint from dedup_docs").collect()
-    ids = sorted(r.doc_id for r in rows)
-    assert ids == ["d0", "d1", "d2", "d3", "d4", "d6", "d7", "d8"]
-    # d8 carries d0's fingerprint (same content, re-admitted)
-    by_id = {r.doc_id: r.fingerprint for r in rows}
-    assert by_id["d8"] == by_id["d0"]
-    assert len(set(by_id.values())) == 7
-
-
-def test_stream_enrich_broadcasts_dim(spark, tmp_path):
-    """Stream-static enrichment: every micro-batch row gains the dim
-    attributes; unmatched keys survive a left join; invalid join types
-    fail loudly."""
-    import pyspark.sql.functions as F
-    import pytest
-
-    from face_hunter_spark.streaming import stream_enrich
-
-    src = str(tmp_path / "in")
-    spark.createDataFrame(
-        [("e1", 10), ("e2", 20), ("e3", 30)], "entity string, n int"
-    ).write.parquet(src)
-    dim = spark.createDataFrame(
-        [("e1", "person"), ("e2", "place")], "entity string, kind string"
-    )
-    stream = spark.readStream.schema("entity string, n int").parquet(src)
-    enriched = stream_enrich(stream, dim, "entity")
-    assert enriched.isStreaming
-    out = str(tmp_path / "out")
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r["entity"]: r for r in spark.read.parquet(out).collect()}
-    assert rows["e1"]["kind"] == "person"
-    assert rows["e2"]["kind"] == "place"
-    assert rows["e3"]["kind"] is None  # left join keeps unmatched
-    with pytest.raises(ValueError):
-        stream_enrich(stream, dim, "entity", how="full")
