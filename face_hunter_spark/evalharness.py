@@ -77,7 +77,8 @@ def evaluate_linking(
     distance_threshold: float = 0.6,
 ) -> dict:
     """Run the real linking path and score it against the planted
-    truth.  Returns {frame_metrics, video_accuracy} dicts."""
+    truth.  Returns {frame_metrics, video_accuracy} dicts.  The gallery
+    broadcast is destroyed once the metrics are collected."""
     from pyspark.sql import SparkSession
 
     media = ensure_parallelism(spans.media_frames(documents), by="doc_id")
@@ -101,7 +102,10 @@ def evaluate_linking(
 
     # ONE Spark job for both metric families (review r4: this used to
     # be two collects over a cached frame — two recomputes)
-    r = metrics.evaluation_report(joined).collect()[0]
+    try:
+        r = metrics.evaluation_report(joined).collect()[0]
+    finally:
+        bc.destroy()
     return {
         "frame_metrics": {
             "accuracy": r.accuracy, "precision": r.precision,

@@ -28,7 +28,7 @@ from functools import lru_cache
 
 import numpy as np
 
-EMBED_DIM = 512
+from .schemas import EMBED_DIM
 UNKNOWN_FRACTION = 10  # 1-in-10 faces is an out-of-gallery person
 JITTER_SIGMA = 0.04    # within-entity thumbnail/frame noise
 

@@ -12,10 +12,14 @@ decode+embed stage, so embeddings never cross the Arrow boundary.
 
 * ``'bruteforce'`` — exact 1-NN cosine against the whole gallery
   (face_recognition.py:300-314 semantics: dist = 1 - cos, argmin,
-  threshold else 'unknown', ties -> lowest gallery index).  The
-  payload is the raw arrays; the matrix is normalized once per
-  partition and each batch is ONE BLAS matmul.  Zero shuffle, zero
-  candidate blow-up — the better plan while the gallery is small.
+  threshold else 'unknown', ties -> lowest gallery index), as a
+  bound-pruned search.  The payload adds, per label, one pivot row and
+  the radius max ||g - p|| of its unit rows around the pivot's; since
+  q.g <= q.p + r, each batch runs ONE faces x labels BLAS matmul and
+  computes exact distances only over the rows of labels whose bound
+  can still reach the threshold (or the face's best distance so far).
+  The answer equals the whole-gallery argmin; an unmatched face gets
+  'unknown' and a NaN distance.
 * ``'lsh'`` — random-hyperplane LSH band buckets prune candidates
   (CSR bucket index built on the driver), then one BLAS matmul per
   occupied bucket (:func:`lsh_score_batch`).
@@ -65,7 +69,7 @@ def _gallery_arrays(gallery_pdf: pd.DataFrame):
     reference's list order."""
     g = gallery_pdf.sort_values("gallery_id")
     labels = g["label"].to_numpy()
-    mat = np.vstack([np.asarray(e, dtype=np.float32) for e in g["embedding"]])
+    mat = np.stack(g["embedding"].to_numpy()).astype(np.float32, copy=False)
     norms = np.linalg.norm(mat, axis=1)
     return labels, mat, norms
 
@@ -387,7 +391,8 @@ class Matcher(NamedTuple):
       parameters when the payload is worth caching across jobs.
     * ``prepare(payload) -> state`` — worker side, once per partition.
     * ``score(emb, state, threshold) -> (labels, distances)`` — once
-      per batch; 'unknown' where no neighbor is under ``threshold``.
+      per batch; 'unknown' and a NaN distance where no neighbor is
+      under ``threshold``.
     """
 
     build: Callable
@@ -404,19 +409,96 @@ def _identity(x):
     return x
 
 
+#: slack on the pivot bound, far above the float32 rounding of q.p,
+#: the radii and the exact distances (each ~1e-6 for unit vectors)
+_BOUND_EPS = np.float32(1e-4)
+#: gallery rows (build) or (face, row) pairs (score) per vectorized step
+_CHUNK_ROWS = 4096
+
+
+def _bruteforce_build(arrays):
+    """The :func:`_gallery_arrays` triple plus the per-label index:
+    ``(labels, mat, norms, codes, pivots, radii)`` with ``codes`` the
+    row's label code (a NULL label is its own code), ``pivots`` the
+    first row of each label and ``radii`` the largest distance from a
+    label's unit rows to its pivot's, computed in row chunks."""
+    labels, mat, norms = arrays
+    codes = pd.factorize(labels, use_na_sentinel=False)[0].astype(np.int32)
+    pivots = np.unique(codes, return_index=True)[1]
+    radii = np.zeros(len(pivots), dtype=np.float32)
+    for s in range(0, len(mat), _CHUNK_ROWS):
+        c = codes[s:s + _CHUNK_ROWS]
+        p = pivots[c]
+        gap = np.linalg.norm(
+            mat[s:s + _CHUNK_ROWS] / norms[s:s + _CHUNK_ROWS, None]
+            - mat[p] / norms[p, None],
+            axis=1,
+        )
+        np.fmax.at(radii, c, gap)
+    return labels, mat, norms, codes, pivots, radii
+
+
 def _bruteforce_prepare(payload):
-    labels, mat, norms = payload
-    return labels, (mat / norms[:, None]).T  # (512, G), normalized once
+    """Worker-side state: the rows grouped by label (ascending gallery
+    id within a label) and the unit pivot rows.  A bare
+    :func:`_gallery_arrays` triple is indexed here first."""
+    if len(payload) == 3:
+        payload = _bruteforce_build(payload)
+    labels, mat, norms, codes, pivots, radii = payload
+    by_label = np.argsort(codes, kind="stable")
+    starts = np.searchsorted(codes[by_label], np.arange(len(pivots) + 1))
+    units = mat[pivots] / norms[pivots, None]
+    return labels, mat, norms, by_label, starts, units, radii
+
+
+def _label_distances(qn, faces, labs, state):
+    """Exact distances from unit faces ``qn[faces[i]]`` to every row of
+    label ``labs[i]``: ``(face, row, distance)`` per pair.  Each pair is
+    its own dot product, so equal rows get equal distances wherever
+    they sit."""
+    _, mat, norms, by_label, starts, _, _ = state
+    counts = starts[labs + 1] - starts[labs]
+    face = np.repeat(faces, counts)
+    within = np.arange(len(face)) - np.repeat(np.cumsum(counts) - counts,
+                                              counts)
+    rows = by_label[np.repeat(starts[labs], counts) + within]
+    dist = np.empty(len(rows), dtype=np.float32)
+    for s in range(0, len(rows), _CHUNK_ROWS):
+        r = rows[s:s + _CHUNK_ROWS]
+        dist[s:s + _CHUNK_ROWS] = 1.0 - np.einsum(
+            "ij,ij->i", qn[face[s:s + _CHUNK_ROWS]], mat[r] / norms[r, None]
+        )
+    return face, rows, dist
 
 
 def _bruteforce_score(emb, state, distance_threshold):
-    labels, matn = state
-    qn = np.linalg.norm(emb, axis=1, keepdims=True)
-    d = 1.0 - (emb / qn) @ matn  # ONE GEMM: (B, G) cosine distances
-    best = np.argmin(d, axis=1)
-    bestd = d[np.arange(len(best)), best]
-    lab = np.where(bestd < distance_threshold, labels[best], UNKNOWN)
-    return lab, bestd
+    """Whole-gallery 1-NN through the pivot bound: ONE faces x labels
+    GEMM gives ``reach = q.p + r``, an upper bound of q.g over each
+    label's rows.  The face's highest-reaching label is scored exactly
+    first; its best distance then tightens the cut, so only labels
+    whose bound can still tie or beat it (and pass the threshold) are
+    scored next.  The nearest scored row wins, ties to the lowest
+    gallery id."""
+    labels, _, _, _, _, units, radii = state
+    n = len(emb)
+    out_lab = np.full(n, UNKNOWN, dtype=object)
+    out_dist = np.full(n, np.nan, dtype=np.float32)
+    qn = emb / np.linalg.norm(emb, axis=1, keepdims=True)
+    reach = qn @ units.T + radii  # (B, labels)
+    top = np.argmax(reach, axis=1)
+    first = _label_distances(qn, np.arange(n), top, state)
+    best = np.full(n, np.inf, dtype=np.float32)
+    np.fmin.at(best, first[0], first[2])
+    reach[np.arange(n), top] = -np.inf
+    cut = 1 - _BOUND_EPS - np.minimum(best, np.float32(distance_threshold))
+    rest = _label_distances(qn, *np.nonzero(reach >= cut[:, None]), state)
+    face, rows, dist = (np.concatenate(x) for x in zip(first, rest))
+    order = np.lexsort((rows, dist, face))
+    order = order[np.diff(face[order], prepend=-1) != 0]  # first per face
+    hit = order[dist[order] < distance_threshold]
+    out_lab[face[hit]] = labels[rows[hit]]
+    out_dist[face[hit]] = dist[hit]
+    return out_lab, out_dist
 
 
 def _lsh_build(arrays):
@@ -443,7 +525,7 @@ def _hnsw_score(emb, state, distance_threshold):
 
 
 MATCHERS: dict[str, Matcher] = {
-    "bruteforce": Matcher(_identity, _no_cache, _bruteforce_prepare,
+    "bruteforce": Matcher(_bruteforce_build, _no_cache, _bruteforce_prepare,
                           _bruteforce_score),
     "lsh": Matcher(_lsh_build, _lsh_key, _identity, lsh_score_batch),
     "hnsw": Matcher(_hnsw_build, _hnsw_key, hnsw.executor_index,

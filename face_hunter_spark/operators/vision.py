@@ -31,11 +31,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import fakevision as fv
-from ..schemas import FACES
+from ..schemas import EMBED_DIM, FACES
 from .align import align_crops_batch
 from .linking import MATCHERS
-
-EMBED_DIM = 512
 
 # name -> zero-arg factory returning a batch encoder.  The CONTRACT a
 # production (ONNX/TensorRT) encoder must satisfy — pinned by
@@ -225,9 +223,12 @@ def detect_embed_link(
 
     ``gallery_arrays`` is an sc.broadcast of
     ``linking.MATCHERS[matcher].build(linking._gallery_arrays(...))``
-    — for the default 'bruteforce', the arrays triple itself.  Each
-    partition runs the matcher's ``prepare`` once and its ``score``
-    once per batch.
+    — for the default 'bruteforce', the arrays triple plus its
+    per-label pivot index (a bare triple is indexed per partition
+    instead).  Each partition runs the matcher's ``prepare`` once and
+    its ``score`` once per batch; 'bruteforce' scores exact distances
+    only over the rows of labels its pivot bound cannot rule out, and
+    a face left with no candidate is labelled 'unknown'.
     """
     factory = _resolve_encoder(encoder)   # loud driver-side error
     prepare, score = MATCHERS[matcher].prepare, MATCHERS[matcher].score

@@ -46,6 +46,7 @@ from contextlib import contextmanager
 from typing import Callable, Iterator
 
 import pyspark.sql.functions as F
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import ParquetCatalog
@@ -88,18 +89,7 @@ def _route_gallery(gallery, budget_rows: int):
 
 
 def link_documents(
-    documents: DataFrame,
-    gallery_pdf,
-    entity_catalog: DataFrame,
-    distance_threshold: float = 0.6,
-    frame_threshold: int = 3,
-    n_entities: int = 54,
-    strategy: str = "bruteforce",
-    one_face: bool = False,
-    encoder: str = "hash",
-    mention_labels: DataFrame | None = None,
-    index_catalog=None,
-    broadcast_budget_rows: int = GALLERY_BROADCAST_BUDGET_ROWS,
+    documents: DataFrame, gallery_pdf, entity_catalog: DataFrame, **kwargs
 ) -> DataFrame:
     """documents -> un-partitioned triples DataFrame (pure transform).
 
@@ -119,7 +109,31 @@ def link_documents(
     frame the broadcast matcher needs; larger ones link through the
     shuffle-side ``linking.link_lsh`` whatever ``strategy`` names, so
     the gallery NEVER materializes on the driver or inside an executor
-    replica — the 10^8-face-gallery path."""
+    replica — the 10^8-face-gallery path.
+
+    Keyword arguments and defaults are :func:`_link_plan`'s.  The
+    gallery broadcast stays alive, since the result is lazy; the
+    committing jobs (:func:`run_link_job`, ``enrich.run_relink_job``)
+    release theirs when the commit ends."""
+    return _link_plan(documents, gallery_pdf, entity_catalog, **kwargs)[0]
+
+
+def _link_plan(
+    documents: DataFrame,
+    gallery_pdf,
+    entity_catalog: DataFrame,
+    distance_threshold: float = 0.6,
+    frame_threshold: int = 3,
+    n_entities: int = 54,
+    strategy: str = "bruteforce",
+    one_face: bool = False,
+    encoder: str = "hash",
+    mention_labels: DataFrame | None = None,
+    index_catalog=None,
+    broadcast_budget_rows: int = GALLERY_BROADCAST_BUDGET_ROWS,
+) -> tuple[DataFrame, Broadcast | None]:
+    """:func:`link_documents` and the gallery broadcast its plan reads
+    (None on the shuffle-side route)."""
     from .operators import vision
     from .operators.util import ensure_parallelism
 
@@ -144,6 +158,7 @@ def link_documents(
             encoder=encoder,
         )
         linked = linking.link_lsh(faces, gallery_df, distance_threshold)
+        gallery_bc = None
     else:
         # broadcast-gallery matcher (linking.MATCHERS): the payload is
         # built once on the driver side — or served from
@@ -153,11 +168,11 @@ def link_documents(
         payload, _ = linking.gallery_payload(
             strategy, linking._gallery_arrays(gallery_pdf), index_catalog
         )
+        gallery_bc = SparkSession.getActiveSession().sparkContext.broadcast(
+            payload)
         linked = vision.detect_embed_link(
-            media, SparkSession.getActiveSession().sparkContext.broadcast(
-                payload),
-            distance_threshold, n_entities=n_entities, matcher=strategy,
-            one_face=one_face, encoder=encoder,
+            media, gallery_bc, distance_threshold, n_entities=n_entities,
+            matcher=strategy, one_face=one_face, encoder=encoder,
         )
     # frame assembly + scene smoothing in ONE doc_id shuffle
     scn = scenes.extract_scenes_from_faces(linked, frame_threshold=frame_threshold)
@@ -170,7 +185,7 @@ def link_documents(
         out = out.unionByName(
             mention_triples(link_text_mentions(documents, mention_labels))
         )
-    return out
+    return out, gallery_bc
 
 
 def _canonical_rows(
@@ -292,28 +307,32 @@ def _link_and_commit(
 
     ``link_kwargs`` go to :func:`link_documents`; ``cache_index=True``
     in them persists/reuses ANN payloads (hnsw, lsh) through THIS
-    catalog, keyed by gallery content hash."""
+    catalog, keyed by gallery content hash.  The gallery broadcast is
+    destroyed when the commit ends, whether it succeeded or raised, so
+    a handle that links many times (a stream of micro-batches) holds
+    at most one."""
     t_start = time.monotonic()
     run_id = run_id or uuid.uuid4().hex[:12]
     if link_kwargs.pop("cache_index", False):
         link_kwargs.setdefault("index_catalog", catalog)
 
-    # north_rule: mentions canonicalize to QIDs IN the materialized
-    # table (obj_canonical next to the DBpedia-preferred obj) + the
-    # doc-level (doc, sdo:depicts, QID) rows.  canon is recomputable
-    # from the catalog but involves an iterative CC loop; the facade
-    # (and the stream and job that link through it) pass its cached map.
-    with canonicalized_once(
-        T.with_partitioning(
-            link_documents(
-                new_docs(documents), gallery, entity_catalog, **link_kwargs
-            ),
-            run_id,
-        ),
-        entity_catalog,
-        canon,
-    ) as rows:
-        return commit_run(catalog, new_rows(rows), run_id, t_start)
+    linked, gallery_bc = _link_plan(
+        new_docs(documents), gallery, entity_catalog, **link_kwargs
+    )
+    try:
+        # north_rule: mentions canonicalize to QIDs IN the materialized
+        # table (obj_canonical next to the DBpedia-preferred obj) + the
+        # doc-level (doc, sdo:depicts, QID) rows.  canon is recomputable
+        # from the catalog but involves an iterative CC loop; the facade
+        # (and the stream and job that link through it) pass its cached
+        # map.
+        with canonicalized_once(
+            T.with_partitioning(linked, run_id), entity_catalog, canon
+        ) as rows:
+            return commit_run(catalog, new_rows(rows), run_id, t_start)
+    finally:
+        if gallery_bc is not None:
+            gallery_bc.destroy()
 
 
 def commit_run(

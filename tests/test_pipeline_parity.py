@@ -210,6 +210,38 @@ def test_idempotent_rerun(spark, corpus, tmp_path):
     assert lineage.where(F.col("run_id") == stats3["run_id"]).count() > 0
 
 
+def test_link_job_destroys_its_gallery_broadcast(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """A committing link leaves no gallery broadcast file behind in the
+    context's temp dir, whether it returns or raises, so a handle that
+    links many times does not pile up one payload per link."""
+    import os
+
+    from face_hunter_spark import pipeline
+    from face_hunter_spark.catalog import ParquetCatalog
+
+    tmp = spark.sparkContext._temp_dir
+    before = set(os.listdir(tmp))
+    cat = ParquetCatalog(str(tmp_path / "kg"))
+    docs = corpus["docs"].limit(6)
+
+    def link():
+        return run_link_job(spark, cat, docs, corpus["gallery_pdf"],
+                            corpus["catalog"], n_entities=N_ENTITIES)
+
+    assert link()["n_triples"] > 0
+    assert not set(os.listdir(tmp)) - before
+
+    def failing_commit(*args, **kwargs):
+        raise RuntimeError("commit failed")
+
+    monkeypatch.setattr(pipeline, "commit_run", failing_commit)
+    with pytest.raises(RuntimeError, match="commit failed"):
+        link()
+    assert not set(os.listdir(tmp)) - before
+
+
 def test_titled_corpus_emits_real_titles(spark, corpus):
     """A documents table carrying a ``title`` column emits it as the
     dc:title literal (hunter.py:103 stores the downloaded title);
